@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
+/** Benchmark main: runs [[SparkEntry.headline]] on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":…,"queries":{…}}.
   *
   * Results are materialized with a noop-format write (not count(): count
   * lets Catalyst prune every column and skips most of the work being
-  * measured). AQE on, shuffle partitions sized for local[32].
+  * measured). AQE on, one shuffle partition per local core.
   *
   * Round-14 ladder protocol (verdict r13 #1/#2 — three consecutive
   * driver records died at rc=124 because the ladder outgrew the driver's
@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * headline queries while thrashing a non-headline bucketed twin, and
   * nothing ran the wide corpus under the new confs before a human did.
   * All entries are runtime-settable (spark.conf.set) SQLConfs; the
-  * rationale for each lives on the .config lines in [[Bench.main]]. */
+  * rationale for each lives in [[Bench.profile]]. */
 object BenchConfs {
   val planConfs: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "true",
@@ -75,19 +75,25 @@ object BenchConfs {
     if (dir.isEmpty) return 0L
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.isDirectory(root)) return 0L
-    dirBytesCache.computeIfAbsent(dir, _ => {
-      // an unreadable entry or a file deleted mid-walk must not abort the
-      // bench — treat unreadable subtrees as 0 bytes (ADVICE r15)
-      try {
-        val stream = java.nio.file.Files.walk(root)
-        try stream.filter(p => java.nio.file.Files.isRegularFile(p))
-          .mapToLong { p =>
-            try java.nio.file.Files.size(p)
-            catch { case _: java.io.IOException => 0L }
-          }.sum()
-        finally stream.close()
-      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => 0L }
-    })
+    val cached = dirBytesCache.get(dir)
+    if (cached != null) return cached
+    // an unreadable subtree must not abort the bench, but neither may it
+    // pass for a small input: the failed walk is reported and not cached,
+    // so the next call walks again (a file deleted mid-walk counts 0 B)
+    try {
+      val stream = java.nio.file.Files.walk(root)
+      val bytes = try stream.filter(p => java.nio.file.Files.isRegularFile(p))
+        .mapToLong { p =>
+          try java.nio.file.Files.size(p)
+          catch { case _: java.io.IOException => 0L }
+        }.sum()
+      finally stream.close()
+      dirBytesCache.put(dir, bytes)
+      bytes
+    } catch { case e @ (_: java.io.IOException | _: java.io.UncheckedIOException) =>
+      System.err.println(s"[bench] sizing $dir failed, treated as 0 B for this call: ${e.getMessage}")
+      0L
+    }
   }
 
   def aggConfsFor(dir: String): Seq[(String, String)] =
@@ -95,19 +101,6 @@ object BenchConfs {
 }
 
 object Bench {
-
-  /** Headline subset: one per cost shape — scan+agg, multi-join, window,
-    * asof (compact runs+probe), set-op distinct, LSH dedup, ANN topk, text
-    * featurization, windowed events, and (round 12) the two TPC-DS-shaped
-    * heavies the DS corpus adds over TPC-H: a ROLLUP aggregate over a
-    * 4-way join (q202, DS Q27 shape) and window-over-join year-over-year
-    * analytics (q204, DS Q47 shape). */
-  private val headline = Seq(
-    "q01_agg", "q03_join_agg_top", "q12_window_rank", "q19_asof_join",
-    "q37_mode", "q60b_text_stats_full", "q63_dedup_keep_first", "q65_minhash_pairs",
-    "q68_embedding_topk", "q71_quality_pipeline", "q80_tumble", "q82_session",
-    "q101_tpch5_local_volume", "q103_tpch13_custdist",
-    "q202_ds27_rollup_avgs", "q204_ds47_yoy_monthly")
 
   /** sf1 gates nothing (BASELINE.md floor-excludes it) yet a full section
     * cost minutes of the driver's clock — keep a 5-query trend subset:
@@ -133,6 +126,79 @@ object Bench {
     * one. */
   private val healthyAnchor = Map("sf1" -> 0.90, "sf10" -> 1.30, "sf100" -> 3.90)
 
+  /** Session confs of the bench section `section` reading `dataDir`, on
+    * `cpus` local cores. graft.tools.PlanDump and graft.tools.AbProbe build
+    * the same profile for a dir, so their plans and times match the bench's. */
+  def profile(cpus: Int, section: String, dataDir: String): Seq[(String, String)] = {
+    // Scale the shuffle/scan sizing with the data: at sf100 (600M-row
+    // lineitem, ~9 GB parquet) one shuffle partition per core puts ~20M
+    // rows and a multi-hundred-MB SHJ build in every task — spill, not
+    // plan, is what that would measure. 256 partitions ≈ 150 MB
+    // post-shuffle each (the cluster-correct sizing rule); AQE coalesces
+    // any that come out small. Scan splits likewise: 4m splits small files
+    // across all cores (at sf0.1 one file = one thread otherwise) and is
+    // pure scheduling overhead at 9 GB, where the 64m split is right.
+    val (parts, splitBytes) = if (section == "sf100") (256, "64m") else (cpus, "4m")
+    Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
+      // Plan-shape SQLConfs, shared with the Verify conf-regression guard
+      // via BenchConfs.planConfs. Rationale per conf:
+      // - adaptive.enabled: AQE re-plans skew/oversized partitions.
+      // - preferSortMergeJoin=false: shuffled-hash over sort-merge for the
+      //   big equi-joins — when the smaller side's per-partition share
+      //   fits executor memory (true for every bench join, and the normal
+      //   case on a sized cluster) SHJ skips both sort passes; measured
+      //   1.4× on the SF10 TPC-H joins.
+      // - shuffledHashJoinLocalMapThreshold=512m: preferSortMergeJoin only
+      //   helps when the STATIC planner can prove the build side small;
+      //   multi-join stats estimates explode and it falls back to SMJ
+      //   (q101 at SF100 sorted 600M rows). This is AQE's runtime SMJ→SHJ
+      //   conversion knob — default 0 = disabled; with exact post-shuffle
+      //   sizes a 512m local map is the same bound a sized executor would
+      //   carry. q101 SF100: 126s → 79s.
+      // - autoBroadcastJoinThreshold=64m (both): TPC-H dimension sides
+      //   pruned to join columns run 12-200 MB; 10m misses supplier by
+      //   2 MB and a filtered customer by 3×. 64m is the routine
+      //   sized-cluster setting (a 64 MB broadcast per executor is nothing
+      //   against a 600M-row shuffle avoided).
+      // - runtime.bloomFilter.*: orders filtered to 1/5 prunes the
+      //   600M-row lineitem shuffle 5× before the exchange — but the
+      //   defaults block it here: creation side must be <10 MB and the
+      //   filter caps at 4M items. Allow 1 GB creation sides and size the
+      //   filter for 64M keys (~80 MB bits ≈ what the creation-side agg
+      //   would broadcast on a cluster). q101 SF100: 79s → 39s warm.
+      // - twolevel.partialOnly=false + capacityBit=20 (SCALE-DEPENDENT,
+      //   see BenchConfs.bigAggConfs): codegen fast hash map for FINAL
+      //   aggregates, sized for the DS heavies' ~470k keys/task at SF10+
+      //   (round 14, verdict r13 #3) — applied only when the section's
+      //   input is ≥1 GB, because at small inputs the per-task 2^20
+      //   bucket-array setup dominates the aggregate itself (round 15,
+      //   measured 0.48-0.90× medians at sf0.1 with defaults restored).
+      BenchConfs.planConfs ++ BenchConfs.aggConfsFor(dataDir) ++ Seq(
+      "spark.sql.files.maxPartitionBytes" -> splitBytes,
+      "spark.sql.files.openCostInBytes" -> "64k",
+      // Single-JVM local mode: a long GC pause stalls driver and executor
+      // together, so a 10s heartbeat RPC timeout + 120s liveness window
+      // can kill the only executor mid-section (observed at SF100: one
+      // >132s stall → context shutdown → exit 56). Local mode has no real
+      // liveness question — the "executor" IS the driver process — so use
+      // cluster-scale tolerances.
+      "spark.executor.heartbeatInterval" -> "60s",
+      "spark.network.timeout" -> "600s")
+  }
+
+  /** Between-queries GC is SCALE-DEPENDENT (round 15): at big SFs a GC
+    * pass lets the ContextCleaner release the previous query's checkpoint/
+    * broadcast blocks (hundreds of MB each; measured session aging at
+    * SF100 without it). But the JVM runs -XX:+ExplicitGCInvokesConcurrent
+    * (a stop-the-world full GC once stalled local mode past the network
+    * timeout), so System.gc() returns while the concurrent G1 cycle is
+    * still running — INTO the next timed query. At sf0.1 the blocks are
+    * KBs and the cycle is pure interference: measured on q204 warm (same
+    * session, 8 passes each): with-gc med 2.32s / avg 2.68s / max 6.82s vs
+    * no-gc med 1.22s / avg 1.60s / max 3.45s. */
+  def gcBetween(dir: String): Boolean =
+    BenchConfs.dirBytes(dir) >= BenchConfs.bigAggThresholdBytes
+
   def main(args: Array[String]): Unit = {
     val runStart = System.nanoTime()
     def globalElapsed: Double = (System.nanoTime() - runStart) / 1e9
@@ -141,7 +207,7 @@ object Bench {
     def overBudget: Boolean = globalElapsed > totalBudget
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cores(32)
     val shuffleDir = {
       // tmpfs keeps shuffle traffic off the throttled host disk, but it
       // shares physical RAM with the ~50g heap and the page cache the
@@ -181,98 +247,29 @@ object Bench {
     // in a young session and 205s after the sf1+sf10 sections; the q80
     // bare-groupBy control inflated 1.5s -> 11s). Session teardown resets
     // the block manager; per-section sizing is baked into the builder.
-    def newSession(parts: String, splitBytes: String, dataDir: String): SparkSession = {
-      val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.exts.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Plan-shape SQLConfs, shared with the Verify conf-regression guard
-      // via BenchConfs.planConfs. Rationale per conf:
-      // - adaptive.enabled: AQE re-plans skew/oversized partitions.
-      // - preferSortMergeJoin=false: shuffled-hash over sort-merge for the
-      //   big equi-joins — when the smaller side's per-partition share
-      //   fits executor memory (true for every bench join, and the normal
-      //   case on a sized cluster) SHJ skips both sort passes; measured
-      //   1.4× on the SF10 TPC-H joins.
-      // - shuffledHashJoinLocalMapThreshold=512m: preferSortMergeJoin only
-      //   helps when the STATIC planner can prove the build side small;
-      //   multi-join stats estimates explode and it falls back to SMJ
-      //   (q101 at SF100 sorted 600M rows). This is AQE's runtime SMJ→SHJ
-      //   conversion knob — default 0 = disabled; with exact post-shuffle
-      //   sizes a 512m local map is the same bound a sized executor would
-      //   carry. q101 SF100: 126s → 79s.
-      // - autoBroadcastJoinThreshold=64m (both): TPC-H dimension sides
-      //   pruned to join columns run 12-200 MB; 10m misses supplier by
-      //   2 MB and a filtered customer by 3×. 64m is the routine
-      //   sized-cluster setting (a 64 MB broadcast per executor is nothing
-      //   against a 600M-row shuffle avoided).
-      // - runtime.bloomFilter.*: orders filtered to 1/5 prunes the
-      //   600M-row lineitem shuffle 5× before the exchange — but the
-      //   defaults block it here: creation side must be <10 MB and the
-      //   filter caps at 4M items. Allow 1 GB creation sides and size the
-      //   filter for 64M keys (~80 MB bits ≈ what the creation-side agg
-      //   would broadcast on a cluster). q101 SF100: 79s → 39s warm.
-      // - twolevel.partialOnly=false + capacityBit=20 (SCALE-DEPENDENT,
-      //   see BenchConfs.bigAggConfs): codegen fast hash map for FINAL
-      //   aggregates, sized for the DS heavies' ~470k keys/task at SF10+
-      //   (round 14, verdict r13 #3) — applied only when the section's
-      //   input is ≥1 GB, because at small inputs the per-task 2^20
-      //   bucket-array setup dominates the aggregate itself (round 15,
-      //   measured 0.48-0.90× medians at sf0.1 with defaults restored).
-      BenchConfs.planConfs.foreach { case (k, v) => b.config(k, v) }
-      BenchConfs.aggConfsFor(dataDir).foreach { case (k, v) => b.config(k, v) }
-      b
-      // split small bench files across all cores; at cluster scale the
-      // 128 MB default is right, at sf0.1 one file = one thread otherwise
-      .config("spark.sql.files.maxPartitionBytes", splitBytes)
-      .config("spark.sql.files.openCostInBytes", "64k")
-      // Single-JVM local mode: a long GC pause stalls driver and executor
-      // together, so a 10s heartbeat RPC timeout + 120s liveness window
-      // can kill the only executor mid-section (observed at SF100: one
-      // >132s stall → context shutdown → exit 56). Local mode has no real
-      // liveness question — the "executor" IS the driver process — so use
-      // cluster-scale tolerances.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      // Shuffle/spill dirs on tmpfs: the sandbox block device measures
-      // ~190 MB/s direct-write, and host IO throttling varies run to run —
-      // one recorded run had the bare-groupBy control at 31s vs its steady
-      // 1.5s and sessionization at 826s vs 47s, purely from shuffle files
-      // draining to the throttled disk (map-side-only queries on the same
-      // data were unaffected). A real cluster node carries local NVMe for
-      // exactly this traffic; tmpfs is the closest stand-in and keeps the
-      // measurement about plans, not the host's disk QoS of the hour.
-      // Worst per-query shuffle footprint at SF100 is ~25 GB (lz4), well
-      // under the 62 GB /dev/shm cap, and Spark removes its temp dirs on
-      // session stop.
-      .config("spark.local.dir", shuffleDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    }
+    def newSession(section: String, dataDir: String): SparkSession =
+      Sessions.local(cpus, profile(cpus, section, dataDir) :+
+        // Shuffle/spill dirs on tmpfs: the host block device measures
+        // ~190 MB/s direct-write, and host IO throttling varies run to run —
+        // one recorded run had the bare-groupBy control at 31s vs its steady
+        // 1.5s and sessionization at 826s vs 47s, purely from shuffle files
+        // draining to the throttled disk (map-side-only queries on the same
+        // data were unaffected). A real cluster node carries local NVMe for
+        // exactly this traffic; tmpfs is the closest stand-in and keeps the
+        // measurement about plans, not the host's disk QoS of the hour.
+        // Worst per-query shuffle footprint at SF100 is ~25 GB (lz4), well
+        // under the 62 GB /dev/shm cap, and Spark removes its temp dirs on
+        // session stop.
+        ("spark.local.dir" -> shuffleDir))
 
-    var spark = newSession(cpus, "4m", sfDir)
-    spark.sparkContext.setLogLevel("WARN")
+    var spark = newSession("main", sfDir)
 
     def run(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
     // one warm-up query to absorb JVM/codegen/first-scan startup cost
-    if (!sys.env.contains("SPARK_GRAFT_STREAM_ONLY"))
-      run(SparkEntry.queries("q01_agg")(spark, sfDir))
+    run(SparkEntry.queries("q01_agg")(spark, sfDir))
 
-    // Between-queries GC is SCALE-DEPENDENT (round 15): at big SFs a GC
-    // pass lets the ContextCleaner release the previous query's checkpoint/
-    // broadcast blocks (hundreds of MB each; measured session aging at
-    // SF100 without it). But the JVM runs -XX:+ExplicitGCInvokesConcurrent
-    // (a stop-the-world full GC once stalled local mode past the network
-    // timeout), so System.gc() returns while the concurrent G1 cycle is
-    // still running — INTO the next timed query. At sf0.1 the blocks are
-    // KBs and the cycle is pure interference: measured on q204 warm
-    // (GcNoise, same session, 8 passes each): with-gc med 2.32s / avg
-    // 2.68s / max 6.82s vs no-gc med 1.22s / avg 1.60s / max 3.45s.
-    def gcBetween(dir: String): Boolean =
-      BenchConfs.dirBytes(dir) >= BenchConfs.bigAggThresholdBytes
     val gcMain = gcBetween(sfDir)
 
     def timeOne(name: String): Double = {
@@ -285,17 +282,12 @@ object Bench {
       dt
     }
 
-    // Local-iteration aid (round 16, never set by the driver): skip the
-    // batch sections and run only the streaming bench — a stream protocol
-    // change otherwise costs a ~8-min full run per measurement.
-    val streamOnly = sys.env.contains("SPARK_GRAFT_STREAM_ONLY")
-
     // cold = first run (plan + codegen + scan); warm = second run, which is
     // the steady-state cost a long-lived session pays — the fixed JVM
     // per-query overhead dominates cold numbers at small SF.
-    val timedHeadline = if (streamOnly) Seq.empty else headline
-    val cold = timedHeadline.filter(SparkEntry.queries.contains).map(n => n -> timeOne(n))
-    val warm = timedHeadline.filter(SparkEntry.queries.contains).map(n => n -> timeOne(n))
+    val headline = SparkEntry.headline
+    val cold = headline.map(n => n -> timeOne(n))
+    val warm = headline.map(n => n -> timeOne(n))
     def fmt(rs: Seq[(String, Double)]) =
       rs.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }.mkString("{", ",", "}")
     val total = cold.map(_._2).sum
@@ -430,7 +422,6 @@ object Bench {
       * is warm best-of-3 over the same files, so best-of-N warm is
       * like-for-like. */
     def runSection(tag: String, protocol: String, sectionNames: Seq[String]): Unit = {
-      if (streamOnly) return
       val dir = sys.env.getOrElse(s"SPARK_GRAFT_${tag.toUpperCase}_DIR", s"/root/repo/data/$tag")
       if (!new java.io.File(dir).exists() || sys.env.contains("SPARK_GRAFT_SKIP_BIG")) return
       if (overBudget) {
@@ -441,21 +432,9 @@ object Bench {
         checkpoint()
         return
       }
-      // Scale the shuffle/scan sizing with the data: at sf100 (600M-row
-      // lineitem, ~9 GB parquet) 32 shuffle partitions put ~20M rows and
-      // a multi-hundred-MB SHJ build in every task — spill, not plan, is
-      // what 32 would measure. 256 partitions ≈ 150 MB post-shuffle each
-      // (the cluster-correct sizing rule); AQE coalesces any that come
-      // out small. Scan splits likewise: 4m is right for splitting tiny
-      // sf0.1 files across cores, pure scheduling overhead at 9 GB.
-      val (parts, splitBytes) = tag match {
-        case "sf100" => ("256", "64m")
-        case _       => (cpus, "4m")
-      }
       spark.stop()
-      spark = newSession(parts, splitBytes, dir)
-      spark.sparkContext.setLogLevel("WARN")
-      val gcHere = gcBetween(dir) // see the timeOne note: gc only at big SFs
+      spark = newSession(tag, dir)
+      val gcHere = gcBetween(dir)
       def timeAt(name: String): Double = {
         val t0 = System.nanoTime()
         try run(SparkEntry.queries(name)(spark, dir))
@@ -629,10 +608,9 @@ object Bench {
         // caches but resets the block manager and state-store registries.
         // Streaming sources are rate-generated (no on-disk input): the ""
         // sentinel keeps the small-agg default fast-map sizing.
-        val s = streamingBench { () =>
+        val s = streamingBench(() => overBudget) { () =>
           spark.stop()
-          spark = newSession(cpus, "4m", "")
-          spark.sparkContext.setLogLevel("WARN")
+          spark = newSession("stream", "")
           spark
         }
         extra ++= s
@@ -698,17 +676,20 @@ object Bench {
     * per-batch trigger durations over completed micro-batches — a fixed
     * wall-clock sleep (the first cut) raced query startup + the first
     * macro-batch and could observe zero completed batches. */
-  private def streamingBench(newSession: () => SparkSession): String = {
+  private def streamingBench(overBudget: () => Boolean)(
+      newSession: () => SparkSession): String = {
     import graft.streaming.{Watermark, Windows, Stateful}
 
-    def measure(build: DataFrame => DataFrame, mode: String, name: String): Double = {
+    // None when the global budget ran out before the first timed attempt
+    def measure(build: DataFrame => DataFrame, mode: String, name: String): Option[Double] = {
+      if (overBudget()) return None
       val spark = newSession()
       // one full stream run → (rows/sec over post-startup batches, how
       // many post-startup batches that rate rests on, the
       // startup-inclusive rate kept as the last-resort fallback)
       def once(): (Double, Int, Double) = {
-        // Offered rate 10M → 80M rows/s (round 16, measurement-bug fix,
-        // disclosed in OPTIMIZATION_r16.md): with the r15 JIT warm-up in
+        // Offered rate 10M → 80M rows/s (round 16, measurement-bug fix;
+        // older figures are not comparable): with the r15 JIT warm-up in
         // place the engine keeps up with 10M/s from the first timed batch,
         // so post-startup batches contain only ~1-2s of arrivals and the
         // metric reads the SOURCE THROTTLE (~10M), not the engine. (The old
@@ -788,18 +769,19 @@ object Bench {
       // — the batch sections already take best-of-2 warm for exactly this
       // reason (a single attempt inherits whatever window it lands in; the
       // r15 driver's tumble read 8.5M in a window where the same plan
-      // probed at 12M). Costs ~30s per stream query, bounded by 3 attempts.
+      // probed at 12M). Costs ~30s per stream query, bounded by 3 attempts,
+      // each started only while the global budget lasts.
       var bestClean = 0.0
       var bestBiased = 0.0
       var cleanRuns = 0
       var attempt = 0
-      while (attempt < 3 && cleanRuns < 2) {
+      while (attempt < 3 && cleanRuns < 2 && !overBudget()) {
         val (v, n, biased) = once()
         bestBiased = math.max(bestBiased, biased)
         if (n >= 2) { cleanRuns += 1; bestClean = math.max(bestClean, v) }
         attempt += 1
       }
-      if (bestClean > 0) bestClean else bestBiased
+      if (attempt == 0) None else Some(if (bestClean > 0) bestClean else bestBiased)
     }
 
     val tumble = measure(rate => {
@@ -820,6 +802,12 @@ object Bench {
         "user_id", "event_type", "ts", "click", "purchase", "10 seconds")
     }, "append", "funnel")
 
-    f""","stream_tumble_rows_per_sec":$tumble%.0f,"stream_funnel_rows_per_sec":$funnel%.0f"""
+    def field(name: String, rate: Option[Double]): String = rate match {
+      case Some(r) => f""","stream_${name}_rows_per_sec":$r%.0f"""
+      case None =>
+        System.err.println(s"[bench] global budget exhausted — $name stream not measured")
+        s""","stream_${name}_skipped":true"""
+    }
+    field("tumble", tumble) + field("funnel", funnel)
   }
 }

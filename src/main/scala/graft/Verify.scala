@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -18,20 +17,14 @@ object Verify {
     // optional 3rd arg: only run queries whose name matches this regex —
     // local iteration aid; the driver's 2-arg invocation runs everything
     val nameFilter = args.lift(2).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.exts.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    val cpus = Sessions.cores(4)
+    val spark = Sessions.local(cpus, Seq(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       // small test files must still split across cores (a 1.5 MB parquet is
       // 1 partition at the 128 MB default → single-threaded heavy stages)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.files.maxPartitionBytes" -> "4m",
+      "spark.sql.files.openCostInBytes" -> "64k"))
     if (sys.env.get("SPARK_GRAFT_BENCH_CONFS").contains("1")) {
       System.err.println("[verify] applying BenchConfs.planConfs + bigAggConfs " +
         "(conf-regression sweep arm)")
@@ -54,24 +47,9 @@ object Verify {
       }
       timings(name) = (System.nanoTime() - t0) / 1e9
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    SparkEntry.writeOracleJson(s"$outDir/oracle_sql.json")
     Files.writeString(Paths.get(s"$outDir/timings.json"),
-      timings.map { case (k, v) => s"${q(k)}: ${f"$v%.3f"}" }
-        .mkString("{", ",", "}"))
+      SparkEntry.jsonObject(timings.toSeq.map { case (k, v) => k -> f"$v%.3f" }))
     spark.stop()
   }
 }

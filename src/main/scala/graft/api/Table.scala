@@ -207,12 +207,7 @@ final class Table(val df: DataFrame) {
     * total order as [[sort]]. NOT for results that grow with the input —
     * a single task would then sort the whole output. */
   def sortBounded(keys: SortKey*): Table =
-    // measurement hook (read at plan-BUILD time, so an A/B harness can
-    // flip it between runs in one session): -Dgraft.sortBounded.off=1
-    // restores the plain orderBy tail — used by tools/AbProbe to attribute
-    // old-tail vs new-tail deltas interleaved (VERDICT r15 #2)
-    if (sys.props.get("graft.sortBounded.off").contains("1")) sort(keys: _*)
-    else new Table(df.coalesce(1).sortWithinPartitions(keys.map(_.spark): _*))
+    new Table(df.coalesce(1).sortWithinPartitions(keys.map(_.spark): _*))
 
   // ----------------------------------------------------------- aggregation
 

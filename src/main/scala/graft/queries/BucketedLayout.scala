@@ -20,8 +20,12 @@ import Tables._
   * driver's global clock. */
 object BucketedLayout {
 
+  /** Buckets per layout; table names carry it as `_b64`, so a warehouse
+    * directory written under another count is never mistaken for this one. */
+  private val buckets = 64
+
   private def ensureTable(s: SparkSession, tbl: String, key: String,
-      buckets: Int, src: => DataFrame): Unit =
+      src: => DataFrame): Unit =
     if (!s.catalog.tableExists(tbl)) {
       val loc = new java.io.File(s"spark-warehouse/$tbl")
       if (loc.exists()) {
@@ -35,19 +39,17 @@ object BucketedLayout {
   /** orders + lineitem bucketed by orderkey (q101b, q202b). Returns the
     * (orders, lineitem) table names. */
   def orderkeyTables(s: SparkSession, dir: String): (String, String) = {
-    val buckets = sys.env.getOrElse("GRAFT_ORDER_BUCKETS", "64").toInt
     val suffix = dir.replaceAll("[^a-zA-Z0-9]", "_") + s"_b$buckets"
-    ensureTable(s, s"orders_$suffix", "o_orderkey", buckets, orders(s, dir))
-    ensureTable(s, s"lineitem_$suffix", "l_orderkey", buckets, lineitem(s, dir))
+    ensureTable(s, s"orders_$suffix", "o_orderkey", orders(s, dir))
+    ensureTable(s, s"lineitem_$suffix", "l_orderkey", lineitem(s, dir))
     (s"orders_$suffix", s"lineitem_$suffix")
   }
 
   /** orders bucketed by custkey (q103b). Returns the table name. */
   def custkeyOrders(s: SparkSession, dir: String): String = {
-    val buckets = sys.env.getOrElse("GRAFT_CUST_BUCKETS", "64").toInt
     val suffix = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val tbl = s"orders_bycust_${suffix}_b$buckets"
-    ensureTable(s, tbl, "o_custkey", buckets, orders(s, dir))
+    ensureTable(s, tbl, "o_custkey", orders(s, dir))
     tbl
   }
 

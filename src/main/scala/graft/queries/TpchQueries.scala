@@ -17,7 +17,7 @@ import Tables._
 object TpchQueries {
 
   /** Spark-first TPC-H Q5 with injectable fact sides: the bench shape
-    * feeds the parquet scans; `tools.BucketedTpch5` feeds o_orderkey-
+    * feeds the parquet scans; q101b_tpch5_bucketed feeds o_orderkey-
     * bucketed catalog tables to measure the zero-exchange co-located
     * layout (round-5 verdict experiment 6a).
     *
@@ -114,8 +114,8 @@ object TpchQueries {
       WHERE r_name = 'ASIA'
       GROUP BY n_name ORDER BY revenue DESC, n_name""")),
 
-    // BUCKETED layout variant of q101 (round 9 — the per-round recorded
-    // twin of tools/BucketedTpch5): orders AND lineitem stored CLUSTERED
+    // BUCKETED layout variant of q101 (round 9, recorded every round as a
+    // bench control): orders AND lineitem stored CLUSTERED
     // BY their orderkey remove Q5's one remaining exchange pair — the
     // pre-aggregated lineitem and the cut orders arrive co-partitioned,
     // so the join needs no shuffle at all (the join keys (orderkey,

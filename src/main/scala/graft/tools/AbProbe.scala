@@ -1,95 +1,71 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, Sessions, SparkEntry}
 
-/** Interleaved A/B perf probe: alternates BASE and OVERRIDE conf arms on
-  * the SAME session (runtime-settable SQLConfs only), so a drifting host
-  * window hits both arms equally — the cross-invocation A/B (Probe twice)
-  * was observed to swing ±15% between adjacent JVMs, larger than the
+/** Times one corpus query under the bench session for its data dir
+  * ([[graft.Bench.profile]]; cores from SPARK_GRAFT_CPUS, else all of
+  * them). Each run is a noop-format write, as in the bench.
+  *
+  * With no override it times that session `n` times (default 4). With
+  * `k=v` SQLConf overrides it is an interleaved A/B: the BASE and OVERRIDE
+  * arms alternate on the SAME session (runtime-settable SQLConfs only), so
+  * a drifting host window hits both arms equally — an A/B across two JVMs
+  * was observed to swing ±15% between adjacent runs, larger than the
   * effects under test. Usage:
-  *   runMain graft.tools.AbProbe <dir> <query> [pairs] [parts] [split] k=v ...
+  *   runMain graft.tools.AbProbe <dir> <query> [n] [k=v ...]
   */
 object AbProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val name = args(1)
-    val pairs = args.lift(2).map(_.toInt).getOrElse(4)
-    val parts = args.lift(3).getOrElse("32")
-    val split = args.lift(4).getOrElse("4m")
-    // k=v → SQLConf override; prop:k=v → JVM system property override
-    // (read at plan-build time — e.g. graft.sortBounded.off=1 restores the
-    // pre-r15 orderBy tails, giving an interleaved old-vs-new-tail A/B)
-    val (propOverrides, overrides) = args.drop(5).toSeq.map { kv =>
-      val Array(k, v) = kv.split("=", 2); (k, v)
-    }.partition(_._1.startsWith("prop:"))
-    val props = propOverrides.map { case (k, v) => (k.stripPrefix("prop:"), v) }
-    require(overrides.nonEmpty || props.nonEmpty,
-      "pass at least one k=v (conf) or prop:k=v (sysprop) override for the B arm")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.exts.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.shuffledHashJoinLocalMapThreshold", "512m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "67108864")
-      .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "1GB")
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "64000000")
-      .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "671088640")
-      .config("spark.sql.files.maxPartitionBytes", split)
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.local.dir", "/dev/shm/graft_shuffle")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val baseVals = overrides.map { case (k, _) =>
-      k -> (try Some(spark.conf.get(k)) catch { case _: Exception => None })
+    val Array(dir, name) = args.take(2)
+    val (counts, kvs) = args.drop(2).toSeq.partition(!_.contains("="))
+    val n = counts.headOption.map(_.toInt).getOrElse(4)
+    val overrides = kvs.map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
+    val cores = Sessions.cores(Runtime.getRuntime.availableProcessors)
+    val spark = Sessions.local(cores, Bench.profile(cores, new java.io.File(dir).getName, dir))
+    val query = SparkEntry.queries(name)
+    val gc = Bench.gcBetween(dir)
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      query(spark, dir).write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
+      if (gc) System.gc()
+      dt
     }
-    def setArm(b: Boolean): Unit =
-      if (b) {
-        overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-        props.foreach { case (k, v) => sys.props(k) = v }
-      } else {
-        baseVals.foreach {
+    if (overrides.isEmpty) {
+      for (i <- 1 to n) println(f"[ab] $name run $i: ${once()}%.2f s")
+    } else {
+      val baseVals = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+      def setArm(b: Boolean): Unit =
+        if (b) overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+        else baseVals.foreach {
           case (k, Some(v)) => spark.conf.set(k, v)
           case (k, None) => spark.conf.unset(k)
         }
-        props.foreach { case (k, _) => sys.props.remove(k) }
+      // warm-up pass per arm (codegen both variants before timing)
+      setArm(false); once()
+      setArm(true); once()
+      val a = collection.mutable.ArrayBuffer[Double]()
+      val b = collection.mutable.ArrayBuffer[Double]()
+      for (i <- 1 to n) {
+        // alternate starting arm each pair so section aging cancels
+        val aFirst = i % 2 == 1
+        for (arm <- if (aFirst) Seq(false, true) else Seq(true, false)) {
+          setArm(arm)
+          val t = once()
+          (if (arm) b else a) += t
+          println(f"[ab] $name pair $i arm ${if (arm) "B" else "A"}: $t%.2f s")
+        }
       }
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.gc()
-      dt
-    }
-    // warm-up pass per arm (codegen both variants before timing)
-    setArm(false); once()
-    setArm(true); once()
-    val a = collection.mutable.ArrayBuffer[Double]()
-    val b = collection.mutable.ArrayBuffer[Double]()
-    for (i <- 1 to pairs) {
-      // alternate starting arm each pair so section aging cancels
-      val aFirst = i % 2 == 1
-      for (arm <- if (aFirst) Seq(false, true) else Seq(true, false)) {
-        setArm(arm)
-        val t = once()
-        (if (arm) b else a) += t
-        println(f"[ab] $name pair $i arm ${if (arm) "B" else "A"}: $t%.2f s")
+      def stats(xs: Seq[Double]) = {
+        val s = xs.sorted
+        (s.head, s(s.size / 2), xs.sum / xs.size)
       }
+      val (amin, amed, aavg) = stats(a.toSeq)
+      val (bmin, bmed, bavg) = stats(b.toSeq)
+      println(f"[ab] A(base):     min $amin%.2f  med $amed%.2f  avg $aavg%.2f")
+      println(f"[ab] B(override): min $bmin%.2f  med $bmed%.2f  avg $bavg%.2f")
+      println(f"[ab] B/A: min ${bmin / amin}%.3f  med ${bmed / amed}%.3f")
     }
-    def stats(xs: Seq[Double]) = {
-      val s = xs.sorted
-      (s.head, s(s.size / 2), xs.sum / xs.size)
-    }
-    val (amin, amed, aavg) = stats(a.toSeq)
-    val (bmin, bmed, bavg) = stats(b.toSeq)
-    println(f"[ab] A(base):     min $amin%.2f  med $amed%.2f  avg $aavg%.2f")
-    println(f"[ab] B(override): min $bmin%.2f  med $bmed%.2f  avg $bavg%.2f")
-    println(f"[ab] B/A: min ${bmin / amin}%.3f  med ${bmed / amed}%.3f")
     spark.stop()
   }
 }

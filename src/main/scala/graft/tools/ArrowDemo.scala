@@ -1,18 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Write one Arrow IPC stream file from a query result — the smoke any
   * pyarrow/polars/duckdb client can open (`pyarrow.ipc.open_stream`). */
 object ArrowDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4, Seq("spark.sql.shuffle.partitions" -> "4"), "ERROR")
     val docs = spark.read.parquet(args(0) + "/documents.parquet")
     val emb = spark.read.parquet(args(0) + "/embeddings.parquet")
     val out = docs.join(emb, docs("doc_id") === emb("vec_id"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic data generator for LARGE-SF benchmarking.
@@ -32,13 +32,8 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     val sf = args(0).toDouble
     val out = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(graft.Sessions.cores(32),
+      Seq("spark.sql.shuffle.partitions" -> "32"))
     import spark.implicits._
 
     val nCustomer = (150000 * sf).toLong max 100

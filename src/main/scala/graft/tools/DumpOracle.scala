@@ -3,20 +3,7 @@ import java.nio.file.{Files, Paths}
 /** Debug/tooling: print one query's oracle SQL to a file, or with name=ALL
   * a JSON map of every oracle (for tools/bench_duckdb.py). */
 object DumpOracle {
-  def main(args: Array[String]): Unit = {
-    if (args(0) == "ALL") {
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val json = graft.SparkEntry.oracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(args(1)), json)
-    } else Files.writeString(Paths.get(args(1)), graft.SparkEntry.oracleSql(args(0)))
-  }
+  def main(args: Array[String]): Unit =
+    if (args(0) == "ALL") graft.SparkEntry.writeOracleJson(args(1))
+    else Files.writeString(Paths.get(args(1)), graft.SparkEntry.oracleSql(args(0)))
 }

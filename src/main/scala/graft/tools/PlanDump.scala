@@ -1,40 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Writes `.explain("formatted")` of headline queries to
-  * plans/<tag>/<query>_<suffix>.txt under the bench main-section session
-  * confs, so plan-shape claims in OPTIMIZATION notes are checkable files.
+  * plans/<tag>/<query>_<suffix>.txt under the bench session for the dir
+  * ([[graft.Bench.profile]]), so plan-shape claims are checkable files.
   * Usage: runMain graft.tools.PlanDump <tag> <suffix> [dir] [q1 q2 ...] */
 object PlanDump {
-  private val headline = Seq(
-    "q01_agg", "q03_join_agg_top", "q12_window_rank", "q19_asof_join",
-    "q37_mode", "q60b_text_stats_full", "q63_dedup_keep_first", "q65_minhash_pairs",
-    "q68_embedding_topk", "q71_quality_pipeline", "q80_tumble", "q82_session",
-    "q101_tpch5_local_volume", "q103_tpch13_custdist",
-    "q202_ds27_rollup_avgs", "q204_ds47_yoy_monthly")
-
   def main(args: Array[String]): Unit = {
     val tag = args.lift(0).getOrElse("r15")
     val suffix = args.lift(1).getOrElse("before")
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val names = if (args.length > 3) args.drop(3).toSeq else headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.exts.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-    graft.BenchConfs.planConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = if (args.length > 3) args.drop(3).toSeq else SparkEntry.headline
+    val cpus = Sessions.cores(32)
+    val spark = Sessions.local(cpus,
+      Bench.profile(cpus, new java.io.File(dir).getName, dir), "ERROR")
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir)
-    for (n <- names if graft.SparkEntry.queries.contains(n)) {
-      val df = graft.SparkEntry.queries(n)(spark, dir)
+    for (n <- names if SparkEntry.queries.contains(n)) {
+      val df = SparkEntry.queries(n)(spark, dir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(outDir.resolve(s"${n}_$suffix.txt"), txt)

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Spark half of the DUCKDB-DIALECT render round trip (round 11,
@@ -34,14 +34,7 @@ object RenderDump {
     val out = new File(if (args.nonEmpty) args(0) else "/tmp/render_rt")
     org.apache.commons.io.FileUtils.deleteDirectory(out)
     out.mkdirs()
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-render-dump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(8, Seq("spark.sql.shuffle.partitions" -> "8"), "ERROR")
     import spark.implicits._
 
     val ft1 = SqlFuzzGen.ft1Rows.toDF("id", "name", "grp")

@@ -1,19 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug harness: decompile one SQL string against the testdata views and
   * print both dialect renderings — the way q97* golden constants are
   * recorded. Usage: runMain graft.tools.RenderOne <sfDir> <sql> */
 object RenderOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .withExtensions(new graft.exts.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(4, Seq("spark.sql.shuffle.partitions" -> "4"), "ERROR")
     val dir = args(0)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { n =>

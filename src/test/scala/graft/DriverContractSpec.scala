@@ -14,6 +14,18 @@ class DriverContractSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("headline: 16 distinct registered queries, equal to perfbench/run.py's HEADLINE") {
+    val h = SparkEntry.headline
+    assert(h.filterNot(SparkEntry.queries.contains).isEmpty)
+    assert(h.size == 16 && h.distinct.size == 16, h)
+    // the benchmark keeps its own copy; it must not drift from this one
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("perfbench/run.py")))
+    val block = "(?s)\nHEADLINE = \\[(.*?)\\]".r.findFirstMatchIn(src)
+      .getOrElse(fail("no HEADLINE list in perfbench/run.py")).group(1)
+    assert("\"(\\w+)\"".r.findAllMatchIn(block).map(_.group(1)).toSeq == h)
+  }
+
   test("query names are unique across domain objects") {
     val names = SparkEntry.allDefs.map(_.name)
     assert(names.distinct.size == names.size)

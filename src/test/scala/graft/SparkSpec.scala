@@ -6,18 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all specs (one JVM-wide session — Spark
   * sessions are expensive; suites run sequentially under sbt's forked JVM). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.exts.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4, Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.shuffle.partitions" -> "4"), "ERROR")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

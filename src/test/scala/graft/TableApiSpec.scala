@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.api.{SortKey, Table}
@@ -25,6 +28,39 @@ class TableApiSpec extends SparkSpec {
     val ids = t.sort(SortKey.asc(col("id"))).limit(2, offset = 1)
       .df.select("id").as[Int].collect().toSeq
     assert(ids == Seq(2, 3))
+  }
+
+  /** Exchanges between the plan root and its topmost aggregate. */
+  private def exchangesAboveAgg(p: SparkPlan): Int = p match {
+    case _: BaseAggregateExec => 0
+    case e: Exchange => 1 + e.children.map(exchangesAboveAgg).sum
+    case _ => p.children.map(exchangesAboveAgg).sum
+  }
+
+  test("sortBounded: no Exchange above a bounded aggregate; same rows and order as sort, ties included") {
+    // group sizes e=3, a=b=null=2, c=d=1: ties on n, and a null group key
+    val agg = Table(Seq[(String, Int)](("a", 1), ("a", 2), ("b", 3), ("b", 4), ("c", 5),
+        (null, 6), (null, 7), ("d", 8), ("e", 9), ("e", 10), ("e", 11))
+      .toDF("g", "v").repartition(4))
+      .groupBy(col("g")).agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
+    val byN = Seq(SortKey.desc(col("n")))
+    val total = byN :+ SortKey.asc(col("g"))
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val plan = agg.sortBounded(total: _*).df.queryExecution.executedPlan
+      assert(exchangesAboveAgg(plan) == 0, s"sortBounded still shuffles the result:\n$plan")
+      val control = agg.sort(total: _*).df.queryExecution.executedPlan
+      assert(exchangesAboveAgg(control) == 1, s"sort without its range Exchange:\n$control")
+    }
+    val both = (k: Seq[SortKey]) =>
+      (agg.sortBounded(k: _*).df.collect().toSeq, agg.sort(k: _*).df.collect().toSeq)
+    val (tiedBounded, tiedSorted) = both(byN)
+    assert(tiedBounded.map(_.getLong(1)) == Seq(3L, 2L, 2L, 2L, 1L, 1L))
+    assert(tiedBounded.map(_.getLong(1)) == tiedSorted.map(_.getLong(1)))
+    assert(tiedBounded.map(_.toString).sorted == tiedSorted.map(_.toString).sorted)
+    val (bounded, sorted) = both(total)
+    assert(bounded == sorted)
+    assert(bounded.map(r => Option(r.getString(0))) ==
+      Seq(Some("e"), Some("a"), Some("b"), None, Some("c"), Some("d")))
   }
 
   test("fillNull / dropNull") {
@@ -137,7 +173,7 @@ class TableApiSpec extends SparkSpec {
   }
 
   test("bucketed join on a SUPERSET of the bucket key drops the exchange with the subset-key conf") {
-    // the tools.BucketedTpch5 mechanism: tables bucketed on k, join on
+    // the q101b_tpch5_bucketed mechanism: tables bucketed on k, join on
     // (k, k2) — partitioning on k alone still co-locates every (k, k2)
     // group, accepted via requireAllClusterKeysForCoPartition=false
     for (t <- Seq("graft_facts_b2", "graft_dims_b2")) {

@@ -15,11 +15,13 @@ PROBE_LOG=/tmp/sf100_probe.log
 
 for i in $(seq 1 "$ATTEMPTS"); do
   echo "[ladder] pre-flight probe $i/$ATTEMPTS ..."
-  RUNS=3 PARTS=256 MPB=64m SMJ=false AQE_SHJ=512m BT=67108864 \
-    sbt -batch "runMain graft.tools.TimeOne q01_agg data/sf100" \
+  # time-only AbProbe: 3 runs under the bench's sf100 session profile, on
+  # the bench's core count (Bench defaults to 32, AbProbe to nproc)
+  SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
+    sbt -batch "runMain graft.tools.AbProbe data/sf100 q01_agg 3" \
     > "$PROBE_LOG" 2>&1
-  ANCHOR=$(grep -o '\[time\] run[0-9]*: [0-9.]*' "$PROBE_LOG" \
-    | awk '{print $3}' | sort -n | head -1)
+  ANCHOR=$(grep -o '\[ab\] q01_agg run [0-9]*: [0-9.]*' "$PROBE_LOG" \
+    | awk '{print $5}' | sort -n | head -1)
   if [ -z "$ANCHOR" ]; then
     echo "[ladder] probe produced no timing — see $PROBE_LOG"; exit 2
   fi

@@ -31,10 +31,11 @@ import org.apache.spark.sql.functions._
   * the round-14 lesson was a fast-map conf that won its A/B on the
   * headline queries while thrashing a non-headline bucketed twin, and
   * nothing ran the wide corpus under the new confs before a human did.
-  * All entries are runtime-settable (spark.conf.set) SQLConfs; the
-  * rationale for each lives in [[Bench.profile]]. */
+  * The codegen cache capacity is a static conf, so every session takes
+  * these at build time; the rationale for each lives in [[Bench.profile]]. */
 object BenchConfs {
   val planConfs: Seq[(String, String)] = Seq(
+    Sessions.codegenCache,
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.adaptive.shuffledHashJoinLocalMapThreshold" -> "512m",
@@ -142,6 +143,12 @@ object Bench {
     Seq("spark.sql.shuffle.partitions" -> parts.toString) ++
       // Plan-shape SQLConfs, shared with the Verify conf-regression guard
       // via BenchConfs.planConfs. Rationale per conf:
+      // - codegen.cache.maxEntries=1024 (Sessions.codegenCache, static):
+      //   a headline query compiles ~20 classes and the rotation ~310,
+      //   against Spark's default cache of 100, so every warm round
+      //   evicted and recompiled ~310 classes. At 1024 a warm sf0.1 round
+      //   compiles ≤10 (512 and 4096 too); peak RSS is unchanged at all
+      //   three.
       // - adaptive.enabled: AQE re-plans skew/oversized partitions.
       // - preferSortMergeJoin=false: shuffled-hash over sort-merge for the
       //   big equi-joins — when the smaller side's per-partition share

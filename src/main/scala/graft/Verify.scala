@@ -18,22 +18,21 @@ object Verify {
     // local iteration aid; the driver's 2-arg invocation runs everything
     val nameFilter = args.lift(2).map(_.r)
     val cpus = Sessions.cores(4)
+    val sweep = sys.env.get("SPARK_GRAFT_BENCH_CONFS").contains("1")
+    if (sweep) System.err.println("[verify] applying BenchConfs.planConfs + bigAggConfs " +
+      "(conf-regression sweep arm)")
     val spark = Sessions.local(cpus, Seq(
       "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       // small test files must still split across cores (a 1.5 MB parquet is
       // 1 partition at the 128 MB default → single-threaded heavy stages)
       "spark.sql.files.maxPartitionBytes" -> "4m",
-      "spark.sql.files.openCostInBytes" -> "64k"))
-    if (sys.env.get("SPARK_GRAFT_BENCH_CONFS").contains("1")) {
-      System.err.println("[verify] applying BenchConfs.planConfs + bigAggConfs " +
-        "(conf-regression sweep arm)")
+      "spark.sql.files.openCostInBytes" -> "64k") ++
       // sweep bigAggConfs too: the bench only adopts them at ≥1 GB inputs
       // (BenchConfs.aggConfsFor), but the guard's job is to exercise the
-      // FULL adoptable set against the wide corpus
-      (BenchConfs.planConfs ++ BenchConfs.bigAggConfs)
-        .foreach { case (k, v) => spark.conf.set(k, v) }
-    }
+      // FULL adoptable set against the wide corpus. Passed at build time:
+      // planConfs holds a static conf that spark.conf.set refuses.
+      (if (sweep) BenchConfs.planConfs ++ BenchConfs.bigAggConfs else Nil))
     new java.io.File(outDir).mkdirs()
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     SparkEntry.queries

@@ -1,7 +1,14 @@
 package graft.queries
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** One engine query + its DuckDB oracle SQL (None → driver records a
   * rows-only check; used for ops whose sketch/hash internals aren't
@@ -14,22 +21,54 @@ final case class QueryDef(
 object Tables {
   /** Read a test table. events.parquet carries TIMESTAMP(NANOS) which Spark
     * refuses by default — read nanos as long and truncate to µs (matching
-    * DuckDB's ns→µs cast truncation in the oracle). */
+    * DuckDB's ns→µs cast truncation in the oracle). The schema comes from
+    * one footer read on the driver ([[footerSchema]]), so resolving a table
+    * runs no Spark job, where Spark's parquet inference runs one. */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
-    // driver testdata events have carried ts as TIMESTAMP(NANOS) (read as
-    // long under the flag, truncated to µs) and as plain µs-NTZ in
-    // different rounds; normalize BOTH to session-local TIMESTAMP (UTC
-    // session → value-preserving) so downstream µs arithmetic
-    // (unix_micros, as-of, tumble bucketing) sees one type
-    if (name == "events" &&
-        df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    val path = s"$dir/$name.parquet"
+    normalize(name, footerSchema(s, path)
+      .fold(s.read.parquet(path))(s.read.schema(_).parquet(path)))
+  }
+
+  /** driver testdata events have carried ts as TIMESTAMP(NANOS) (read as
+    * long under the flag, truncated to µs) and as plain µs-NTZ in
+    * different rounds; normalize BOTH to session-local TIMESTAMP (UTC
+    * session → value-preserving) so downstream µs arithmetic
+    * (unix_micros, as-of, tumble bucketing) sees one type */
+  def normalize(name: String, df: DataFrame): DataFrame =
+    if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else if (name == "events" &&
-        df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
-      df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
+    else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)
+      df.withColumn("ts", col("ts").cast(TimestampType))
     else df
+
+  /** The schema Spark's parquet inference gives `path`, converted under the
+    * session's confs from the one footer that inference reads:
+    * `_common_metadata`, else `_metadata`, else the first data file by path
+    * (hidden and `_`-prefixed files skipped, as Spark's listing does). None
+    * when `path` is missing, holds no file or has subdirectories
+    * (partitions): Spark's own inference then resolves it, or fails with
+    * its own error. */
+  private def footerSchema(s: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val conf = s.sessionState.newHadoopConf()
+    val fs = p.getFileSystem(conf)
+    val leaves = if (!fs.exists(p)) Array.empty[FileStatus] else fs.listStatus(p).filterNot { f =>
+      val n = f.getPath.getName
+      (n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")) &&
+        !n.startsWith("_common_metadata") && !n.startsWith("_metadata")
+    }.sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    if (leaves.exists(_.isDirectory)) None
+    else summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+      .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+      .map { f =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+          new ParquetToSparkSchemaConverter(s.sessionState.conf))
+      }
   }
 
   def lineitem(s: SparkSession, dir: String): DataFrame = t(s, dir, "lineitem")

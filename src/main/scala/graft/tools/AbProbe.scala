@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{Bench, Sessions, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Times one corpus query under the bench session for its data dir
   * ([[graft.Bench.profile]]; cores from SPARK_GRAFT_CPUS, else all of
@@ -11,7 +12,12 @@ import graft.{Bench, Sessions, SparkEntry}
   * arms alternate on the SAME session (runtime-settable SQLConfs only), so
   * a drifting host window hits both arms equally — an A/B across two JVMs
   * was observed to swing ±15% between adjacent runs, larger than the
-  * effects under test. Usage:
+  * effects under test. Each timed run also prints the codegen classes it
+  * compiled. A one-query loop hits Spark's codegen class cache from its
+  * second run on, so it cannot show effects across queries, such as one
+  * query's classes evicting another's: time those with the rounds of
+  * perfbench/run.py, whose `--trace 1` records compiles per execution.
+  * Usage:
   *   runMain graft.tools.AbProbe <dir> <query> [n] [k=v ...]
   */
 object AbProbe {
@@ -24,15 +30,22 @@ object AbProbe {
     val spark = Sessions.local(cores, Bench.profile(cores, new java.io.File(dir).getName, dir))
     val query = SparkEntry.queries(name)
     val gc = Bench.gcBetween(dir)
-    def once(): Double = {
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    /** Seconds for one run, and the classes it compiled. */
+    def once(): (Double, Long) = {
+      val c0 = compiled()
       val t0 = System.nanoTime()
       query(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
+      val dc = compiled() - c0
       if (gc) System.gc()
-      dt
+      (dt, dc)
     }
     if (overrides.isEmpty) {
-      for (i <- 1 to n) println(f"[ab] $name run $i: ${once()}%.2f s")
+      for (i <- 1 to n) {
+        val (t, c) = once()
+        println(f"[ab] $name run $i: $t%.2f s, $c classes compiled")
+      }
     } else {
       val baseVals = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
       def setArm(b: Boolean): Unit =
@@ -51,9 +64,9 @@ object AbProbe {
         val aFirst = i % 2 == 1
         for (arm <- if (aFirst) Seq(false, true) else Seq(true, false)) {
           setArm(arm)
-          val t = once()
+          val (t, c) = once()
           (if (arm) b else a) += t
-          println(f"[ab] $name pair $i arm ${if (arm) "B" else "A"}: $t%.2f s")
+          println(f"[ab] $name pair $i arm ${if (arm) "B" else "A"}: $t%.2f s, $c classes compiled")
         }
       }
       def stats(xs: Seq[Double]) = {

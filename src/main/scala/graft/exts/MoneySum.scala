@@ -62,12 +62,9 @@ case class MoneySum4(child: Expression)
     * scaled rounding and (on ≤4-decimal-grid inputs, the money contract)
     * Spark's shortest-repr HALF_UP decimal cast.
     *
-    * Non-finite inputs (NaN/±Inf) are NOT special-cased: under ANSI mode
-    * (this engine's default) the double→long cast THROWS on them, exactly
-    * like `sum(cast(x as decimal(38,4)))` would fail to cast — a poisoned
-    * money column fails loudly instead of silently corrupting the total.
-    * Callers with legitimately non-finite doubles should sum untyped
-    * doubles, not a 4-decimal fixed-point money sum. */
+    * Only finite inputs reach it: `updateExpressions` skips NaN/±Inf
+    * like nulls (they neither add to the sum nor count as a value), so
+    * a non-finite value never reaches the double→long cast. */
   private def units(x: Expression): Expression = {
     val scaled = Multiply(x, Literal(10000.0))
     If(GreaterThanOrEqual(scaled, Literal(0.0)),

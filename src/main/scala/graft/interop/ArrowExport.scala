@@ -1,16 +1,23 @@
 package graft.interop
 
-import java.io.OutputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, OutputStream}
+import java.nio.channels.{Channels, FileChannel}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
-import org.apache.arrow.vector.ipc.ArrowStreamWriter
+import org.apache.arrow.vector.{VectorLoader, VectorSchemaRoot, VectorUnloader}
+import org.apache.arrow.vector.ipc.{ArrowFileWriter, ArrowStreamWriter, ArrowWriter, ReadChannel, WriteChannel}
+import org.apache.arrow.vector.ipc.message.MessageSerializer
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema}
-import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, IntervalUnit, TimeUnit}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.arrow.{ArrowWriter => SparkArrowWriter}
 import org.apache.spark.sql.types._
 
 /** Arrow IPC export — the one interop surface a mixed Scala/Python team
@@ -19,10 +26,14 @@ import org.apache.spark.sql.types._
   * result of any query as an Arrow stream that `pyarrow.ipc.open_stream`
   * / polars / duckdb read directly, with zero Python on this side.
   *
-  * This is a CLIENT-EDGE operation by design: rows flow through
-  * `toLocalIterator` (one partition pinned at a time, not a full
-  * collect), batched into Arrow record batches of `maxRecordsPerBatch`.
-  * Use it for query RESULTS — bounded frames, the same contract as
+  * This is a CLIENT-EDGE operation by design. An export runs the query as
+  * one Spark job: each task fills Arrow record batches of at most
+  * `maxRecordsPerBatch` rows from its own partition with Spark's
+  * `ArrowWriter` (a batch never spans two partitions) and ships them
+  * serialized. The whole encoded result is held on the driver before the
+  * first byte is written, so `spark.driver.maxResultSize` bounds it and a
+  * larger result fails with Spark's clear error instead of a partial
+  * stream. Use it for query RESULTS — bounded frames, the same contract as
   * to_pandas; a 100 TB intermediate belongs in parquet, not on the
   * driver. */
 object ArrowExport {
@@ -59,8 +70,7 @@ object ArrowExport {
     // months+days+µs in one value) stays unsupported: Arrow has no
     // lossless single-vector encoding for it pre-MonthDayNano writers.
     case _: DayTimeIntervalType => new ArrowType.Duration(TimeUnit.MICROSECOND)
-    case _: YearMonthIntervalType =>
-      new ArrowType.Interval(org.apache.arrow.vector.types.IntervalUnit.YEAR_MONTH)
+    case _: YearMonthIntervalType => new ArrowType.Interval(IntervalUnit.YEAR_MONTH)
     case other => throw new UnsupportedOperationException(
       s"ArrowExport does not cover $other")
   }
@@ -85,9 +95,8 @@ object ArrowExport {
           st.fields.map(f =>
             toArrowField(f.name, f.dataType, f.nullable, tz, s"$p.${f.name}")).toSeq.asJava)
       case other =>
-        // unsupported leaves throw HERE, before any batch is written (a
-        // mid-stream failure would leave a truncated Arrow file behind),
-        // and carry the full column path
+        // unsupported leaves throw HERE, on the driver before the export's
+        // job starts, and carry the full column path
         val at = try toArrowType(other, tz) catch {
           case _: UnsupportedOperationException => throw new UnsupportedOperationException(
             s"ArrowExport: column '$p' has unsupported type $other")
@@ -100,173 +109,85 @@ object ArrowExport {
   /** Stream `df`'s rows as Arrow IPC record batches into `out`. */
   def writeArrowStream(df: DataFrame, out: OutputStream,
       maxRecordsPerBatch: Int = 10000): Long =
-    writeBatches(df, root => new ArrowStreamWriter(root, null, out), maxRecordsPerBatch)
+    writeBatches(df, maxRecordsPerBatch)(new ArrowStreamWriter(_, null, out))
 
   /** Write the result in the random-access Arrow IPC FILE format (the
     * `ARROW1`-magic layout of `pyarrow.ipc.new_file`, a.k.a. Feather v2)
     * — the other interchange layout pyarrow/polars/duckdb produce and
     * consume. Returns the row count. */
-  def toArrowIpcFile(df: DataFrame, path: String, maxRecordsPerBatch: Int = 10000): Long = {
-    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(path),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    try writeBatches(df,
-      root => new org.apache.arrow.vector.ipc.ArrowFileWriter(root, null, ch),
-      maxRecordsPerBatch)
-    finally ch.close()
-  }
-
-  private def writeBatches(df: DataFrame,
-      mkWriter: VectorSchemaRoot => org.apache.arrow.vector.ipc.ArrowWriter,
-      maxRecordsPerBatch: Int): Long = {
-    require(maxRecordsPerBatch > 0, "maxRecordsPerBatch must be positive")
-    val schema = df.schema
-    val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
-    val allocator = new RootAllocator(Long.MaxValue)
-    val root = VectorSchemaRoot.create(arrowSchema(schema, tz), allocator)
-    val writer = mkWriter(root)
-    var total = 0L
-    try {
-      writer.start()
-      val it = df.toLocalIterator()
-      while (it.hasNext) {
-        var n = 0
-        while (it.hasNext && n < maxRecordsPerBatch) {
-          val row = it.next()
-          var i = 0
-          while (i < schema.length) {
-            setValue(root.getVector(i), schema.fields(i).dataType, n, row, i)
-            i += 1
-          }
-          n += 1
-        }
-        root.setRowCount(n)
-        writer.writeBatch()
-        total += n
-        root.allocateNew() // reset vectors for the next batch
-      }
-      writer.end()
-      total
-    } finally {
-      writer.close(); root.close(); allocator.close()
-    }
-  }
+  def toArrowIpcFile(df: DataFrame, path: String, maxRecordsPerBatch: Int = 10000): Long =
+    writeBatches(df, maxRecordsPerBatch)(new ArrowFileWriter(_, null,
+      FileChannel.open(Paths.get(path), StandardOpenOption.CREATE, StandardOpenOption.WRITE,
+        StandardOpenOption.TRUNCATE_EXISTING)))
 
   /** The whole result as one in-memory Arrow IPC stream (bounded frames —
     * the to_pyarrow contract). */
   def toArrowStreamBytes(df: DataFrame, maxRecordsPerBatch: Int = 10000): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
+    val bos = new ByteArrayOutputStream()
     writeArrowStream(df, bos, maxRecordsPerBatch)
     bos.toByteArray
   }
 
   /** Write the result as an Arrow IPC stream file; returns the row count.
     * `pyarrow.ipc.open_stream(path)` reads it as-is. */
-  def toArrowFile(df: DataFrame, path: String, maxRecordsPerBatch: Int = 10000): Long = {
-    val out = java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(path))
-    try writeArrowStream(df, out, maxRecordsPerBatch) finally out.close()
-  }
+  def toArrowFile(df: DataFrame, path: String, maxRecordsPerBatch: Int = 10000): Long =
+    writeBatches(df, maxRecordsPerBatch)(
+      new ArrowStreamWriter(_, null, Files.newOutputStream(Paths.get(path))))
 
-  private def setValue(vec: FieldVector, dt: DataType, idx: Int, row: Row,
-      col: Int): Unit =
-    writeValue(vec, dt, idx, if (row.isNullAt(col)) null else row.get(col))
-
-  /** One recursive writer for every supported (vector, type, value)
-    * combination — top-level columns, list elements at any nesting depth,
-    * and struct children all route through here. Values arrive in Spark's
-    * external Row representation (BigDecimal, sql/time dates and
-    * timestamps, Seq, Row). */
-  private def writeValue(vec: FieldVector, dt: DataType, idx: Int, value: Any): Unit = {
-    if (value == null) { setNull(vec, idx); return }
-    (vec, dt) match {
-      case (v: BitVector, BooleanType) =>
-        v.setSafe(idx, if (value.asInstanceOf[Boolean]) 1 else 0)
-      case (v: TinyIntVector, ByteType) => v.setSafe(idx, value.asInstanceOf[Byte])
-      case (v: SmallIntVector, ShortType) => v.setSafe(idx, value.asInstanceOf[Short])
-      case (v: IntVector, IntegerType) => v.setSafe(idx, value.asInstanceOf[Int])
-      case (v: BigIntVector, LongType) => v.setSafe(idx, value.asInstanceOf[Long])
-      case (v: Float4Vector, FloatType) => v.setSafe(idx, value.asInstanceOf[Float])
-      case (v: Float8Vector, DoubleType) => v.setSafe(idx, value.asInstanceOf[Double])
-      case (v: VarCharVector, StringType) =>
-        v.setSafe(idx, value.asInstanceOf[String]
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case (v: VarBinaryVector, BinaryType) =>
-        v.setSafe(idx, value.asInstanceOf[Array[Byte]])
-      case (v: DecimalVector, _: DecimalType) =>
-        val bd = value match {
-          case b: java.math.BigDecimal => b
-          case b: scala.math.BigDecimal => b.bigDecimal
-        }
-        v.setSafe(idx, bd)
-      case (v: DateDayVector, DateType) =>
-        val epochDay = value match {
-          case d: java.sql.Date => d.toLocalDate.toEpochDay
-          case d: java.time.LocalDate => d.toEpochDay
-        }
-        v.setSafe(idx, epochDay.toInt)
-      case (v: TimeStampVector, TimestampType) =>
-        val micros = value match {
-          case ts: java.sql.Timestamp =>
-            math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-          case i: java.time.Instant =>
-            i.getEpochSecond * 1000000L + i.getNano / 1000L
-        }
-        v.setSafe(idx, micros)
-      case (v: TimeStampVector, TimestampNTZType) =>
-        val ldt = value.asInstanceOf[java.time.LocalDateTime]
-        v.setSafe(idx, ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-          ldt.getNano / 1000L)
-      case (v: DurationVector, _: DayTimeIntervalType) =>
-        val d = value.asInstanceOf[java.time.Duration]
-        v.setSafe(idx, d.getSeconds * 1000000L + d.getNano / 1000L)
-      case (v: IntervalYearVector, _: YearMonthIntervalType) =>
-        v.setSafe(idx, value.asInstanceOf[java.time.Period].toTotalMonths.toInt)
-      case (v: MapVector, MapType(kt, vt, _)) => // before ListVector: a MapVector IS one
-        val m = value.asInstanceOf[scala.collection.Map[Any, Any]]
-        val start = v.startNewValue(idx)
-        val entries = v.getDataVector.asInstanceOf[StructVector]
-        var j = 0
-        m.foreach { case (k, mv) =>
-          entries.setIndexDefined(start + j)
-          writeValue(entries.getChildByOrdinal(0).asInstanceOf[FieldVector], kt, start + j, k)
-          writeValue(entries.getChildByOrdinal(1).asInstanceOf[FieldVector], vt, start + j, mv)
-          j += 1
-        }
-        v.endValue(idx, m.size)
-      case (v: ListVector, ArrayType(elem, _)) =>
-        val seq = value.asInstanceOf[scala.collection.Seq[Any]]
-        val start = v.startNewValue(idx)
-        val child = v.getDataVector
-        var j = 0
-        while (j < seq.length) {
-          writeValue(child, elem, start + j, seq(j)); j += 1
-        }
-        v.endValue(idx, seq.length)
-      case (v: StructVector, st: StructType) =>
-        val r = value.asInstanceOf[Row]
-        v.setIndexDefined(idx)
-        var j = 0
-        while (j < st.length) {
-          writeValue(v.getChildByOrdinal(j).asInstanceOf[FieldVector], st.fields(j).dataType, idx,
-            if (r.isNullAt(j)) null else r.get(j))
-          j += 1
-        }
-      case (v, t) => throw new UnsupportedOperationException(
-        s"ArrowExport: no writer for $t into ${v.getClass.getSimpleName}")
+  /** Runs `df`'s own QueryExecution as one Spark job whose tasks encode
+    * their partition, then writes every batch in partition order through
+    * the writer `open` makes. `open` runs only after the job has returned,
+    * so a query that fails leaves no output behind; the writer's close
+    * closes its output. Returns the row count. */
+  private def writeBatches(df: DataFrame, maxRecordsPerBatch: Int)(
+      open: VectorSchemaRoot => ArrowWriter): Long = {
+    require(maxRecordsPerBatch > 0, "maxRecordsPerBatch must be positive")
+    val schema = df.schema
+    val tz = df.sparkSession.sessionState.conf.sessionLocalTimeZone
+    val arrow = arrowSchema(schema, tz) // unsupported types fail here, before the job
+    val qe = df.queryExecution
+    val batches = SQLExecution.withNewExecutionId(qe, Some("toArrow")) {
+      qe.toRdd.mapPartitions(encode(_, schema, tz, maxRecordsPerBatch)).collect()
     }
+    Using.Manager { use =>
+      val allocator = use(new RootAllocator(Long.MaxValue))
+      val root = use(VectorSchemaRoot.create(arrow, allocator))
+      val loader = new VectorLoader(root)
+      val writer = use(open(root))
+      writer.start()
+      var total = 0L
+      batches.foreach { bytes =>
+        val batch = MessageSerializer.deserializeRecordBatch(
+          new ReadChannel(Channels.newChannel(new ByteArrayInputStream(bytes))), allocator)
+        try loader.load(batch) finally batch.close()
+        writer.writeBatch()
+        total += root.getRowCount
+      }
+      writer.end()
+      total
+    }.get
   }
 
-  private def setNull(vec: FieldVector, idx: Int): Unit = vec match {
-    case v: ListVector => v.setNull(idx)
-    case v: StructVector =>
-      // a null struct must also null its children so variable-width child
-      // offsets stay monotonic for downstream validators
-      v.setNull(idx)
-      var j = 0
-      while (j < v.size()) { setNull(v.getChildByOrdinal(j).asInstanceOf[FieldVector], idx); j += 1 }
-    case v: BaseFixedWidthVector => v.setNull(idx)
-    case v: BaseVariableWidthVector => v.setNull(idx)
-    case v => throw new UnsupportedOperationException(
-      s"ArrowExport: cannot null ${v.getClass.getSimpleName}")
-  }
+  /** Task side: one partition's rows as serialized Arrow record batches of
+    * at most `maxRecordsPerBatch` rows, filled by Spark's own ArrowWriter. */
+  private def encode(rows: Iterator[InternalRow], schema: StructType, tz: String,
+      maxRecordsPerBatch: Int): Iterator[Array[Byte]] = Using.Manager { use =>
+    val allocator = use(new RootAllocator(Long.MaxValue))
+    val root = use(VectorSchemaRoot.create(arrowSchema(schema, tz), allocator))
+    val writer = SparkArrowWriter.create(root)
+    val unloader = new VectorUnloader(root)
+    val out = ArrayBuffer.empty[Array[Byte]]
+    while (rows.hasNext) {
+      var n = 0
+      while (rows.hasNext && n < maxRecordsPerBatch) { writer.write(rows.next()); n += 1 }
+      writer.finish()
+      val bos = new ByteArrayOutputStream()
+      val batch = unloader.getRecordBatch
+      try MessageSerializer.serialize(new WriteChannel(Channels.newChannel(bos)), batch)
+      finally batch.close()
+      out += bos.toByteArray
+      writer.reset()
+    }
+    out.iterator
+  }.get
 }

@@ -162,10 +162,12 @@ object ArrowImport {
     }
   }
 
-  /** One recursive reader mirroring [[ArrowExport.writeValue]] — emits
-    * Spark's EXTERNAL row representation (java.sql dates/timestamps,
-    * java BigDecimal, Seq, Map, Row) so `createDataFrame` validates it
-    * against the schema without conversion surprises. */
+  /** One recursive reader over every vector [[ArrowExport.arrowSchema]]
+    * maps to, plus the s/ms/ns timestamp units pyarrow and pandas write —
+    * emits Spark's EXTERNAL row representation (java.sql
+    * dates/timestamps, java BigDecimal, Seq, Map, Row) so
+    * `createDataFrame` validates it against the schema without conversion
+    * surprises. */
   private def readValue(vec: FieldVector, dt: DataType, idx: Int): Any = {
     if (vec.isNull(idx)) return null
     (vec, dt) match {

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
 import scala.jdk.CollectionConverters._
@@ -8,9 +9,10 @@ import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.ListVector
 import org.apache.arrow.vector.ipc.ArrowStreamReader
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.interop.ArrowExport
+import graft.interop.{ArrowExport, ArrowImport}
 
 /** Roundtrip the Arrow IPC export through Arrow's own reader — what a
   * pyarrow/polars/duckdb client would do with the bytes. */
@@ -174,5 +176,86 @@ class ArrowExportSpec extends SparkSpec {
       ArrowExport.toArrowStreamBytes(nested)
     }
     assert(ex2.getMessage.contains("liv.element"))
+  }
+
+  /** 25k rows over 7 partitions: nulls at every level and every type
+    * `arrowSchema` maps. */
+  private def wide = spark.range(0, 25000, 1, 7).selectExpr(
+    "id",
+    "IF(id % 7 = 0, NULL, id * 0.5D) AS x",
+    "CAST(id % 2 = 0 AS BOOLEAN) AS b",
+    "CAST(id % 100 AS TINYINT) AS y",
+    "CAST(id % 1000 AS SMALLINT) AS h",
+    "CAST(id AS FLOAT) AS f",
+    "IF(id % 5 = 0, NULL, concat('s', id)) AS s",
+    "CAST(concat('b', id) AS BINARY) AS bin",
+    "CAST(id AS DECIMAL(12,2)) / 4 AS dec",
+    "date_add(DATE'2024-01-01', CAST(id % 400 AS INT)) AS d",
+    "timestamp_micros(id * 1000003) AS t",
+    "CAST(timestamp_micros(id * 999983) AS TIMESTAMP_NTZ) AS ntz",
+    "make_dt_interval(CAST(id % 3 AS INT), 1, 2, id % 60) AS dt",
+    "make_ym_interval(1, CAST(id % 12 AS INT)) AS ym",
+    "IF(id % 3 = 0, NULL, array(id, NULL, id + 1)) AS l",
+    "IF(id % 11 = 0, NULL, named_struct('k', CAST(id % 13 AS INT), " +
+      "'v', IF(id % 2 = 0, NULL, array(concat('v', id))))) AS st",
+    "map('a', id, 'b', IF(id % 4 = 0, NULL, id)) AS m")
+
+  /** (column names, rows per record batch) of an Arrow stream. */
+  private def batchSizes(bytes: Array[Byte]): (Seq[String], Seq[Int]) = {
+    val alloc = new RootAllocator(Long.MaxValue)
+    val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), alloc)
+    try {
+      val names = reader.getVectorSchemaRoot.getSchema.getFields.asScala.map(_.getName).toSeq
+      val sizes = scala.collection.mutable.ArrayBuffer.empty[Int]
+      while (reader.loadNextBatch()) sizes += reader.getVectorSchemaRoot.getRowCount
+      (names, sizes.toSeq)
+    } finally { reader.close(); alloc.close() }
+  }
+
+  test("a multi-partition result exports in one job, in order, batched per partition") {
+    val df = wide
+    val (bytes, jobs) = jobsDuring(ArrowExport.toArrowStreamBytes(df, maxRecordsPerBatch = 1000))
+    assert(jobs == 1, s"the export ran $jobs Spark jobs")
+    val (names, sizes) = batchSizes(bytes)
+    assert(names == df.columns.toSeq)
+    // batches hold at most 1000 rows and never span two partitions
+    val perPartition = df.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    assert(perPartition.size == 7)
+    assert(sizes == perPartition.flatMap(n => Seq.fill(n / 1000)(1000) ++ Seq(n % 1000).filter(_ > 0)))
+    val back = ArrowImport.fromArrowBytes(spark, bytes)
+    assert(back.schema == df.schema)
+    assert(back.collect().toSeq == df.collect().toSeq)
+  }
+
+  test("an empty multi-partition result is a schema-only stream of 0 rows") {
+    val empty = wide.where("id < 0")
+    assert(empty.rdd.getNumPartitions == 7)
+    val (bytes, jobs) = jobsDuring(ArrowExport.toArrowStreamBytes(empty))
+    assert(jobs == 1, s"the export ran $jobs Spark jobs")
+    assert(batchSizes(bytes) == (empty.columns.toSeq, Nil))
+    val back = ArrowImport.fromArrowBytes(spark, bytes)
+    assert(back.schema == empty.schema && back.count() == 0)
+  }
+
+  test("a query that fails in a task leaves no file and an existing file untouched") {
+    // only the last of 7 partitions fails
+    val failing = spark.range(0, 25000, 1, 7)
+      .selectExpr("id", "IF(id = 24999, raise_error('boom at the last row'), id) AS v")
+    val writers = Seq[(DataFrame, String) => Long](
+      (df, p) => ArrowExport.toArrowFile(df, p, maxRecordsPerBatch = 1000),
+      (df, p) => ArrowExport.toArrowIpcFile(df, p, maxRecordsPerBatch = 1000))
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val dir = Files.createTempDirectory("graft_arrow_fail")
+    try writers.zipWithIndex.foreach { case (write, i) =>
+      val fresh = dir.resolve(s"fresh$i.arrow")
+      val e1 = intercept[Exception](write(failing, fresh.toString))
+      assert(messages(e1).contains("boom at the last row"))
+      assert(!Files.exists(fresh), s"writer $i left a file behind")
+      val kept = dir.resolve(s"kept$i.arrow")
+      Files.write(kept, "an earlier result".getBytes("UTF-8"))
+      intercept[Exception](write(failing, kept.toString))
+      assert(new String(Files.readAllBytes(kept), "UTF-8") == "an earlier result")
+    } finally scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
 }

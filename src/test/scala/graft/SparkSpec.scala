@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,4 +20,17 @@ abstract class SparkSpec extends AnyFunSuite {
   def sfDir = "/root/testdata/sf0.001"
 
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  /** `f`'s result and the Spark jobs started while it ran. */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { val a = f; ListenerBusDrain(sc); (a, n.get) }
+    finally sc.removeSparkListener(l)
+  }
 }

@@ -1,29 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.queries.Tables
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 
 /** `Tables.t` resolves a table's schema from one parquet footer on the
   * driver: the same schema Spark's inference gives, without its job. */
 class TablesSpec extends SparkSpec {
-
-  /** `f`'s result and the Spark jobs started while it ran. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try { val a = f; ListenerBusDrain(sc); (a, n.get) }
-    finally sc.removeSparkListener(l)
-  }
 
   /** Tables.t runs no job and gives the schema Spark's inference gives,
     * after the same normalisation; the inference itself runs a job, which

@@ -6,11 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.locationtech.jts.operation.relateng.RelatePredicate
 
-/** Native WKB LINESTRING / POLYGON geometry (SURVEY.md §2.4 geospatial —
-  * the line/polygon half of the family the round-2 verdict asked graft to
-  * either implement or formally descope; the POINT core is in
-  * [[GeoExpressions.scala]]).
+/** WKB LINESTRING / POLYGON / Multi* geometry (SURVEY.md §2.4 geospatial;
+  * the POINT core is in [[GeoExpressions.scala]]).
   *
   * Reference ops (ibis/expr/operations/geospatial.py): GeoArea :28,
   * GeoLength :318, GeoPerimeter :381, GeoCentroid :102, GeoEnvelope :242,
@@ -19,23 +18,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * GeoIntersects :296, GeoDisjoint :194, GeoDistance :202, GeoDWithin
   * :211, GeoAsText :44, GeoGeometryType :287, GeoLineString/GeoPolygon
   * constructors :337,480. All planar/Euclidean (PostGIS *geometry*, the
-  * reference's default), implemented as pure Scala math over OGC WKB —
-  * no GEOS dependency, fully codegen-compatible (static calls from
-  * whole-stage-generated code).
+  * reference's default), called statically from whole-stage-generated code.
   *
-  * Multi* / GeometryCollection INPUTS are first-class (round 4): parsed
-  * recursively with flattened ring sets so the predicate machinery treats
-  * them exactly (OGC disjoint-interior invariant); measures fold per
-  * member. Polygon set-op outputs live in [[GeoGeomOps]]. Out of scope
-  * (documented divergence, GEOS territory): Buffer of lines/polygons,
-  * ConvexHull, GEOS-general set ops, arbitrary-CRS transform.
+  * graft owns the WKB parser and writer, the measures (ST_Length counts
+  * lines only, unlike JTS `getLength`), distance, WKT and the
+  * constructors. Topology — contains/within/intersects here, set ops,
+  * the other DE-9IM predicates, buffer, simplify, merge, hull and linear
+  * referencing in [[GeoGeomOps]] — runs on JTS through [[GeoJts]].
   *
   * Geometry model: `rings(0)` holds the flat [x0,y0,x1,y1,…] coordinates —
   * a point has 1 pair, a linestring N pairs, a polygon stores one flat
   * array per ring (first ring = shell, rest = holes; rings closed,
-  * first pair == last pair). Containment uses even-odd ray casting
-  * (boundary-inclusive, so holes invert correctly); distance handles all
-  * six type pairings with segment-segment math; intersects ≡ distance 0.
+  * first pair == last pair). Distance handles all six type pairings with
+  * segment-segment math plus even-odd containment for areal operands.
   */
 object GeoGeom {
   final val PointType = 1
@@ -65,46 +60,60 @@ object GeoGeom {
     try parseFrom(bb, 0) catch { case _: java.nio.BufferUnderflowException => null }
   }
 
+  /** One WKB/EWKB geometry. Every count is checked against the bytes left
+    * in Long arithmetic before anything is allocated, and nesting is capped
+    * at depth 4, so malformed input is null rather than an allocation or a
+    * deep recursion. Z and M ordinates (EWKB 0x80000000/0x40000000 flags or
+    * ISO 1000/2000/3000 type codes) are read past and dropped: every op is
+    * 2-D, as PostGIS's planar ST_Length/ST_Area are. */
   private def parseFrom(bb: java.nio.ByteBuffer, depth: Int): Geom = {
     if (depth > 4 || bb.remaining() < 5) return null
     bb.order(if (bb.get(bb.position()) == 1.toByte) java.nio.ByteOrder.LITTLE_ENDIAN
              else java.nio.ByteOrder.BIG_ENDIAN)
     bb.position(bb.position() + 1)
-    var gtype = bb.getInt()
-    if ((gtype & 0x20000000) != 0) { // EWKB SRID flag: skip srid
-      gtype &= ~0x20000000
+    val raw = bb.getInt()
+    if ((raw & 0x20000000) != 0) { // EWKB SRID flag: skip srid
       if (bb.remaining() < 4) return null
       bb.getInt()
     }
-    gtype &= 0xFFFF
+    val iso = (raw & 0xFFFF) / 1000
+    val gtype = (raw & 0xFFFF) % 1000
+    val hasZ = (raw & 0x80000000) != 0 || iso == 1 || iso == 3
+    val hasM = (raw & 0x40000000) != 0 || iso == 2 || iso == 3
+    val skip = ((if (hasZ) 1 else 0) + (if (hasM) 1 else 0)) * 8
+    def coords(n: Int): Array[Double] = {
+      if (n < 0 || bb.remaining() < n.toLong * (16 + skip)) return null
+      val flat = new Array[Double](n * 2)
+      var i = 0
+      while (i < n * 2) {
+        flat(i) = bb.getDouble(); flat(i + 1) = bb.getDouble()
+        bb.position(bb.position() + skip)
+        i += 2
+      }
+      flat
+    }
+    if (iso > 3) return null
     gtype match {
       case PointType =>
-        if (bb.remaining() < 16) return null
-        new Geom(1, Array(Array(bb.getDouble(), bb.getDouble())))
+        val c = coords(1)
+        if (c == null) null else new Geom(1, Array(c))
       case LineType =>
-        val n = bb.getInt()
-        if (n < 0 || bb.remaining() < n * 16) return null
-        val flat = new Array[Double](n * 2)
-        var i = 0
-        while (i < n * 2) { flat(i) = bb.getDouble(); i += 1 }
-        new Geom(2, Array(flat))
+        val c = coords(bb.getInt())
+        if (c == null) null else new Geom(2, Array(c))
       case PolygonType =>
         val nr = bb.getInt()
-        if (nr < 0 || nr > (1 << 20)) return null
+        if (nr < 0 || bb.remaining() < nr.toLong * 4) return null
         val rings = new Array[Array[Double]](nr)
         var r = 0
         while (r < nr) {
-          val n = bb.getInt()
-          if (n < 0 || bb.remaining() < n * 16) return null
-          val flat = new Array[Double](n * 2)
-          var i = 0
-          while (i < n * 2) { flat(i) = bb.getDouble(); i += 1 }
-          rings(r) = flat; r += 1
+          rings(r) = coords(bb.getInt())
+          if (rings(r) == null) return null
+          r += 1
         }
         new Geom(3, rings)
       case MultiPointType | MultiLineType | MultiPolygonType | CollectionType =>
         val np = bb.getInt()
-        if (np < 0 || np > (1 << 20)) return null
+        if (np < 0 || bb.remaining() < np.toLong * 5) return null
         val parts = new Array[Geom](np)
         var p = 0
         while (p < np) {
@@ -164,7 +173,7 @@ object GeoGeom {
     areaOf(g)
   }
 
-  private[exts] def areaOf(g: Geom): Double = g.kind match {
+  private def areaOf(g: Geom): Double = g.kind match {
     case 3 =>
       var shell = 0.0; var holes = 0.0; var first = true
       g.rings.foreach { r =>
@@ -183,7 +192,7 @@ object GeoGeom {
     case _     => 0.0
   }
 
-  private[exts] def ringLength(r: Array[Double]): Double = {
+  private def ringLength(r: Array[Double]): Double = {
     var s = 0.0
     var i = 0
     val n = r.length / 2
@@ -406,25 +415,13 @@ object GeoGeom {
     }
   }
 
-  // ---- predicates / distance ----------------------------------------
+  // ---- distance -----------------------------------------------------
   //
-  // Exactness policy (deliberate asymmetry): the topology-construction
-  // predicates below (onSegment / pointInRings / segsIntersect) are
-  // EXACT — zero tolerance — because the set-op stitcher builds its
-  // vertex/edge structure from them and a fuzzy primitive would smear
-  // coincidence classes together. A scaled tolerance ([[boundaryTol]])
-  // is applied ONLY at the final containment VERDICT (is this vertex on
-  // b's boundary, or strictly inside?), where an FP-unrepresentable
-  // on-boundary point (dist ~1e-17) would otherwise flip a true
-  // containment to false. Use boundaryTol — never an ad-hoc epsilon —
-  // anywhere a verdict-level on-boundary test is needed.
+  // Distance is graft's own segment math: `sqrt(dx² + dy²)` is bit-equal
+  // to SQL's SQRT, where JTS's `hypot` can differ in the last ulp. The
+  // exact primitives below serve it; topology is JTS's (GeoJts).
 
-  /** Scale-relative boundary tolerance for verdict-level on-boundary
-    * tests: 1e-9 of the point's magnitude (≥1e-9 absolute). */
-  private[exts] def boundaryTol(x: Double, y: Double): Double =
-    1e-9 * math.max(1.0, math.max(math.abs(x), math.abs(y)))
-
-  private[exts] def onSegment(px: Double, py: Double, ax: Double, ay: Double,
+  private def onSegment(px: Double, py: Double, ax: Double, ay: Double,
       bx: Double, by: Double): Boolean = {
     val cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
     cross == 0.0 &&
@@ -433,7 +430,7 @@ object GeoGeom {
   }
 
   /** Even-odd ray casting over every ring; boundary inclusive. */
-  private[exts] def pointInRings(px: Double, py: Double, rings: Array[Array[Double]]): Boolean = {
+  private def pointInRings(px: Double, py: Double, rings: Array[Array[Double]]): Boolean = {
     var inside = false
     var r = 0
     while (r < rings.length) {
@@ -453,7 +450,7 @@ object GeoGeom {
     inside
   }
 
-  private[exts] def segsIntersect(ax: Double, ay: Double, bx: Double, by: Double,
+  private def segsIntersect(ax: Double, ay: Double, bx: Double, by: Double,
       cx: Double, cy: Double, dx: Double, dy: Double): Boolean = {
     def orient(ox: Double, oy: Double, px: Double, py: Double, qx: Double, qy: Double) =
       math.signum((px - ox) * (qy - oy) - (py - oy) * (qx - ox))
@@ -464,7 +461,7 @@ object GeoGeom {
       onSegment(ax, ay, cx, cy, dx, dy) || onSegment(bx, by, cx, cy, dx, dy)
   }
 
-  private[exts] def pointSegDist(px: Double, py: Double, ax: Double, ay: Double,
+  private def pointSegDist(px: Double, py: Double, ax: Double, ay: Double,
       bx: Double, by: Double): Double = {
     val dx = bx - ax; val dy = by - ay
     val len2 = dx * dx + dy * dy
@@ -536,7 +533,7 @@ object GeoGeom {
       false
     }
 
-  private[exts] def distanceOf(a: Geom, b: Geom): Double = {
+  private def distanceOf(a: Geom, b: Geom): Double = {
     if (a.rings.isEmpty || b.rings.isEmpty) return Double.MaxValue // EMPTY geom
     // areal containment → 0 even with no boundary crossing. Any-vertex (not
     // just the first) matters for multi operands: one member can sit fully
@@ -550,141 +547,14 @@ object GeoGeom {
     minDistRings(a.rings, b.rings)
   }
 
-  /** True only when segments properly cross (interiors intersect at a
-    * single point, no endpoint touch, no collinear overlap). */
-  private[exts] def properCross(ax: Double, ay: Double, bx: Double, by: Double,
-      cx: Double, cy: Double, dx: Double, dy: Double): Boolean = {
-    def orient(ox: Double, oy: Double, px: Double, py: Double, qx: Double, qy: Double) =
-      math.signum((px - ox) * (qy - oy) - (py - oy) * (qx - ox))
-    val o1 = orient(ax, ay, bx, by, cx, cy); val o2 = orient(ax, ay, bx, by, dx, dy)
-    val o3 = orient(cx, cy, dx, dy, ax, ay); val o4 = orient(cx, cy, dx, dy, bx, by)
-    o1 != 0.0 && o2 != 0.0 && o3 != 0.0 && o4 != 0.0 && o1 != o2 && o3 != o4
-  }
+  /** ST_Contains (DE-9IM, JTS RelateNG): no point of `b` outside `a` and
+    * at least one in `a`'s interior — a point on `a`'s boundary is not
+    * contained (ST_Covers, [[GeoGeomOps.covers]], includes it). */
+  def contains(aB: Array[Byte], bB: Array[Byte]): java.lang.Boolean =
+    GeoJts.relate(aB, bB, () => RelatePredicate.contains())
 
-  /** ST_Contains-style containment: every vertex of `b` inside (or on)
-    * `a`'s rings, no edge of `b` properly crossing an edge of `a`
-    * (boundary touches allowed, as in ST_Contains), and each `b`-edge
-    * midpoint still inside (catches exits threaded exactly through an
-    * `a` vertex, where no proper crossing registers). Exact for points
-    * and for line/polygon operands that don't re-enter between two
-    * consecutive sampled points — i.e. everything but adversarial
-    * vertex-grazing zigzags. */
-  def contains(aB: Array[Byte], bB: Array[Byte]): java.lang.Boolean = {
-    val a = parse(aB); val b = parse(bB)
-    if (a == null || b == null) return null
-    if (a.kind != 3 && a.kind != 6) {
-      // point/line can only contain geometries with distance 0 and equal dim
-      return a.kind == b.kind && java.util.Arrays.equals(aB, bB)
-    }
-    // a is POLYGON or MULTIPOLYGON from here: the even-odd test over the
-    // flattened ring set classifies the multi case exactly (OGC disjoint
-    // interiors), and b's vertex/edge/midpoint sweep below already walks
-    // EVERY ring of a multi b (single-point rings skip the edge loop).
-    var r = 0
-    while (r < b.rings.length) {
-      val ring = b.rings(r)
-      var i = 0
-      while (i < ring.length) {
-        if (!pointInRings(ring(i), ring(i + 1), a.rings)) return false
-        i += 2
-      }
-      r += 1
-    }
-    // vertices all inside — reject edges that cross or slip out of `a`
-    if (b.kind != 1) {
-      val shell = a.rings
-      var rb = 0
-      while (rb < b.rings.length) {
-        val ring = b.rings(rb)
-        val n = ring.length / 2
-        var i = 0
-        while (i < n - 1) {
-          val x1 = ring(i * 2); val y1 = ring(i * 2 + 1)
-          val x2 = ring(i * 2 + 2); val y2 = ring(i * 2 + 3)
-          var ra = 0
-          while (ra < shell.length) {
-            val sr = shell(ra)
-            val m = sr.length / 2
-            var j = 0
-            while (j < m - 1) {
-              if (properCross(x1, y1, x2, y2,
-                  sr(j * 2), sr(j * 2 + 1), sr(j * 2 + 2), sr(j * 2 + 3))) return false
-              j += 1
-            }
-            ra += 1
-          }
-          if (!pointInRings((x1 + x2) / 2.0, (y1 + y2) / 2.0, shell)) return false
-          i += 1
-        }
-        rb += 1
-      }
-    }
-    // the reverse poke (round 7): when b is AREAL, no vertex of a's OWN
-    // boundary may sit strictly inside b — if one does, part of a's
-    // boundary (typically a hole ring) is interior to b, so b's region
-    // escapes a's (a square "containing" a bigger square that swallows
-    // its hole was the failing case). A boundary point of a strictly
-    // interior to b ⊆ a is impossible for true containment, so this
-    // check never rejects a legitimate pair.
-    if (b.kind == 3 || b.kind == 6) {
-      var ra2 = 0
-      while (ra2 < a.rings.length) {
-        val ring = a.rings(ra2)
-        var i = 0
-        while (i < ring.length) {
-          val x = ring(i); val y = ring(i + 1)
-          if (pointInRings(x, y, b.rings)) {
-            // strictly inside = inside by even-odd AND not on b's boundary
-            var onB = false
-            var rb2 = 0
-            while (rb2 < b.rings.length && !onB) {
-              val br = b.rings(rb2)
-              val m = br.length / 2
-              var j = 0
-              // verdict-level on-boundary test → shared scaled epsilon
-              // (see the exactness-policy note at the predicates header)
-              val tol = boundaryTol(x, y)
-              while (j < m - 1 && !onB) {
-                if (pointSegDist(x, y, br(j * 2), br(j * 2 + 1),
-                    br(j * 2 + 2), br(j * 2 + 3)) <= tol) onB = true
-                j += 1
-              }
-              rb2 += 1
-            }
-            if (!onB) return false
-          }
-          i += 2
-        }
-        ra2 += 1
-      }
-      // interior probe: b's boundary can lie ENTIRELY on a's boundary (b
-      // exactly filling a hole of a) and pass every edge test — probe a
-      // point of b's interior directly when the shell centroid lands
-      // inside b (true for convex and most shapes; concave misses just
-      // skip the probe, the edge tests above still constrain them)
-      val shell = b.rings(0)
-      var cx = 0.0; var cy = 0.0; var aa = 0.0
-      var ci = 0
-      while (ci < shell.length - 2) {
-        val cross = shell(ci) * shell(ci + 3) - shell(ci + 2) * shell(ci + 1)
-        aa += cross
-        cx += (shell(ci) + shell(ci + 2)) * cross
-        cy += (shell(ci + 1) + shell(ci + 3)) * cross
-        ci += 2
-      }
-      if (aa != 0.0) {
-        cx /= 3.0 * aa; cy /= 3.0 * aa
-        if (pointInRings(cx, cy, b.rings) && !pointInRings(cx, cy, a.rings))
-          return false
-      }
-    }
-    true
-  }
-
-  def intersects(aB: Array[Byte], bB: Array[Byte]): java.lang.Boolean = {
-    val d = distance(aB, bB)
-    if (d == null) null else java.lang.Boolean.valueOf(d.doubleValue() == 0.0)
-  }
+  def intersects(aB: Array[Byte], bB: Array[Byte]): java.lang.Boolean =
+    GeoJts.relate(aB, bB, () => RelatePredicate.intersects())
 
   // ---- constructors from point arrays --------------------------------
 

@@ -11,22 +11,18 @@ import graft.exts.{GeoConvertCrs, GeoCoord, GeoIntersectionExpr, GeoLineSubstrin
   * ops in ibis/expr/operations/geospatial.py). Euclidean planar semantics
   * — the reference's default geometry behavior.
   *
-  * POINT encode/decode/measure plus native LINESTRING/POLYGON
+  * POINT encode/decode/measure plus LINESTRING/POLYGON/Multi*
   * construction, measures (area/length/perimeter/centroid/envelope/
-  * bounds), relates (contains/within/intersects/disjoint/distance/
-  * dwithin) and accessors (n_points/point_n/start/end/WKT) — all pure
-  * planar math over OGC WKB in [[graft.exts.GeoGeom]], no GEOS library —
-  * plus the planar-feasible remainder in [[graft.exts.GeoGeomOps]]:
-  * DE-9IM-style predicates (touches/crosses/overlaps/covers/equals),
-  * linear referencing (line_locate_point/line_substring), simplify,
-  * azimuth/max_distance, buffer, SRID/EWKB plumbing, set-op geometry
-  * outputs (union/difference/intersection/unary_union/line_merge over
-  * polygons, lines, points, Multi* and collections — exact collinear
-  * tangencies included), and CRS reprojection: integer-SRID
-  * [[transform]] plus string-spec [[convert]] through the
-  * parameter-driven [[graft.exts.ProjEngine]]. The remaining null
-  * classes (inexact near-collinear tangency, non-polar stere / oblique
-  * mercator projections) live in DIVERGENCES.md §1.
+  * bounds), distance/dwithin and accessors (n_points/point_n/start/end/
+  * WKT) in graft's own planar math over OGC WKB ([[graft.exts.GeoGeom]]);
+  * topology on JTS ([[graft.exts.GeoJts]]): DE-9IM predicates
+  * (contains/within/intersects/disjoint/touches/crosses/overlaps/covers/
+  * equals), set ops (union/difference/intersection/unary_union),
+  * line_merge, convex_hull, buffer, simplify, is_valid and linear
+  * referencing; plus SRID/EWKB plumbing, azimuth/max_distance and CRS
+  * reprojection: integer-SRID [[transform]] and string-spec [[convert]]
+  * through the parameter-driven [[graft.exts.ProjEngine]]. What remains
+  * unsupported lives in DIVERGENCES.md §1.
   */
 object geo {
   private def ex(c: Column) = org.apache.spark.sql.GraftSqlBridge.expression(c)
@@ -63,7 +59,8 @@ object geo {
   def dwithin(a: Column, b: Column, d: Column): Column = distance(a, b) <= d
 
   /** GeoContains / GeoWithin / GeoIntersects / GeoDisjoint
-    * (geospatial.py:76,472,296,194). */
+    * (geospatial.py:76,472,296,194): DE-9IM, so a point on a polygon's
+    * boundary is neither contained nor within ([[covers]] includes it). */
   def contains(a: Column, b: Column): Column = co(GeoRelate(ex(a), ex(b), "contains"))
   def within(a: Column, b: Column): Column = co(GeoRelate(ex(a), ex(b), "within"))
   def intersects(a: Column, b: Column): Column = co(GeoRelate(ex(a), ex(b), "intersects"))
@@ -108,7 +105,7 @@ object geo {
     * integral coordinates print without a trailing '.0' (PostGIS style). */
   def asText(wkb: Column): Column = co(GeoText(ex(wkb), "as_text"))
 
-  // ---- GeoGeometryOps.scala family (the planar-feasible remainder) ----
+  // ---- GeoGeometryOps.scala family ----
 
   /** GeoAzimuth (geospatial.py:405): north-based clockwise radians in
     * [0, 2π); null for coincident points. */
@@ -133,12 +130,12 @@ object geo {
     co(GeoLineSubstring(ex(line), ex(f0.cast("double")), ex(f1.cast("double"))))
 
   /** GeoSimplify (geospatial.py:440): Douglas-Peucker with tolerance;
-    * polygon rings that would collapse stay unsimplified. */
+    * polygonal output stays valid, collapsed parts are dropped. */
   def simplify(g: Column, tolerance: Column): Column =
     co(GeoParam(ex(g), ex(tolerance.cast("double")), "simplify"))
 
-  /** GeoIsValid (geospatial.py:109): ring closure, finite coords, no ring
-    * self-intersection, positive ring area. */
+  /** GeoIsValid (geospatial.py:109): OGC validity (ring closure, finite
+    * coords, no self-intersection, holes inside shells, ...). */
   def isValid(g: Column): Column = co(GeoUnaryMeta(ex(g), "is_valid"))
 
   /** GeoOrderingEquals (geospatial.py:161): same type + identical
@@ -146,8 +143,8 @@ object geo {
   def orderingEquals(a: Column, b: Column): Column =
     co(GeoRelate2(ex(a), ex(b), "ordering_equals"))
 
-  /** GeoEquals (geospatial.py:77): spatial equality — lines match under
-    * reversal, polygon rings under rotation + reversal. */
+  /** GeoEquals (geospatial.py:77): spatial (topological) equality —
+    * vertex order, ring start and winding do not matter. */
   def geoEquals(a: Column, b: Column): Column = co(GeoRelate2(ex(a), ex(b), "equals"))
 
   /** GeoCovers / GeoCoveredBy (geospatial.py:49,56): boundary-inclusive
@@ -167,8 +164,8 @@ object geo {
   def overlaps(a: Column, b: Column): Column =
     co(GeoRelate2(ex(a), ex(b), "overlaps"))
 
-  /** GeoBuffer (geospatial.py:362): POINT buffer as a 32-gon polygon
-    * (line/polygon offsetting is GEOS territory → null). */
+  /** GeoBuffer (geospatial.py:362): round caps and joins at 8 segments
+    * per quadrant (a point becomes a 32-gon), any geometry kind. */
   def buffer(g: Column, radius: Column): Column =
     co(GeoParam(ex(g), ex(radius.cast("double")), "buffer"))
 
@@ -205,34 +202,28 @@ object geo {
   def convert(g: Column, source: String, target: String): Column =
     co(GeoConvertCrs(ex(g), source, target))
 
-  /** GeoIntersection (geospatial.py:426), planar-exact cases: polygon ∩
-    * CONVEX polygon (Sutherland-Hodgman, operands swapped if only one is
-    * convex), line clipped to a convex polygon (single connected piece),
-    * point ∩ anything. Empty or GEOS-general → null. */
+  /** GeoIntersection (geospatial.py:426): any pair of geometries;
+    * touch-only polygons give their contact set. Empty → null. */
   def intersection(a: Column, b: Column): Column =
     co(GeoIntersectionExpr(ex(a), ex(b)))
 
-  /** GeoUnion (geospatial.py:195): polygon ∪ polygon over simple rings
-    * (disjoint → MULTIPOLYGON, containment → identity, overlap → boundary
-    * walk), point ∪ point → MULTIPOINT. Unsupported → null, never wrong. */
+  /** GeoUnion (geospatial.py:195): any pair of geometries; lineal
+    * results are merged at degree-2 nodes. */
   def union(a: Column, b: Column): Column = co(GeoSetOpExpr(ex(a), ex(b), "union"))
 
-  /** GeoDifference (geospatial.py:433): A − B over simple polygon rings —
-    * interior subtrahend becomes a hole, a splitting subtrahend yields a
-    * MULTIPOLYGON; A − point/line = A. Empty/unsupported → null. */
+  /** GeoDifference (geospatial.py:433): A − B for any pair; A − a
+    * lower-dimension B = A. Empty → null. */
   def difference(a: Column, b: Column): Column =
     co(GeoSetOpExpr(ex(a), ex(b), "difference"))
 
-  /** GeoUnaryUnion (geospatial.py:186): fold [[union]] over a collection's
-    * members. */
+  /** GeoUnaryUnion (geospatial.py:186): dissolve a collection's members. */
   def unaryUnion(g: Column): Column = co(GeoTransform(ex(g), "unary_union"))
 
   /** GeoLineMerge (geospatial.py:131): stitch MULTILINESTRING members at
     * shared endpoints into maximal linestrings. */
   def lineMerge(g: Column): Column = co(GeoTransform(ex(g), "line_merge"))
 
-  /** GeoConvexHull (geospatial.py:95): monotone-chain hull of any
-    * geometry's vertex cloud (Multi* included); point/line degenerate
-    * outputs follow PostGIS. */
+  /** GeoConvexHull (geospatial.py:95): hull of any geometry (Multi*
+    * included); point/line degenerate outputs follow PostGIS. */
   def convexHull(g: Column): Column = co(GeoTransform(ex(g), "convex_hull"))
 }

@@ -384,8 +384,9 @@ object CoverageQueries {
     // Polygon geometry e2e (exts/GeoGeometry.scala; geospatial.py:28,102,
     // 242,373,381,76,202): a data-driven rectangle zone per nation —
     // area/perimeter/centroid/envelope/n_points through real WKB
-    // construction, point-in-polygon containment (ray casting), and
-    // point↔centroid distance. The oracle mirrors each measure with plain
+    // construction, point-in-polygon containment (ST_Contains: a point on
+    // the zone's boundary is not inside, hence the oracle's strict bounds;
+    // py = k + 2.5 never lies on an edge), and point↔centroid distance. The oracle mirrors each measure with plain
     // rectangle math: every value is exact integer-or-half-grid double
     // arithmetic on both engines (shoelace sums, perfect-square sqrts and
     // the centroid's integer/integer division are all IEEE-exact), so the
@@ -441,7 +442,7 @@ object CoverageQueries {
         (x0 + x1) / 2.0 AS cx, (y0 + y1) / 2.0 AS cy,
         (x1 - x0) * (y1 - y0) AS env_area,
         5 AS npts, 'POLYGON' AS gtype,
-        COUNT(CASE WHEN px BETWEEN x0 AND x1 THEN 1 END) AS n_inside,
+        COUNT(CASE WHEN px > x0 AND px < x1 THEN 1 END) AS n_inside,
         MIN(SQRT((px - (x0 + x1) / 2.0) * (px - (x0 + x1) / 2.0) +
                  (py - (y0 + y1) / 2.0) * (py - (y0 + y1) / 2.0))) AS min_dist_c
       FROM pts
@@ -1234,8 +1235,9 @@ object CoverageQueries {
     // 32-gon (16r²sin(π/16)); right-angle L path: 2rL − r² (reflex
     // double-count) + caps + one 8-step wedge (4r²sin(π/16)); square:
     // A + Pr + four 8-step corner wedges (= a full 32-gon). The U-shaped
-    // probe whose arms sit closer than 2r exercises the simplicity
-    // refusal (null, never a wrong geometry).
+    // probe's arms sit closer than 2r, so its offsets overlap: the buffer
+    // is their union, one valid polygon whose area lies between the
+    // [-2,5]x[0,10] band plus the [0,3]x[10,12] cap (76) and the bbox (98).
     QueryDef("q79b_geo_buffer", (s, dir) => {
       import graft.functions.geo
       val k = col("n_nationkey")
@@ -1258,7 +1260,9 @@ object CoverageQueries {
         round(geo.area(geo.buffer(lpath, r2)), 6).as("l_area"),
         round(geo.area(geo.buffer(sq, r)), 6).as("sq_area"),
         geo.contains(geo.buffer(line0, r), geo.point(kd, lit(0.0))).as("covers_start"),
-        geo.buffer(uline, lit(2.0)).isNull.as("self_touch_null"),
+        geo.isValid(geo.buffer(uline, lit(2.0))).as("u_valid"),
+        geo.geometryType(geo.buffer(uline, lit(2.0))).as("u_type"),
+        geo.area(geo.buffer(uline, lit(2.0))).between(76.0, 98.0).as("u_area_bounded"),
         geo.geometryType(geo.buffer(sq, r)).as("t"))
         .sort(SortKey.asc(col("n_nationkey")))
         .df
@@ -1273,7 +1277,9 @@ object CoverageQueries {
         ROUND(2 * r2 * 8 - r2 * r2 + 20 * r2 * r2 * SIN(PI() / 16.0), 6) AS l_area,
         ROUND(16 + 16 * r + 16 * r * r * SIN(PI() / 16.0), 6) AS sq_area,
         TRUE AS covers_start,
-        TRUE AS self_touch_null,
+        TRUE AS u_valid,
+        'POLYGON' AS u_type,
+        TRUE AS u_area_bounded,
         'POLYGON' AS t
       FROM t ORDER BY 1""")),
 

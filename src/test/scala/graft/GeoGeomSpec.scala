@@ -67,13 +67,14 @@ class GeoGeomSpec extends SparkSpec {
     // concave L-shape: 10x10 square minus the 5x5 top-right quadrant
     val lshape = geo.makePolygon(pts(
       (0.0, 0.0), (10.0, 0.0), (10.0, 5.0), (5.0, 5.0), (5.0, 10.0), (0.0, 10.0)))
+    // (px, py, contains, covers)
     val cases = Seq(
-      (2.0, 2.0, true),   // interior
-      (7.0, 7.0, false),  // inside bbox, but in the notch
-      (0.0, 0.0, true),   // corner (boundary inclusive)
-      (5.0, 7.5, true),   // on the notch edge
-      (11.0, 5.0, false)) // exterior
-    cases.foreach { case (px, py, want) =>
+      (2.0, 2.0, true, true),    // interior
+      (7.0, 7.0, false, false),  // inside bbox, but in the notch
+      (0.0, 0.0, false, true),   // corner: boundary, so ST_Covers only
+      (5.0, 7.5, false, true),   // on the notch edge: boundary again
+      (11.0, 5.0, false, false)) // exterior
+    cases.foreach { case (px, py, want, wantCovers) =>
       val got = Seq(1).toDF("i")
         .select(geo.contains(lshape, geo.point(lit(px), lit(py))).as("c"))
         .collect().head.getBoolean(0)
@@ -82,6 +83,10 @@ class GeoGeomSpec extends SparkSpec {
         .select(geo.within(geo.point(lit(px), lit(py)), lshape).as("w"))
         .collect().head.getBoolean(0)
       assert(gotW == want)
+      val gotC = Seq(1).toDF("i")
+        .select(geo.covers(lshape, geo.point(lit(px), lit(py))).as("cv"))
+        .collect().head.getBoolean(0)
+      assert(gotC == wantCovers, s"($px,$py) covers expected $wantCovers")
     }
   }
 

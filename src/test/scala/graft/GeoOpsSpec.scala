@@ -229,22 +229,37 @@ class GeoOpsSpec extends SparkSpec {
     assert(r.getBoolean(3)) // reflex elbow interior is covered
   }
 
-  test("buffer refuses what offsetting can't keep simple; multis union-fold") {
+  test("buffer resolves self-overlapping offsets; multis union") {
     val u = geo.makeLine(pts((0.0, 0.0), (0.0, 10.0), (3.0, 10.0), (3.0, 0.0)))
     val hole = geo.makePolygon(pts((0.0, 0.0), (4.0, 4.0), (4.0, 0.0), (0.0, 4.0)))
     val mp = geo.collectGeoms(pts((0.0, 0.0), (20.0, 0.0)))
+    // arms 3 apart, r=2: the offsets overlap, the gap between the arms
+    // fills (no hole); the area lies between [-2,5]x[0,10] plus the top
+    // band [0,3]x[10,12] (76) and the bbox [-2,5]x[-2,12] (98)
+    val self = geo.buffer(u, lit(2.0))
+    // the bowtie is an invalid input; its buffer is still a valid polygon
+    // inside the 5x5 envelope of the bowtie's own buffer
+    val bow = geo.buffer(hole, lit(0.5))
     val r = one.select(
-      geo.buffer(u, lit(2.0)).isNull.as("self"),     // arms 3 apart, r=2: overlap
-      geo.buffer(u, lit(1.0)).isNotNull.as("ok"),    // r=1 stays simple
-      geo.buffer(hole, lit(0.5)).isNull.as("bowtie"),
+      geo.isValid(self).as("self_valid"),
+      geo.geometryType(self).as("self_t"),
+      geo.nRings(self).as("self_nr"),
+      geo.area(self).as("self_a"),
+      geo.buffer(u, lit(1.0)).isNotNull.as("ok"),    // r=1: no overlap at all
+      geo.isValid(bow).as("bow_valid"),
+      geo.geometryType(bow).as("bow_t"),
+      geo.area(bow).as("bow_a"),
       geo.area(geo.buffer(mp, lit(1.0))).as("mp"),
       geo.geometryType(geo.buffer(mp, lit(1.0))).as("mpt"))
       .collect().head
-    assert(r.getBoolean(0))
-    assert(r.getBoolean(1))
-    assert(r.getBoolean(2))
-    assert(math.abs(r.getDouble(3) - 2 * fan(32, 1.0)) < 1e-9)
-    assert(r.getString(4) == "MULTIPOLYGON")
+    assert(r.getBoolean(0) && r.getString(1) == "POLYGON" && r.getInt(2) == 1)
+    assert(r.getDouble(3) > 76.0 && r.getDouble(3) < 98.0, s"U buffer area ${r.getDouble(3)}")
+    assert(r.getBoolean(4))
+    assert(r.getBoolean(5) && r.getString(6) == "POLYGON")
+    assert(r.getDouble(7) > 0.0 && r.getDouble(7) < 25.0, s"bowtie buffer area ${r.getDouble(7)}")
+    val (mpArea, mpType) = (r.getDouble(8), r.getString(9))
+    assert(math.abs(mpArea - 2 * fan(32, 1.0)) < 1e-9)
+    assert(mpType == "MULTIPOLYGON")
   }
 
   test("srid/setSrid/asBinary/asEWKB/asEWKT roundtrip") {

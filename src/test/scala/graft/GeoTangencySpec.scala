@@ -2,15 +2,14 @@ package graft
 
 import graft.exts.{GeoGeom, GeoGeomOps}
 
-/** Collinear-overlap tangency battery for the polygon set-op stitcher
+/** Collinear-overlap tangency battery for the polygon set ops
   * (exts/GeoGeometryOps.scala): operands sharing partial edge stretches,
   * hole-boundary tangencies, corridors that reconnect holes to shells,
   * and mixed areal+linear intersection outputs. Expected areas are
   * hand-computed (inclusion-exclusion over axis-aligned pieces); contact
   * sets are checked by length/endpoints so redundant collinear vertices
-  * don't over-constrain. All coordinates are exactly representable, so
-  * every predicate here is exact double arithmetic — the remaining
-  * null class is INEXACT near-collinear tangency only (DIVERGENCES §1).
+  * don't over-constrain. All coordinates are exactly representable;
+  * INEXACT near-collinear tangency is covered in GeoJtsSpec.
   */
 class GeoTangencySpec extends org.scalatest.funsuite.AnyFunSuite {
 

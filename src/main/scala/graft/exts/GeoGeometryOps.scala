@@ -31,9 +31,9 @@ import org.locationtech.jts.simplify.DouglasPeuckerSimplifier
   * Topology (DE-9IM predicates, set ops, buffer, simplify, merge, hull,
   * validity, linear referencing) is JTS 1.20 through [[GeoJts]], the
   * same engine Apache Sedona wraps. graft's own code keeps the SRID/EWKB
-  * plumbing, azimuth, maxDistance, orderingEquals and the reprojections
-  * ([[ProjEngine]], UTM, [[GeoProjections]]). What each op accepts and
-  * where it returns null is listed in DIVERGENCES.md §1 and COVERAGE.md.
+  * plumbing, azimuth, maxDistance and orderingEquals; every reprojection
+  * runs on [[ProjEngine]]. What each op accepts and where it returns null
+  * is listed in DIVERGENCES.md §1 and COVERAGE.md.
   */
 object GeoGeomOps {
   import GeoGeom.parse
@@ -86,15 +86,28 @@ object GeoGeomOps {
     if (s != null && s.intValue() != 0) s"SRID=${s.intValue()};$t" else t
   }
 
+  /** PostGIS ST_NRings: every polygon's rings, shells included, summed
+    * over MULTIPOLYGON and GEOMETRYCOLLECTION members; 0 without polygons. */
   def nRings(bytes: Array[Byte]): java.lang.Integer = {
+    def count(g: GeoGeom.Geom): Int = g.kind match {
+      case 3 => g.rings.length
+      case 6 | 7 => g.parts.map(count).sum
+      case _ => 0
+    }
     val g = parse(bytes)
-    if (g == null) null else if (g.kind == 3) g.rings.length else 0
+    if (g == null) null else count(g)
   }
 
-  /** GeometryN, 0-indexed: single geometries are their own only element
-    * (multi-geometry collections are out of scope for the WKB model). */
-  def geometryN(bytes: Array[Byte], n: Int): Array[Byte] =
-    if (n == 0) asBinary(bytes) else null
+  /** GeometryN, 0-indexed: the n-th member of a Multi* or
+    * GEOMETRYCOLLECTION, a single geometry is its own element 0; null
+    * when n is out of range. The output carries no SRID. */
+  def geometryN(bytes: Array[Byte], n: Int): Array[Byte] = {
+    val g = parse(bytes)
+    if (g == null) null
+    else if (g.parts == null) { if (n == 0) GeoGeom.write(g) else null }
+    else if (n >= 0 && n < g.parts.length) GeoGeom.write(g.parts(n))
+    else null
+  }
 
   // ---- point measures --------------------------------------------------
 
@@ -237,78 +250,15 @@ object GeoGeomOps {
   def buffer(bytes: Array[Byte], r: Double): Array[Byte] =
     GeoJts.unary(bytes)(BufferOp.bufferOp(_, r))
 
-  private final val EarthR = 6378137.0
-
-  /** Is this SRID one geo_transform can reproject? The closed-form
-    * legacy set (4326, 3857 web mercator, UTM 326zz/327zz, and the
-    * [[GeoProjections]] trio 3035/5070/2154) plus everything in
-    * [[ProjEngine]]'s curated EPSG table (state planes, OSGB, polar
-    * stereographic, ED50/ETRS89/NAD83 UTM, ...). */
-  def supportedSrid(srid: Int): Boolean =
-    legacySrid(srid) || ProjEngine.knownEpsg(srid)
-
-  private def legacySrid(srid: Int): Boolean =
-    srid == 4326 || srid == 3857 ||
-      (srid >= 32601 && srid <= 32660) || (srid >= 32701 && srid <= 32760) ||
-      GeoProjections.Srids.contains(srid)
-
-  /** srid → 4326 lon/lat. */
-  private def toGeo(srid: Int): (Double, Double) => (Double, Double) = srid match {
-    case 4326 => (x, y) => (x, y)
-    case 3857 => (x, y) =>
-      (math.toDegrees(x / EarthR),
-       math.toDegrees(2.0 * math.atan(math.exp(y / EarthR)) - math.Pi / 2.0))
-    case s if GeoProjections.Srids.contains(s) => GeoProjections.inverse(s)
-    case utm => TransverseMercator.utmInverse(utm)
-  }
-
-  /** 4326 lon/lat → srid. */
-  private def fromGeo(srid: Int): (Double, Double) => (Double, Double) = srid match {
-    case 4326 => (x, y) => (x, y)
-    case 3857 => (lon, lat) =>
-      (EarthR * math.toRadians(lon),
-       EarthR * math.log(math.tan(math.Pi / 4.0 + math.toRadians(lat) / 2.0)))
-    case s if GeoProjections.Srids.contains(s) => GeoProjections.forward(s)
-    case utm => TransverseMercator.utmForward(utm)
-  }
-
-  /** Reproject every coordinate between supported CRSs (4326 ↔ 3857 ↔ any
-    * UTM zone ↔ LAEA/Albers/Lambert-93 — non-4326 pairs hop through
-    * lon/lat); output carries the target SRID as EWKB. Multi* /
-    * GeometryCollection inputs reproject each member. Unsupported
-    * (from, to) → IllegalArgumentException (caught at plan time by
-    * GeoProject's type check). */
-  def transform(bytes: Array[Byte], fromSrid: Int, toSrid: Int): Array[Byte] = {
+  /** Reproject every vertex with `fn` (null: keep the coordinates) and
+    * tag the output with `dstSrid` as EWKB (untagged WKB unless positive).
+    * Multi* / GeometryCollection inputs reproject each member. The map
+    * comes from [[GeoReproject]], which resolves it once per expression. */
+  def reproject(bytes: Array[Byte], fn: (Double, Double) => (Double, Double),
+      dstSrid: Int): Array[Byte] = {
     val g = parse(bytes)
     if (g == null) return null
-    if (fromSrid == toSrid) return setSrid(GeoGeom.write(g), toSrid)
-    require(supportedSrid(fromSrid) && supportedSrid(toSrid),
-      s"geo_transform supports EPSG 4326/3857/UTM(326zz,327zz)/3035/5070/2154 " +
-        s"and the ProjEngine EPSG table, got ($fromSrid, $toSrid)")
-    // SRIDs outside the closed-form legacy set route through the
-    // parameter-driven engine (identical math family, datum shifts incl.)
-    if (!legacySrid(fromSrid) || !legacySrid(toSrid))
-      return convertCrs(bytes, s"EPSG:$fromSrid", s"EPSG:$toSrid")
-    val to4326 = toGeo(fromSrid)
-    val from4326 = fromGeo(toSrid)
-    val fn: (Double, Double) => (Double, Double) =
-      if (fromSrid == 4326) from4326
-      else if (toSrid == 4326) to4326
-      else (x, y) => { val (lon, lat) = to4326(x, y); from4326(lon, lat) }
-    setSrid(GeoGeom.write(mapCoords(g, fn)), toSrid)
-  }
-
-  /** GeoConvert (geospatial.py:459): reproject between ANY two CRSs
-    * [[ProjEngine]] can parse — "EPSG:n" from the curated table or a
-    * "+proj=..." published-parameter string — including Helmert datum
-    * shifts (+towgs84) and non-meter units. Output carries the target
-    * EPSG code as EWKB SRID when the target was given as a code. */
-  def convertCrs(bytes: Array[Byte], source: String, target: String): Array[Byte] = {
-    val g = parse(bytes)
-    if (g == null) return null
-    val fn = ProjEngine.transformerFor(source, target)
-    val out = GeoGeom.write(mapCoords(g, fn))
-    val dstSrid = ProjEngine.crs(target).srid
+    val out = GeoGeom.write(if (fn == null) g else mapCoords(g, fn))
     if (dstSrid > 0) setSrid(out, dstSrid) else out
   }
 
@@ -328,94 +278,6 @@ object GeoGeomOps {
     if (g.parts == null) new GeoGeom.Geom(g.kind, rings)
     else new GeoGeom.Geom(g.kind, rings, g.parts.map(mapCoords(_, fn)))
   }
-}
-
-/** WGS84 transverse mercator via the Krüger flattening series (Karney 2011
-  * arXiv:1002.1417 / OGP guidance note 7-2 — public formulas), 4th order in
-  * n: error well under a millimeter anywhere inside a UTM zone (the spec
-  * cross-checks against an independent Snyder-formula computation). */
-private[graft] object TransverseMercator {
-  private final val A0 = 6378137.0
-  private final val F = 1.0 / 298.257223563
-  private final val N = F / (2.0 - F)
-  private final val K0 = 0.9996
-  private final val FalseE = 500000.0
-  private final val FalseNSouth = 10000000.0
-  // rectifying radius
-  private final val A = A0 / (1.0 + N) * (1.0 + N * N / 4.0 + math.pow(N, 4) / 64.0)
-  // Krüger series coefficients (α forward, β inverse-to-conformal,
-  // δ conformal-to-geodetic), 4th order in n
-  private final val Al = Array(
-    N / 2.0 - 2.0 / 3.0 * N * N + 5.0 / 16.0 * pow3 + 41.0 / 180.0 * pow4,
-    13.0 / 48.0 * N * N - 3.0 / 5.0 * pow3 + 557.0 / 1440.0 * pow4,
-    61.0 / 240.0 * pow3 - 103.0 / 140.0 * pow4,
-    49561.0 / 161280.0 * pow4)
-  private final val Be = Array(
-    N / 2.0 - 2.0 / 3.0 * N * N + 37.0 / 96.0 * pow3 - 1.0 / 360.0 * pow4,
-    1.0 / 48.0 * N * N + 1.0 / 15.0 * pow3 - 437.0 / 1440.0 * pow4,
-    17.0 / 480.0 * pow3 - 37.0 / 840.0 * pow4,
-    4397.0 / 161280.0 * pow4)
-  private final val De = Array(
-    2.0 * N - 2.0 / 3.0 * N * N - 2.0 * pow3 + 116.0 / 45.0 * pow4,
-    7.0 / 3.0 * N * N - 8.0 / 5.0 * pow3 - 227.0 / 45.0 * pow4,
-    56.0 / 15.0 * pow3 - 136.0 / 35.0 * pow4,
-    4279.0 / 630.0 * pow4)
-  private def pow3 = N * N * N
-  private def pow4 = N * N * N * N
-  private final val TwoSqrtN = 2.0 * math.sqrt(N) / (1.0 + N)
-
-  /** (zone central meridian degrees, southern false northing) of a UTM SRID. */
-  private def zoneOf(srid: Int): (Double, Double) = {
-    val south = srid >= 32701
-    val zone = srid - (if (south) 32700 else 32600)
-    (zone * 6.0 - 183.0, if (south) FalseNSouth else 0.0)
-  }
-
-  def utmForward(srid: Int): (Double, Double) => (Double, Double) = {
-    val (lon0, n0) = zoneOf(srid)
-    (lon, lat) => {
-      val phi = math.toRadians(lat)
-      val lam = math.toRadians(lon - lon0)
-      val s = math.sin(phi)
-      val t = math.sinh(atanh(s) - TwoSqrtN * atanh(TwoSqrtN * s))
-      val xiP = math.atan2(t, math.cos(lam))
-      val etaP = atanh(math.sin(lam) / math.sqrt(1.0 + t * t))
-      var xi = xiP; var eta = etaP
-      var j = 1
-      while (j <= 4) {
-        xi += Al(j - 1) * math.sin(2.0 * j * xiP) * math.cosh(2.0 * j * etaP)
-        eta += Al(j - 1) * math.cos(2.0 * j * xiP) * math.sinh(2.0 * j * etaP)
-        j += 1
-      }
-      (FalseE + K0 * A * eta, n0 + K0 * A * xi)
-    }
-  }
-
-  def utmInverse(srid: Int): (Double, Double) => (Double, Double) = {
-    val (lon0, n0) = zoneOf(srid)
-    (e, nn) => {
-      val xi = (nn - n0) / (K0 * A)
-      val eta = (e - FalseE) / (K0 * A)
-      var xiP = xi; var etaP = eta
-      var j = 1
-      while (j <= 4) {
-        xiP -= Be(j - 1) * math.sin(2.0 * j * xi) * math.cosh(2.0 * j * eta)
-        etaP -= Be(j - 1) * math.cos(2.0 * j * xi) * math.sinh(2.0 * j * eta)
-        j += 1
-      }
-      val chi = math.asin(math.sin(xiP) / math.cosh(etaP))
-      var phi = chi
-      j = 1
-      while (j <= 4) {
-        phi += De(j - 1) * math.sin(2.0 * j * chi)
-        j += 1
-      }
-      val lam = math.atan2(math.sinh(etaP), math.cos(xiP))
-      (lon0 + math.toDegrees(lam), math.toDegrees(phi))
-    }
-  }
-
-  private def atanh(x: Double): Double = 0.5 * math.log((1.0 + x) / (1.0 - x))
 }
 
 // ---- Catalyst expressions ------------------------------------------------
@@ -669,50 +531,26 @@ case class GeoLineSubstring(first: Expression, second: Expression, third: Expres
       t: Expression): Expression = copy(first = f, second = s, third = t)
 }
 
-/** `geo_transform(g, fromSrid, toSrid)` — closed-form 4326 ↔ 3857 ↔ any
-  * UTM zone (EPSG:326zz/327zz, Krüger series); non-4326 pairs hop through
-  * lon/lat. */
-case class GeoProject(child: Expression, fromSrid: Int, toSrid: Int)
+/** `geo_transform(g, fromSrid, toSrid)` (GeoTransform, geospatial.py:450)
+  * and `geo_convert(g, source, target)` (GeoConvert :459): reproject every
+  * vertex through [[ProjEngine]] between two CRS specs, "EPSG:n" from its
+  * curated table or a "+proj=..." published-parameter string (datum
+  * shifts and units included). geo_transform names its CRSs by SRID
+  * (`bySrid`, specs "EPSG:n") and, for equal SRIDs, only sets the SRID,
+  * whether or not the table knows it. The output carries the target EPSG
+  * code as EWKB SRID; a "+proj=..." target gives untagged WKB. Specs the
+  * engine cannot parse fail at plan time via the type check, never per
+  * row; the vertex map is resolved once per expression instance. */
+case class GeoReproject(child: Expression, source: String, target: String, bySrid: Boolean)
     extends UnaryExpression {
-  override def prettyName: String = "geo_transform"
+  override def prettyName: String = if (bySrid) "geo_transform" else "geo_convert"
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
+  private def sridOnly = bySrid && source == target
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != BinaryType)
       TypeCheckResult.TypeCheckFailure(s"$prettyName requires binary WKB input")
-    else if (fromSrid == toSrid ||
-        (GeoGeomOps.supportedSrid(fromSrid) && GeoGeomOps.supportedSrid(toSrid)))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName supports EPSG 4326/3857/UTM(326zz,327zz), got ($fromSrid, $toSrid)")
-  override def nullSafeEval(v: Any): Any =
-    GeoGeomOps.transform(v.asInstanceOf[Array[Byte]], fromSrid, toSrid)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      val r = ctx.freshName("r")
-      s"""
-        byte[] $r = graft.exts.GeoGeomOps.transform($b, $fromSrid, $toSrid);
-        if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      """
-    })
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `geo_convert(g, source, target)` — GeoConvert (geospatial.py:459)
-  * between ANY two CRS specs [[ProjEngine]] parses: "EPSG:n" (curated
-  * table) or a "+proj=..." published-parameter string (tmerc/utm/lcc/
-  * aea/laea/merc/polar-stere on any registry ellipsoid, +towgs84 Helmert
-  * datum shifts, +units). Bad specs fail at PLAN time via the type
-  * check, never per-row. */
-case class GeoConvertCrs(child: Expression, source: String, target: String)
-    extends UnaryExpression {
-  override def prettyName: String = "geo_convert"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires binary WKB input")
+    else if (sridOnly) TypeCheckResult.TypeCheckSuccess
     else try {
       ProjEngine.crs(source); ProjEngine.crs(target)
       TypeCheckResult.TypeCheckSuccess
@@ -720,19 +558,32 @@ case class GeoConvertCrs(child: Expression, source: String, target: String)
       case e: IllegalArgumentException =>
         TypeCheckResult.TypeCheckFailure(s"$prettyName: ${e.getMessage}")
     }
-  override def nullSafeEval(v: Any): Any =
-    GeoGeomOps.convertCrs(v.asInstanceOf[Array[Byte]], source, target)
+
+  @transient private lazy val fn: (Double, Double) => (Double, Double) =
+    if (sridOnly) null
+    else ProjEngine.transformer(ProjEngine.crs(source), ProjEngine.crs(target))
+  @transient private lazy val dstSrid: Int =
+    if (sridOnly) target.stripPrefix("EPSG:").toInt else ProjEngine.crs(target).srid
+
+  def reproject(bytes: Array[Byte]): Array[Byte] = GeoGeomOps.reproject(bytes, fn, dstSrid)
+
+  override def nullSafeEval(v: Any): Any = reproject(v.asInstanceOf[Array[Byte]])
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val srcRef = ctx.addReferenceObj("src", source, "java.lang.String")
-    val dstRef = ctx.addReferenceObj("dst", target, "java.lang.String")
+    val self = ctx.addReferenceObj("reproject", this, classOf[GeoReproject].getName)
     nullSafeCodeGen(ctx, ev, b => {
       val r = ctx.freshName("r")
       s"""
-        byte[] $r = graft.exts.GeoGeomOps.convertCrs($b, $srcRef, $dstRef);
+        byte[] $r = $self.reproject($b);
         if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
       """
     })
   }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object GeoReproject {
+  /** geo_transform: integer SRIDs as "EPSG:n" specs. */
+  def bySrid(child: Expression, fromSrid: Int, toSrid: Int): GeoReproject =
+    GeoReproject(child, s"EPSG:$fromSrid", s"EPSG:$toSrid", bySrid = true)
 }

@@ -202,16 +202,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectFunction((
       FunctionIdentifier("geo_transform"),
-      new ExpressionInfo(classOf[GeoProject].getName, "geo_transform"),
+      new ExpressionInfo(classOf[GeoReproject].getName, "geo_transform"),
       // SRIDs are constants by nature — literal args only (eval at build)
-      (children: Seq[Expression]) => GeoProject(children(0),
+      (children: Seq[Expression]) => GeoReproject.bySrid(children(0),
         children(1).eval().toString.toInt, children(2).eval().toString.toInt)))
     ext.injectFunction((
       FunctionIdentifier("geo_convert"),
-      new ExpressionInfo(classOf[GeoConvertCrs].getName, "geo_convert"),
+      new ExpressionInfo(classOf[GeoReproject].getName, "geo_convert"),
       // CRS specs are constants by nature — literal string args only
-      (children: Seq[Expression]) => GeoConvertCrs(children(0),
-        children(1).eval().toString, children(2).eval().toString)))
+      (children: Seq[Expression]) => GeoReproject(children(0),
+        children(1).eval().toString, children(2).eval().toString, bySrid = false)))
     ext.injectOptimizerRule(_ => AnchoredRegexSimplification)
   }
 }

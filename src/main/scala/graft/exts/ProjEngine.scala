@@ -2,8 +2,9 @@ package graft.exts
 
 import java.util.concurrent.ConcurrentHashMap
 
-/** Parameter-driven CRS engine for `geo_convert` (reference surface:
-  * GeoConvert, ibis/expr/operations/geospatial.py:459 — its own doc
+/** Parameter-driven CRS engine for `geo_transform` and `geo_convert`
+  * (reference surface: GeoTransform/GeoConvert,
+  * ibis/expr/operations/geospatial.py:450/:459 — GeoConvert's own doc
   * example converts "EPSG:2263", a NAD83 state-plane Lambert in US
   * survey feet). Instead of a proj database, any CRS is definable from
   * its PUBLISHED parameters as a proj-style string:
@@ -35,9 +36,9 @@ import java.util.concurrent.ConcurrentHashMap
   * Helmert transformation (EPSG 9606) through geocentric coordinates —
   * so OSGB36/ED50/Belgian-72 style CRSs convert correctly, not just the
   * centimeter-level WGS84/GRS80 family. Absent towgs84 on both sides is
-  * treated as the same datum family (the convention geo_transform always
-  * used). Units: `+units=m|km|ft|us-ft` or `+to_meter=`; false origins
-  * are meters (proj convention), unit conversion applies last.
+  * treated as the same datum family. Units: `+units=m|km|ft|us-ft` or
+  * `+to_meter=`; false origins are meters (proj convention), unit
+  * conversion applies last.
   *
   * A curated EPSG table maps common codes to their published parameter
   * strings so `geo_convert(g, "EPSG:27700", "EPSG:4326")` just works;
@@ -223,14 +224,20 @@ private[graft] object ProjEngine {
         ((lon, lat) => (lon, lat), (x, y) => (x, y))
 
       case "merc" =>
-        // EPSG 9804; k0 from +lat_ts when given (m(φ1)), else +k
+        // EPSG 9804; k0 from +lat_ts when given (m(φ1)), else +k. On a
+        // sphere (web mercator) the closed forms y = R ln tan(π/4 + φ/2)
+        // and φ = 2 atan(exp(y/R)) − π/2 (Snyder 7-2, 7-4).
         val k0 = num("lat_ts").map(ts => mFn(ell, math.toRadians(ts))).getOrElse(k0u)
         ((lon, lat) => {
           val phi = math.toRadians(lat)
-          (a * k0 * (math.toRadians(lon) - lon0), -a * k0 * math.log(tFn(ell, phi)))
+          (a * k0 * (math.toRadians(lon) - lon0),
+           if (ell.e == 0.0) a * k0 * math.log(math.tan(math.Pi / 4.0 + phi / 2.0))
+           else -a * k0 * math.log(tFn(ell, phi)))
         }, (x, y) => {
-          val tv = math.exp(-y / (a * k0))
-          (math.toDegrees(lon0 + x / (a * k0)), math.toDegrees(phiFromT(ell, tv)))
+          val phi =
+            if (ell.e == 0.0) 2.0 * math.atan(math.exp(y / (a * k0))) - math.Pi / 2.0
+            else phiFromT(ell, math.exp(-y / (a * k0)))
+          (math.toDegrees(lon0 + x / (a * k0)), math.toDegrees(phi))
         })
 
       case "cea" =>
@@ -807,14 +814,12 @@ private[graft] object ProjEngine {
           }
         val s = epsgSpec(code).getOrElse(throw new IllegalArgumentException(
           s"EPSG:$code is not in the built-in table — pass its published " +
-            "parameters as a '+proj=...' string instead"))
+            "parameters to geo_convert as a '+proj=...' string instead"))
         buildCrs(s, code)
       }
     cache.putIfAbsent(key, built)
     built
   }
-
-  def knownEpsg(code: Int): Boolean = epsgSpec(code).isDefined
 
   // ---- datum shift (Helmert position vector, EPSG 9606) -------------------
 
@@ -867,15 +872,6 @@ private[graft] object ProjEngine {
   }
 
   // ---- end-to-end transformer ---------------------------------------------
-
-  private val xformCache =
-    new ConcurrentHashMap[(String, String), (Double, Double) => (Double, Double)]()
-
-  /** Cached spec-string → spec-string transformer (per-row hot path). */
-  def transformerFor(source: String, target: String)
-      : (Double, Double) => (Double, Double) =
-    xformCache.computeIfAbsent((source, target),
-      { k: (String, String) => transformer(crs(k._1), crs(k._2)) })
 
   /** (x, y) in `src` units → (x, y) in `dst` units, through the src
     * geodetic CRS, the WGS84 geocentric hub when either side declares a

@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.exts.{GeoConvertCrs, GeoCoord, GeoIntersectionExpr, GeoLineSubstring, GeoMake,
-  GeoSetOpExpr, GeoMeasure, GeoNPointsExpr, GeoParam, GeoPointN, GeoPointWkb, GeoProject,
-  GeoRelate, GeoRelate2, GeoText, GeoTransform, GeoUnaryMeta}
+import graft.exts.{GeoCoord, GeoIntersectionExpr, GeoLineSubstring, GeoMake, GeoSetOpExpr,
+  GeoMeasure, GeoNPointsExpr, GeoParam, GeoPointN, GeoPointWkb, GeoRelate, GeoRelate2,
+  GeoReproject, GeoText, GeoTransform, GeoUnaryMeta}
 
 /** Geospatial subset over WKB binary columns (SURVEY.md §2.4; reference
   * ops in ibis/expr/operations/geospatial.py). Euclidean planar semantics
@@ -187,11 +187,11 @@ object geo {
   def asEWKB(g: Column): Column = co(GeoUnaryMeta(ex(g), "as_ewkb"))
   def asEWKT(g: Column): Column = co(GeoText(ex(g), "as_ewkt"))
 
-  /** GeoTransform (geospatial.py:450): integer-SRID reprojection —
-    * 4326 ↔ 3857 ↔ UTM ↔ the published-parameter set, output tagged
-    * with the target SRID as EWKB. */
+  /** GeoTransform (geospatial.py:450): integer-SRID reprojection between
+    * any two codes in [[graft.exts.ProjEngine]]'s EPSG table, output
+    * tagged with the target SRID as EWKB; equal SRIDs only set it. */
   def transform(g: Column, fromSrid: Int, toSrid: Int): Column =
-    co(GeoProject(ex(g), fromSrid, toSrid))
+    co(GeoReproject.bySrid(ex(g), fromSrid, toSrid))
 
   /** GeoConvert (geospatial.py:459): string-CRS reprojection between any
     * two specs the parameter engine parses — "EPSG:n" from the curated
@@ -200,7 +200,7 @@ object geo {
     * Helmert datum shifts, +units=us-ft etc.). This is the reference's
     * own contract: its docs convert "EPSG:2263" state-plane feet. */
   def convert(g: Column, source: String, target: String): Column =
-    co(GeoConvertCrs(ex(g), source, target))
+    co(GeoReproject(ex(g), source, target, bySrid = false))
 
   /** GeoIntersection (geospatial.py:426): any pair of geometries;
     * touch-only polygons give their contact set. Empty → null. */

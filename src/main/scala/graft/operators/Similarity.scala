@@ -17,13 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** dot(a, b) via zip_with + aggregate (left-to-right, deterministic) —
-    * the compose-from-built-ins fallback; [[dot]] uses the fused custom
-    * expression (graft.exts.DotProduct). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def dot(a: Column, b: Column): Column = graft.exts.exprs.dotProduct(a, b)
 
   def norm(a: Column): Column =
@@ -76,16 +69,9 @@ object Similarity {
       probes: DataFrame, probeId: String, probeVec: String,
       k: Int): DataFrame = {
     val p = broadcast(probes.select(col(probeId).as("probe_id"), col(probeVec).as("probe_vec")))
-    val scored = corpus
+    topK(corpus
       .select(col(corpusId).as("neighbor_id"), col(corpusVec).as("cv"))
-      .crossJoin(p)
-      .withColumn("cosine", cosine(col("cv"), col("probe_vec")))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc_nulls_last, col("neighbor_id").asc)
-    scored
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("neighbor_id"), col("cosine"), (col("rk") - 1).as("rank"))
+      .crossJoin(p), k)
   }
 
   /** LSH-bucketed approximate top-k: corpus and probes are both assigned
@@ -100,9 +86,16 @@ object Similarity {
       .withColumn("bucket", hyperplaneBucket(col("cv"), planes, seed))
     val p = broadcast(probes.select(col(probeId).as("probe_id"), col(probeVec).as("probe_vec"))
       .withColumn("bucket", hyperplaneBucket(col("probe_vec"), planes, seed)))
+    topK(c.join(p, Seq("bucket")), k)
+  }
+
+  /** Scores candidate (cv, probe_vec) pairs by cosine and keeps each
+    * probe's k best, ordered (cosine desc nulls last, neighbor_id asc),
+    * with a 0-based rank. */
+  private def topK(candidates: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("cosine").desc_nulls_last, col("neighbor_id").asc)
-    c.join(p, Seq("bucket"))
+    candidates
       .withColumn("cosine", cosine(col("cv"), col("probe_vec")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
@@ -207,12 +200,6 @@ object Similarity {
       .withColumn("cell", element_at(nearestCells(col("cv"), 1), 1))
     val p = broadcast(probes.select(col(probeId).as("probe_id"), col(probeVec).as("probe_vec"))
       .withColumn("cell", explode(nearestCells(col("probe_vec"), nProbe))))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc_nulls_last, col("neighbor_id").asc)
-    c.join(p, Seq("cell"))
-      .withColumn("cosine", cosine(col("cv"), col("probe_vec")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("probe_id"), col("neighbor_id"), col("cosine"), (col("rk") - 1).as("rank"))
+    topK(c.join(p, Seq("cell")), k)
   }
 }

@@ -957,7 +957,7 @@ object CoverageQueries {
         TRUE AS e_in_band
       FROM nation ORDER BY 1""")),
 
-    // Round-6 conic/azimuthal CRSs (GeoProjections: 2154 Lambert-93,
+    // Conic/azimuthal CRSs from ProjEngine's EPSG table (2154 Lambert-93,
     // 3035 LAEA, 5070 Albers). The Lambert-93 FORWARD is replayed in
     // self-contained SQL (closed-form Snyder LCC-2SP — constants n, F,
     // rho0 derived in the oracle from the same published parameters), and

@@ -7,7 +7,11 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * ([[graft.Bench.profile]]; cores from SPARK_GRAFT_CPUS, else all of
   * them). Each run is a noop-format write, as in the bench.
   *
-  * With no override it times that session `n` times (default 4). With
+  * With no override it times that session `n` times (default 12) and
+  * prints the median and interquartile range of runs 2..n: the first
+  * runs of a JVM time JIT warm-up (q74c_geo_setops on sf0.1, 4-core
+  * host: 0.86 s at run 2, 0.39 s at run 12), so a short loop mostly
+  * measures that. With
   * `k=v` SQLConf overrides it is an interleaved A/B: the BASE and OVERRIDE
   * arms alternate on the SAME session (runtime-settable SQLConfs only), so
   * a drifting host window hits both arms equally — an A/B across two JVMs
@@ -24,7 +28,7 @@ object AbProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir, name) = args.take(2)
     val (counts, kvs) = args.drop(2).toSeq.partition(!_.contains("="))
-    val n = counts.headOption.map(_.toInt).getOrElse(4)
+    val n = counts.headOption.map(_.toInt).getOrElse(12)
     val overrides = kvs.map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
     val cores = Sessions.cores(Runtime.getRuntime.availableProcessors)
     val spark = Sessions.local(cores, Bench.profile(cores, new java.io.File(dir).getName, dir))
@@ -42,9 +46,20 @@ object AbProbe {
       (dt, dc)
     }
     if (overrides.isEmpty) {
-      for (i <- 1 to n) {
+      val ts = (1 to n).map { i =>
         val (t, c) = once()
         println(f"[ab] $name run $i: $t%.2f s, $c classes compiled")
+        t
+      }
+      if (n >= 2) {
+        val warm = ts.tail.sorted
+        // linear interpolation between closest ranks
+        def q(p: Double): Double = {
+          val h = p * (warm.size - 1); val lo = h.toInt
+          warm(lo) + (h - lo) * (warm(math.min(lo + 1, warm.size - 1)) - warm(lo))
+        }
+        println(f"[ab] $name runs 2..$n: median ${q(0.5)}%.3f s, " +
+          f"IQR ${q(0.75) - q(0.25)}%.3f s [${q(0.25)}%.3f, ${q(0.75)}%.3f]")
       }
     } else {
       val baseVals = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }

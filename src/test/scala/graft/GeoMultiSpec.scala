@@ -579,4 +579,38 @@ class GeoMultiSpec extends SparkSpec {
     assert(r.getDouble(0) == 13.0)
     assert(r.getString(1).startsWith("MULTIPOLYGON ((("))
   }
+
+  test("geometry_n returns the n-th member of Multi* and collections, 0-indexed") {
+    val mp = geo.collectGeoms(array(geo.point(lit(0.0), lit(0.0)), geo.point(lit(1.0), lit(1.0))))
+    val gc = geo.collectGeoms(array(geo.point(lit(5.0), lit(5.0)), rect(0, 0, 2, 2)))
+    val line = geo.makeLine(pts((0.0, 0.0), (3.0, 4.0)))
+    val r = one.select(
+      geo.asText(geo.geometryN(mp, lit(0))).as("m0"),
+      geo.asText(geo.geometryN(mp, lit(1))).as("m1"),
+      geo.geometryN(mp, lit(2)).isNull.as("m2"),
+      geo.geometryN(mp, lit(-1)).isNull.as("mneg"),
+      geo.asText(geo.geometryN(gc, lit(1))).as("g1"),
+      geo.asText(geo.geometryN(line, lit(0))).as("l0"),
+      geo.geometryN(line, lit(1)).isNull.as("l1")).head()
+    assert(r.getString(0) == "POINT (0 0)")
+    assert(r.getString(1) == "POINT (1 1)")
+    assert(r.getBoolean(2) && r.getBoolean(3))
+    assert(r.getString(4) == "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")
+    assert(r.getString(5) == "LINESTRING (0 0, 3 4)")
+    assert(r.getBoolean(6))
+  }
+
+  test("nrings counts every polygon member's rings, as PostGIS ST_NRings") {
+    val holed = geo.difference(rect(0, 0, 10, 10), rect(4, 4, 2, 2)) // shell + hole
+    val mpoly = geo.collectGeoms(array(holed, rect(20, 0, 2, 2)))
+    val nested = geo.collectGeoms(array(geo.point(lit(50.0), lit(50.0)), mpoly))
+    val mpt = geo.collectGeoms(array(geo.point(lit(0.0), lit(0.0)), geo.point(lit(1.0), lit(1.0))))
+    val r = one.select(
+      geo.geometryType(mpoly).as("t"), geo.nRings(mpoly).as("n_mpoly"),
+      geo.geometryType(nested).as("tc"), geo.nRings(nested).as("n_nested"),
+      geo.nRings(mpt).as("n_mpt")).head()
+    assert(r.getString(0) == "MULTIPOLYGON" && r.getInt(1) == 3)
+    assert(r.getString(2) == "GEOMETRYCOLLECTION" && r.getInt(3) == 3)
+    assert(r.getInt(4) == 0)
+  }
 }

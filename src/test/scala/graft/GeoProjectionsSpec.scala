@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.exts.GeoProjections
+import graft.exts.ProjEngine
 import graft.functions.geo
 
-/** The round-6 conic/azimuthal CRSs (EPSG:3035 LAEA Europe, 5070 Conus
-  * Albers, 2154 Lambert-93): projection-origin anchors that the EPSG
+/** The conic/azimuthal CRSs of ProjEngine's EPSG table (EPSG:3035 LAEA
+  * Europe, 5070 Conus Albers, 2154 Lambert-93): projection-origin anchors that the EPSG
   * definitions fix EXACTLY (false easting/northing at the projection
   * center), forward∘inverse identity over each region, meridian-arc scale
   * sanity (a formula-level error shows up at km scale), and the
@@ -16,21 +16,27 @@ class GeoProjectionsSpec extends SparkSpec {
 
   private val one = Seq(1).toDF("i")
 
+  private def forward(srid: Int) = ProjEngine.crs(s"EPSG:$srid").fwd
+  private def inverse(srid: Int) = ProjEngine.crs(s"EPSG:$srid").inv
+  private val laeaForward = forward(3035)
+  private val albersForward = forward(5070)
+  private val lcc93Forward = forward(2154)
+
   test("projection centers map exactly onto their false origins") {
     // EPSG definitions: natural origin → (FE, FN) with zero error
-    val laea = GeoProjections.laeaForward(10.0, 52.0)
+    val laea = laeaForward(10.0, 52.0)
     assert(math.abs(laea._1 - 4321000.0) < 1e-6 && math.abs(laea._2 - 3210000.0) < 1e-6)
-    val alb = GeoProjections.albersForward(-96.0, 23.0)
+    val alb = albersForward(-96.0, 23.0)
     assert(math.abs(alb._1) < 1e-6 && math.abs(alb._2) < 1e-6)
-    val lcc = GeoProjections.lcc93Forward(3.0, 46.5)
+    val lcc = lcc93Forward(3.0, 46.5)
     assert(math.abs(lcc._1 - 700000.0) < 1e-6 && math.abs(lcc._2 - 6600000.0) < 1e-6)
   }
 
   test("forward∘inverse identity over each CRS's home region") {
     def roundtrip(srid: Int, lons: Seq[Double], lats: Seq[Double]): Unit =
       for (lon <- lons; lat <- lats) {
-        val (x, y) = GeoProjections.forward(srid)(lon, lat)
-        val (lon2, lat2) = GeoProjections.inverse(srid)(x, y)
+        val (x, y) = forward(srid)(lon, lat)
+        val (lon2, lat2) = inverse(srid)(x, y)
         assert(math.abs(lon2 - lon) < 1e-9 && math.abs(lat2 - lat) < 1e-9,
           s"$srid roundtrip ($lon,$lat) -> ($x,$y) -> ($lon2,$lat2)")
       }
@@ -48,9 +54,9 @@ class GeoProjectionsSpec extends SparkSpec {
     // window spans the projections' legitimate meridian-scale distortion
     // (Albers' h=1/k exceeds 1 between its standard parallels by ~1%)
     for ((d, tag) <- Seq(
-        (dy(GeoProjections.laeaForward, 10.0, 52.0), "laea"),
-        (dy(GeoProjections.albersForward, -96.0, 37.0), "albers"),
-        (dy(GeoProjections.lcc93Forward, 3.0, 46.5), "lcc")))
+        (dy(laeaForward, 10.0, 52.0), "laea"),
+        (dy(albersForward, -96.0, 37.0), "albers"),
+        (dy(lcc93Forward, 3.0, 46.5), "lcc")))
       assert(d > 110000.0 && d < 113000.0, s"$tag meridian step $d")
   }
 
@@ -78,8 +84,8 @@ class GeoProjectionsSpec extends SparkSpec {
     }
     def ellQuad(lat: Double): Double =
       math.toRadians(1.0) * a * a * (q(lat + 1) - q(lat)) / 2.0
-    val aL = quadArea(GeoProjections.laeaForward, 12.0, 48.0)
-    val aA = quadArea(GeoProjections.albersForward, -100.0, 40.0)
+    val aL = quadArea(laeaForward, 12.0, 48.0)
+    val aA = quadArea(albersForward, -100.0, 40.0)
     // the projected quad has straight edges where the graticule curves —
     // the chord approximation costs a few ppm at 1-degree cells
     assert(math.abs(aL / ellQuad(48.0) - 1.0) < 1e-4, s"LAEA area ratio ${aL / ellQuad(48.0)}")

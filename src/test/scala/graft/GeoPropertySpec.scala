@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.exts.{GeoGeom, GeoGeomOps, GeoWkb}
+import org.apache.spark.sql.catalyst.expressions.Literal
+
+import graft.exts.{GeoGeom, GeoGeomOps, GeoReproject, GeoWkb}
 
 /** Property-style invariants over the static geometry kernel (no Spark
   * session): seeded random int-grid rectangles, convex polygons and
@@ -260,7 +262,9 @@ class GeoPropertySpec extends AnyFunSuite {
       val lon = rnd.nextDouble() * 340 - 170
       val lat = rnd.nextDouble() * 160 - 80
       val p = GeoWkb.writePoint(lon, lat)
-      val back = GeoGeomOps.transform(GeoGeomOps.transform(p, 4326, 3857), 3857, 4326)
+      def transform(g: Array[Byte], from: Int, to: Int) =
+        GeoReproject.bySrid(Literal(g), from, to).eval().asInstanceOf[Array[Byte]]
+      val back = transform(transform(p, 4326, 3857), 3857, 4326)
       val c = GeoWkb.readPoint(GeoGeomOps.asBinary(back))
       assert(math.abs(c(0) - lon) < 1e-9 && math.abs(c(1) - lat) < 1e-9)
       assert(GeoGeomOps.srid(back).intValue() == 4326)

@@ -5,10 +5,10 @@ import graft.exts.{GeoGeomOps, ProjEngine, GeoGeom}
 /** The parameter-driven CRS engine (exts/ProjEngine.scala) verified four
   * independent ways:
   *
-  *  1. CROSS-IMPLEMENTATION: the generalized engines must agree with the
-  *     repo's existing hardcoded projections (Krüger UTM, Lambert-93,
-  *     Conus Albers, LAEA Europe — each already Snyder-cross-checked and
-  *     corpus-oracle-verified) to sub-micron at many points.
+  *  1. GOLDEN COORDINATES: the generalized engines must reproduce the
+  *     outputs of independent hand-written projections (Krüger UTM,
+  *     Lambert-93, Conus Albers, LAEA Europe — each Snyder-cross-checked
+  *     and corpus-oracle-verified) to sub-micron at many points.
   *  2. PUBLISHED WORKED EXAMPLES: OSGB National Grid test points from
   *     the OS coordinate-systems guide / EPSG Guidance Note 7-2, web
   *     mercator's closed form, UPS pole anchors.
@@ -25,53 +25,182 @@ class ProjEngineSpec extends SparkSpec {
 
   private def fwd(spec: String) = ProjEngine.crs(spec).fwd
   private def inv(spec: String) = ProjEngine.crs(spec).inv
+  private def transformerFor(source: String, target: String) =
+    ProjEngine.transformer(ProjEngine.crs(source), ProjEngine.crs(target))
   private def grid(lo: Double, hi: Double, step: Double): Seq[Double] =
     Iterator.iterate(lo)(_ + step).takeWhile(_ <= hi + 1e-12).toSeq
 
-  // ---- 1. cross-implementation agreement --------------------------------
+  // ---- 1. golden coordinates -------------------------------------------
+  // (lon, lat, x, y) from independent hand-written projections (the
+  // Krüger UTM series and Snyder's Lambert-93, Conus Albers and LAEA
+  // Europe formulas), computed once at these grid points.
+
+  private val Utm33N = Seq(
+    (12.0, -80.0, 441867.784867201, -8883084.955948174),
+    (12.0, -63.6, 351210.61229949305, -7055932.481133791),
+    (12.0, -47.2, 272783.61738930637, -5231756.303514236),
+    (12.0, -30.8, 212942.99380768306, -3411287.525391733),
+    (12.0, -14.4, 176465.4389342371, -1594072.8931648796),
+    (12.0, 2.0, 166223.90762323886, 221366.166030342),
+    (12.0, 18.4, 183019.1074778972, 2037062.0336425577),
+    (12.0, 34.8, 225536.54999218637, 3854967.2384950137),
+    (12.0, 51.2, 290418.00969548663, 5676343.883847493),
+    (12.0, 67.6, 372465.05386262655, 7501356.792741483),
+    (12.0, 84.0, 465005.34493886, 9329005.182447331),
+    (13.5, -80.0, 470924.52910072857, -8881960.653589336),
+    (13.5, -63.6, 425589.88570202247, -7053314.819952804),
+    (13.5, -47.2, 386388.85656439647, -5228481.073592274),
+    (13.5, -30.8, 356495.0604602031, -3408399.250950386),
+    (13.5, -14.4, 338281.6406562771, -1592491.5921982036),
+    (13.5, 2.0, 333169.41387473524, 221137.22062251938),
+    (13.5, 18.4, 341553.34825880744, 2035095.6886763293),
+    (13.5, 34.8, 362784.7963533681, 3851889.4124948755),
+    (13.5, 51.2, 395201.31038157514, 5673135.240771909),
+    (13.5, 67.6, 436217.01366366853, 7499040.9311178215),
+    (13.5, 84.0, 482496.8054508213, 9328321.70501815),
+    (15.0, -80.0, 500000.0, -8881585.815987969),
+    (15.0, -63.6, 500000.0, -7052442.303673656),
+    (15.0, -47.2, 500000.0, -5227389.774692412),
+    (15.0, -30.8, 500000.0, -3407437.2536511626),
+    (15.0, -14.4, 500000.0, -1591965.0557084864),
+    (15.0, 2.0, 500000.0, 221060.99359078595),
+    (15.0, 18.4, 500000.0, 2034440.9068764562),
+    (15.0, 34.8, 500000.0, 3850864.1906349286),
+    (15.0, 51.2, 500000.0, 5672066.026412612),
+    (15.0, 67.6, 500000.0, 7498268.954662959),
+    (15.0, 84.0, 500000.0, 9328093.830560401),
+    (16.5, -80.0, 529075.4708992718, -8881960.653589336),
+    (16.5, -63.6, 574410.1142979774, -7053314.819952804),
+    (16.5, -47.2, 613611.1434356035, -5228481.073592274),
+    (16.5, -30.8, 643504.9395397969, -3408399.250950386),
+    (16.5, -14.4, 661718.359343723, -1592491.5921982036),
+    (16.5, 2.0, 666830.5861252649, 221137.22062251938),
+    (16.5, 18.4, 658446.6517411927, 2035095.6886763293),
+    (16.5, 34.8, 637215.203646632, 3851889.4124948755),
+    (16.5, 51.2, 604798.6896184252, 5673135.240771909),
+    (16.5, 67.6, 563782.9863363312, 7499040.9311178215),
+    (16.5, 84.0, 517503.1945491788, 9328321.70501815),
+    (18.0, -80.0, 558132.215132799, -8883084.955948174),
+    (18.0, -63.6, 648789.3877005072, -7055932.481133791),
+    (18.0, -47.2, 727216.3826106938, -5231756.303514236),
+    (18.0, -30.8, 787057.0061923172, -3411287.525391733),
+    (18.0, -14.4, 823534.5610657627, -1594072.8931648796),
+    (18.0, 2.0, 833776.0923767611, 221366.166030342),
+    (18.0, 18.4, 816980.8925221029, 2037062.0336425577),
+    (18.0, 34.8, 774463.4500078137, 3854967.2384950137),
+    (18.0, 51.2, 709581.9903045133, 5676343.883847493),
+    (18.0, 67.6, 627534.9461373737, 7501356.792741483),
+    (18.0, 84.0, 534994.6550611403, 9329005.182447331))
+  private val Utm33S = Seq(
+    (15.0, -33.5, 500000.0, 6293280.7794957105))
+  private val Lambert93 = Seq(
+    (-4.0, 41.0, 109742.0865046226, 6014745.935602641),
+    (-4.0, 43.3, 132404.17144086096, 6269712.228287555),
+    (-4.0, 45.6, 155025.96801522118, 6524225.245190684),
+    (-4.0, 47.9, 177642.62271708495, 6778680.411981097),
+    (-4.0, 50.2, 200290.64741577208, 7033488.515926857),
+    (-1.3, 41.0, 337117.0614298217, 5998448.755721143),
+    (-1.3, 43.3, 351049.4184347288, 6254040.754671492),
+    (-1.3, 45.6, 364957.006675314, 6509178.365467537),
+    (-1.3, 47.9, 378861.43375912576, 6764257.984182384),
+    (-1.3, 50.2, 392785.1467116568, 7019691.406186633),
+    (1.4, 41.0, 564916.2751120167, 5989934.3244366385),
+    (1.4, 43.3, 570102.6161621294, 6245853.222460327),
+    (1.4, 45.6, 575279.7370021141, 6501317.151172762),
+    (1.4, 47.9, 580455.68109669, 6756723.013632828),
+    (1.4, 50.2, 585638.8043851805, 7012483.131892422),
+    (4.1, 41.0, 792873.4123156718, 5989212.595790391),
+    (4.1, 43.3, 789307.6741695241, 6245159.203524544),
+    (4.1, 45.6, 785748.2751465946, 6500650.792685477),
+    (4.1, 47.9, 782189.685165329, 6756084.309306898),
+    (4.1, 50.2, 778626.1593101299, 7011872.120085021),
+    (6.8, 41.0, 1020721.9731802079, 5996284.413540072),
+    (6.8, 43.3, 1008408.3244667379, 6251959.509226977),
+    (6.8, 45.6, 996116.5667988977, 6507180.069031275),
+    (6.8, 47.9, 983827.6030139608, 6762342.6179002905),
+    (6.8, 50.2, 971521.5940576677, 7017859.085085387))
+  private val ConusAlbers = Seq(
+    (-124.0, 25.0, -2819919.5132077145, 636573.3879087511),
+    (-124.0, 30.7, -2637266.1501348265, 1238463.426780805),
+    (-124.0, 36.4, -2452455.68392724, 1847461.6779942662),
+    (-124.0, 42.1, -2267024.2506871955, 2458506.176071276),
+    (-124.0, 47.8, -2082916.9776895852, 3065187.223914558),
+    (-112.7, 25.0, -1697693.904903937, 367671.23843609914),
+    (-112.7, 30.7, -1587729.9503489663, 986978.7538384777),
+    (-112.7, 36.4, -1476467.3414079843, 1613600.1788253412),
+    (-112.7, 42.1, -1364830.8877734877, 2242327.0649082847),
+    (-112.7, 47.8, -1253991.6266695468, 2866564.2313608853),
+    (-101.4, 25.0, -551493.5615915591, 233792.73039846122),
+    (-101.4, 30.7, -515771.9201525244, 861771.8974638488),
+    (-101.4, 36.4, -479628.412598197, 1497167.384749202),
+    (-101.4, 42.1, -443363.4621024107, 2134697.8141635014),
+    (-101.4, 47.8, -407357.47851855133, 2767675.658111453),
+    (-90.1, 25.0, 602494.94185965, 236828.48833321035),
+    (-90.1, 30.7, 563469.81123105, 864611.0216316916),
+    (-90.1, 36.4, 523983.8008781747, 1499807.5529409647),
+    (-90.1, 42.1, 484365.11670451664, 2137138.357882944),
+    (-90.1, 47.8, 445029.348353293, 2769918.002870879),
+    (-78.8, 25.0, 1747975.0466334617, 376735.6414425969),
+    (-78.8, 30.7, 1634754.25457195, 995456.0323949251),
+    (-78.8, 36.4, 1520196.3454633711, 1621483.3990983227),
+    (-78.8, 42.1, 1405253.5193837811, 2249614.2308495427),
+    (-78.8, 47.8, 1291131.4965401269, 2873259.599376329),
+    (-67.5, 25.0, 2868770.349027038, 651538.4290126786),
+    (-67.5, 30.7, 2682952.7930012913, 1252459.1440890152),
+    (-67.5, 36.4, 2494940.765295189, 1860476.6239683023),
+    (-67.5, 42.1, 2306297.013243021, 2470537.0552989393),
+    (-67.5, 47.8, 2119000.360504526, 3076241.0635866467))
+  private val LaeaEurope = Seq(
+    (-10.0, 35.0, 2498537.999600948, 1565571.7660226654),
+    (-10.0, 42.3, 2688188.6730765, 2351536.8732486237),
+    (-10.0, 49.6, 2895507.2500518467, 3138960.3429576056),
+    (-10.0, 56.9, 3119539.662094362, 3924564.0944202333),
+    (-10.0, 64.2, 3359369.2273404393, 4704968.702380642),
+    (-1.9, 35.0, 3227802.1108485255, 1412153.2531626094),
+    (-1.9, 42.3, 3341011.262109515, 2210405.8526814436),
+    (-1.9, 49.6, 3464937.7428406146, 3012576.79117259),
+    (-1.9, 56.9, 3599033.097621134, 3815380.715486073),
+    (-1.9, 64.2, 3742773.315843191, 4615440.908130808),
+    (6.2, 35.0, 3970525.8862277293, 1336460.2655493545),
+    (6.2, 42.3, 4006733.4374746927, 2140724.928221424),
+    (6.2, 49.6, 4046395.456874946, 2950128.0762272794),
+    (6.2, 56.9, 4089339.9289778466, 3761384.791310856),
+    (6.2, 64.2, 4135403.0203020973, 4571124.275370814),
+    (14.3, 35.0, 4717539.219779121, 1338872.7449351535),
+    (14.3, 42.3, 4676569.550651066, 2142946.3005502475),
+    (14.3, 49.6, 4631692.034943171, 2952119.389185545),
+    (14.3, 56.9, 4583101.435372168, 3763107.037704752),
+    (14.3, 64.2, 4530983.2700183755, 4572538.212369081),
+    (22.4, 35.0, 5459698.2737168195, 1419378.6821481816),
+    (22.4, 42.3, 5341750.228057918, 2217055.6589177046),
+    (22.4, 49.6, 5212644.5704227565, 3018534.7219675784),
+    (22.4, 56.9, 5072953.762387515, 3820530.6156414617),
+    (22.4, 64.2, 4923224.907408408, 4619666.216301917))
+
+  private def assertGolden(spec: String, golden: Seq[(Double, Double, Double, Double)]) = {
+    val f = fwd(spec)
+    for ((lon, lat, x2, y2) <- golden) {
+      val (x1, y1) = f(lon, lat)
+      assert(math.abs(x1 - x2) < 1e-6 && math.abs(y1 - y2) < 1e-6,
+        s"$spec mismatch at ($lon,$lat): ($x1,$y1) vs ($x2,$y2)")
+    }
+  }
 
   test("tmerc agrees with the hardcoded Krüger UTM to sub-micron") {
-    val f = fwd("EPSG:32633") // UTM 33N
-    val g = graft.exts.TransverseMercator.utmForward(32633)
-    for (lon <- grid(12.0, 18.0, 1.5); lat <- grid(-80.0, 84.0, 16.4)) {
-      val (x1, y1) = f(lon, lat); val (x2, y2) = g(lon, lat)
-      assert(math.abs(x1 - x2) < 1e-6 && math.abs(y1 - y2) < 1e-6,
-        s"utm mismatch at ($lon,$lat): ($x1,$y1) vs ($x2,$y2)")
-    }
-    val fs = fwd("EPSG:32733") // UTM 33S false northing
-    val gs = graft.exts.TransverseMercator.utmForward(32733)
-    val (x1, y1) = fs(15.0, -33.5); val (x2, y2) = gs(15.0, -33.5)
-    assert(math.abs(x1 - x2) < 1e-6 && math.abs(y1 - y2) < 1e-6)
+    assertGolden("EPSG:32633", Utm33N) // UTM 33N
+    assertGolden("EPSG:32733", Utm33S) // UTM 33S false northing
   }
 
   test("lcc 2SP agrees with the hardcoded Lambert-93") {
-    val f = fwd("EPSG:2154")
-    for (lon <- grid(-4.0, 8.0, 2.7); lat <- grid(41.0, 51.0, 2.3)) {
-      val (x1, y1) = f(lon, lat)
-      val (x2, y2) = graft.exts.GeoProjections.lcc93Forward(lon, lat)
-      assert(math.abs(x1 - x2) < 1e-6 && math.abs(y1 - y2) < 1e-6,
-        s"lcc mismatch at ($lon,$lat)")
-    }
+    assertGolden("EPSG:2154", Lambert93)
   }
 
   test("aea agrees with the hardcoded Conus Albers") {
-    val f = fwd("EPSG:5070")
-    for (lon <- grid(-124.0, -67.0, 11.3); lat <- grid(25.0, 49.0, 5.7)) {
-      val (x1, y1) = f(lon, lat)
-      val (x2, y2) = graft.exts.GeoProjections.albersForward(lon, lat)
-      assert(math.abs(x1 - x2) < 1e-6 && math.abs(y1 - y2) < 1e-6,
-        s"aea mismatch at ($lon,$lat)")
-    }
+    assertGolden("EPSG:5070", ConusAlbers)
   }
 
   test("laea agrees with the hardcoded LAEA Europe") {
-    val f = fwd("EPSG:3035")
-    for (lon <- grid(-10.0, 30.0, 8.1); lat <- grid(35.0, 70.0, 7.3)) {
-      val (x1, y1) = f(lon, lat)
-      val (x2, y2) = graft.exts.GeoProjections.laeaForward(lon, lat)
-      assert(math.abs(x1 - x2) < 1e-6 && math.abs(y1 - y2) < 1e-6,
-        s"laea mismatch at ($lon,$lat)")
-    }
+    assertGolden("EPSG:3035", LaeaEurope)
   }
 
   // ---- 2. published worked examples --------------------------------------
@@ -120,7 +249,7 @@ class ProjEngineSpec extends SparkSpec {
     }
     // city sanity through the full WGS84 -> CH1903+ datum path:
     // Zurich main station sits near 2683000 / 1248000 on the LV95 grid
-    val t = ProjEngine.transformerFor("EPSG:4326", "EPSG:2056")
+    val t = transformerFor("EPSG:4326", "EPSG:2056")
     val (ez, nz) = t(8.540192, 47.377453)
     assert(math.abs(ez - 2683000.0) < 2000.0, s"Zurich E=$ez")
     assert(math.abs(nz - 1248000.0) < 2000.0, s"Zurich N=$nz")
@@ -155,7 +284,7 @@ class ProjEngineSpec extends SparkSpec {
   test("krovak: conformal oblique conic — Prague anchor, scale envelope, czech flip") {
     // WGS84 -> S-JTSK East-North through the published 3-param shift:
     // central Prague sits near E -743000, N -1044000 on the 5514 grid
-    val t = ProjEngine.transformerFor("EPSG:4326", "EPSG:5514")
+    val t = transformerFor("EPSG:4326", "EPSG:5514")
     val (ep, np) = t(14.4206, 50.0875)
     assert(math.abs(ep + 743000.0) < 3000.0, s"Prague E=$ep")
     assert(math.abs(np + 1044000.0) < 3000.0, s"Prague N=$np")
@@ -352,8 +481,8 @@ class ProjEngineSpec extends SparkSpec {
 
   test("datum shifts: OSGB magnitude ~120m, ED50 ~150-250m, zero-shift identity") {
     // 4326 -> 27700 -> 4326 (through the Helmert hub) must round-trip
-    val t1 = ProjEngine.transformerFor("EPSG:4326", "EPSG:27700")
-    val t2 = ProjEngine.transformerFor("EPSG:27700", "EPSG:4326")
+    val t1 = transformerFor("EPSG:4326", "EPSG:27700")
+    val t2 = transformerFor("EPSG:27700", "EPSG:4326")
     val (e, n) = t1(-1.5, 52.5)
     val (lon, lat) = t2(e, n)
     // 1e-7 deg ~ 1cm: the Helmert reverse is the standard small-angle
@@ -365,19 +494,19 @@ class ProjEngineSpec extends SparkSpec {
     val d = math.hypot(e - naive._1, n - naive._2)
     assert(d > 80.0 && d < 180.0, s"OSGB shift magnitude $d")
     // ED50 UTM31 vs WGS84 UTM31: ~150-250m in western Europe
-    val ed = ProjEngine.transformerFor("EPSG:4326", "EPSG:23031")(2.2, 41.4)
+    val ed = transformerFor("EPSG:4326", "EPSG:23031")(2.2, 41.4)
     val wg = fwd("EPSG:32631")(2.2, 41.4)
     val d2 = math.hypot(ed._1 - wg._1, ed._2 - wg._2)
     assert(d2 > 120.0 && d2 < 300.0, s"ED50 shift magnitude $d2")
     // all-zero towgs84 collapses to the no-shift path
-    val z = ProjEngine.transformerFor(
+    val z = transformerFor(
       "+proj=longlat +ellps=WGS84 +towgs84=0,0,0", "EPSG:32631")(2.2, 41.4)
     assert(math.abs(z._1 - wg._1) < 1e-9 && math.abs(z._2 - wg._2) < 1e-9)
   }
 
   test("helmert 7-param round-trip and belgian lambert plausibility") {
-    val t = ProjEngine.transformerFor("EPSG:4326", "EPSG:31370")
-    val back = ProjEngine.transformerFor("EPSG:31370", "EPSG:4326")
+    val t = transformerFor("EPSG:4326", "EPSG:31370")
+    val back = transformerFor("EPSG:31370", "EPSG:4326")
     val (x, y) = t(4.3517, 50.8466) // Brussels
     val (lon, lat) = back(x, y)
     assert(math.abs(lon - 4.3517) < 1e-8 && math.abs(lat - 50.8466) < 1e-8)

@@ -252,31 +252,45 @@ object GeoGeomOps {
 
   /** Reproject every vertex with `fn` (null: keep the coordinates) and
     * tag the output with `dstSrid` as EWKB (untagged WKB unless positive).
-    * Multi* / GeometryCollection inputs reproject each member. The map
-    * comes from [[GeoReproject]], which resolves it once per expression. */
+    * Multi* / GeometryCollection inputs reproject each member. A finite
+    * vertex that maps to a non-finite one (outside the projection's
+    * domain, where PROJ and PostGIS raise an error) makes the result
+    * null; NaN input ordinates (POINT EMPTY) pass through. The map comes
+    * from [[GeoReproject]], which resolves it once per expression. */
   def reproject(bytes: Array[Byte], fn: (Double, Double) => (Double, Double),
       dstSrid: Int): Array[Byte] = {
     val g = parse(bytes)
     if (g == null) return null
-    val out = GeoGeom.write(if (fn == null) g else mapCoords(g, fn))
+    val mapped = if (fn == null) g else mapCoords(g, fn)
+    if (mapped == null) return null
+    val out = GeoGeom.write(mapped)
     if (dstSrid > 0) setSrid(out, dstSrid) else out
   }
 
+  private def finite(x: Double, y: Double): Boolean = x.isFinite && y.isFinite
+
   /** Apply a coordinate map to every vertex, recursing into Multi* parts
-    * (GeoGeom.write reads `parts` for kinds 4-7, `rings` for 1-3). */
+    * (GeoGeom.write reads `parts` for kinds 4-7, `rings` for 1-3); null
+    * when a finite vertex maps to a non-finite one. */
   private def mapCoords(g: GeoGeom.Geom,
       fn: (Double, Double) => (Double, Double)): GeoGeom.Geom = {
-    val rings = g.rings.map { r =>
+    val rings = new Array[Array[Double]](g.rings.length)
+    var k = 0
+    while (k < rings.length) {
+      val r = g.rings(k)
       val o = new Array[Double](r.length)
       var i = 0
       while (i < r.length) {
         val (x, y) = fn(r(i), r(i + 1)); o(i) = x; o(i + 1) = y
+        if (!finite(x, y) && finite(r(i), r(i + 1))) return null
         i += 2
       }
-      o
+      rings(k) = o
+      k += 1
     }
-    if (g.parts == null) new GeoGeom.Geom(g.kind, rings)
-    else new GeoGeom.Geom(g.kind, rings, g.parts.map(mapCoords(_, fn)))
+    if (g.parts == null) return new GeoGeom.Geom(g.kind, rings)
+    val parts = g.parts.map(mapCoords(_, fn))
+    if (parts.contains(null)) null else new GeoGeom.Geom(g.kind, rings, parts)
   }
 }
 

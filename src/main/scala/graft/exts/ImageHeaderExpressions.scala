@@ -11,8 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * logical screen descriptor, BMP info header) or in a marker walk (JPEG
   * SOF segments), all parseable from the raw bytes in pure JVM code.
   * This replaces the md5-fake `Multimodal.probeImageDims` stub for the
-  * header-probe part of the decode story; pixel decode stays stubbed
-  * (DIVERGENCES — codecs absent from the environment).
+  * header-probe part of the decode story. It stays separate from the
+  * pixel decoders ([[ImageCodec]]) because it must answer from a
+  * header-only prefix, which an ImageIO reader rejects, and it also
+  * knows GIF.
   *
   * Returns struct(width int, height int, format string), or null when the
   * payload matches no known signature — unknown is never a wrong number.
@@ -105,7 +107,9 @@ object AudioHeader {
     while (i + 8 <= b.length) {
       val at = i.toInt
       val sz = le32(b, at + 4)
-      if (tag(b, at, "fmt ") && i + 24 <= b.length) {
+      // the fmt chunk's own declared size must cover the 16 bytes read
+      // below, or they would come from the next chunk (as in WavSamples)
+      if (tag(b, at, "fmt ") && sz >= 16 && i + 24 <= b.length) {
         channels = le16(b, at + 10)
         rate = le32(b, at + 12)
         byteRate = le32(b, at + 16)
@@ -144,10 +148,13 @@ object ImageHeader {
   /** Static probe — called from both eval and generated code. */
   def probe(b: Array[Byte]): InternalRow = {
     if (b == null || b.length < 10) return null
-    // PNG: 8-byte signature, then IHDR length+type, width/height BE at 16/20
+    // PNG: 8-byte signature, then the first chunk, which must be a
+    // 13-byte IHDR (width/height BE at 16/20) — anything else → null
     if (b.length >= 24 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G' &&
         u8(b, 4) == 0x0d && u8(b, 5) == 0x0a && u8(b, 6) == 0x1a && u8(b, 7) == 0x0a)
-      return row(be32(b, 16), be32(b, 20), "png")
+      return if (be32(b, 8) == 13L && b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R')
+        row(be32(b, 16), be32(b, 20), "png")
+      else null
     // GIF87a/GIF89a: logical screen descriptor, width/height LE at 6/8
     if (b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
         (b(4) == '7' || b(4) == '9') && b(5) == 'a')

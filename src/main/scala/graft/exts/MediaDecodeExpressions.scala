@@ -5,18 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** REAL pixel/sample decode with no codec library: BMP's 24/32-bpp
-  * device-independent bitmap rows and WAV's PCM frames are pure fixed
-  * byte layouts; PNG (round 8) needs only DEFLATE — which ships in the
-  * JDK as `java.util.zip.Inflater` — plus the spec'd per-row unfilter
-  * pass; and baseline JPEG (round 9) is canonical Huffman decoding +
-  * dequantization + an 8x8 inverse DCT + the JFIF color matrix — a few
-  * hundred lines of arithmetic, no codec primitive required. All four
-  * image/audio modalities of the multimodal pipeline run end-to-end
-  * with genuine decoded values (the promised stub-swap point of
-  * `Multimodal.extractFeaturesBatched` made real; only compressed
-  * audio/video and the exotic JPEG variants remain out —
-  * DIVERGENCES §8 keeps that honest).
+/** REAL pixel/sample decode for the multimodal pipeline. BMP, PNG and
+  * JPEG pixels come from the JDK's `javax.imageio` readers through the
+  * one [[ImageCodec]] (palette, 1-16-bit, interlaced PNG; palette, RLE
+  * and bitfield BMP; sequential and progressive JPEG); WAV's PCM frames
+  * are a fixed byte layout, decoded here. Compressed audio/video stay
+  * out (DIVERGENCES §8).
   *
   * All return null for anything outside the decodable subset — never a
   * wrong pixel. Codegen'd via static helper calls, SQL-registered as
@@ -63,72 +57,10 @@ case class BmpPixels(child: Expression) extends MediaDecodeExpression {
     copy(child = newChild)
 }
 
+/** BMP → packed 0xRRGGBB, top-down row-major (bottom-up storage and BGR
+  * order normalized by the reader). */
 object BmpPixels {
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    u8(b, i).toLong | (u8(b, i + 1).toLong << 8) |
-      (u8(b, i + 2).toLong << 16) | (u8(b, i + 3).toLong << 24)
-
-  /** Upper bound on decoded pixels (64 MPix ≈ 256 MB of ints) — a forged
-    * header must not allocate unboundedly inside an executor task. */
-  final val MaxPixels = 64L * 1024 * 1024
-
-  /** Decode a BMP payload into packed 0xRRGGBB ints in TOP-DOWN row-major
-    * order (BMP stores rows bottom-up unless height is negative — the
-    * flip is normalized here so pixel index = y*width + x everywhere
-    * downstream). Decodable subset: BITMAPINFOHEADER-family DIBs (size
-    * 40/52/56/64/108/124) at 24 or 32 bpp and OS/2 BITMAPCOREHEADER at
-    * 24 bpp, compression BI_RGB(0) or BI_BITFIELDS(3, the V4+ default
-    * masks) — everything else (RLE, palettes, exotic masks) → null. */
-  def decode(b: Array[Byte]): ArrayData = {
-    if (b == null || b.length < 26 || b(0) != 'B' || b(1) != 'M') return null
-    val dataOff = le32(b, 10)
-    val dib = le32(b, 14)
-    var w = 0L; var h = 0L; var topDown = false; var bpp = 0
-    if (dib == 12L) {
-      w = le16(b, 18); h = le16(b, 20); bpp = le16(b, 24)
-      if (bpp != 24) return null
-    } else if (dib == 40L || dib == 52L || dib == 56L || dib == 64L ||
-               dib == 108L || dib == 124L) {
-      if (b.length < 34) return null
-      w = le32(b, 18)
-      val rawH = le32(b, 22).toInt
-      topDown = rawH < 0
-      h = math.abs(rawH.toLong)
-      bpp = le16(b, 28)
-      val compression = le32(b, 30)
-      if (bpp != 24 && bpp != 32) return null
-      // BI_RGB always; BI_BITFIELDS only with the standard BGRA masks a
-      // V4/V5 header spells out (anything custom would scramble channels)
-      if (compression == 3L) {
-        if (dib < 108L || b.length < 70) return null
-        val rMask = le32(b, 54); val gMask = le32(b, 58); val bMask = le32(b, 62)
-        if (rMask != 0x00ff0000L || gMask != 0x0000ff00L || bMask != 0x000000ffL)
-          return null
-      } else if (compression != 0L) return null
-    } else return null
-    if (w <= 0 || h <= 0 || w * h > MaxPixels) return null
-    val bytesPerPx = bpp / 8
-    val rowBytes = (w * bytesPerPx + 3) / 4 * 4
-    if (dataOff < 0 || dataOff + rowBytes * h > b.length) return null
-    val wi = w.toInt; val hi = h.toInt
-    val out = new Array[Int](wi * hi)
-    var row = 0
-    while (row < hi) {
-      val y = if (topDown) row else hi - 1 - row // normalize to top-down
-      var base = (dataOff + rowBytes * row).toInt
-      var x = 0
-      while (x < wi) {
-        // BMP stores BGR(A)
-        out(y * wi + x) = (u8(b, base + 2) << 16) | (u8(b, base + 1) << 8) | u8(b, base)
-        base += bytesPerPx
-        x += 1
-      }
-      row += 1
-    }
-    new GenericArrayData(out)
-  }
+  def decode(b: Array[Byte]): ArrayData = ImageCodec.decode(b, "bmp")
 }
 
 case class PngPixels(child: Expression) extends MediaDecodeExpression {
@@ -139,125 +71,11 @@ case class PngPixels(child: Expression) extends MediaDecodeExpression {
     copy(child = newChild)
 }
 
-/** PNG pixel decode via the JDK's own DEFLATE (zlib) — no codec library
-  * (the entropy coder PNG uses IS zlib, which `java.util.zip.Inflater`
-  * implements; the rest of the format is fixed byte layout + the five
-  * spec'd row filters). Decodable subset: non-interlaced 8-bit-depth
-  * grayscale (0), gray+alpha (4), RGB (2) and RGBA (6); palette,
-  * 1/2/4/16-bit depths, Adam7 interlace, malformed chunk lists,
-  * truncated or corrupt DEFLATE streams, and unknown filter types → null,
-  * never a wrong pixel. Output matches [[BmpPixels]]: packed 0xRRGGBB
-  * ints in top-down row-major order (gray replicated to all three
-  * channels, alpha dropped), so every downstream stat/feature operator
-  * is format-agnostic. */
+/** PNG → packed 0xRRGGBB, top-down row-major, same contract as
+  * [[BmpPixels]] so every downstream stat/feature operator is
+  * format-agnostic. */
 object PngPixels {
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1).toLong << 16) |
-      (u8(b, i + 2).toLong << 8) | u8(b, i + 3).toLong
-  private def tag(b: Array[Byte], i: Int, t: String): Boolean =
-    b(i) == t(0) && b(i + 1) == t(1) && b(i + 2) == t(2) && b(i + 3) == t(3)
-
-  final val MaxPixels = BmpPixels.MaxPixels
-
-  private val Signature =
-    Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-
-  def decode(b: Array[Byte]): ArrayData = {
-    // minimum: 8 signature + 25 IHDR + 12 empty IDAT + 12 IEND
-    if (b == null || b.length < 57) return null
-    var s = 0
-    while (s < 8) { if (b(s) != Signature(s)) return null; s += 1 }
-    // IHDR must be the first chunk, 13 bytes
-    if (be32(b, 8) != 13L || !tag(b, 12, "IHDR")) return null
-    val w = be32(b, 16); val h = be32(b, 20)
-    val depth = u8(b, 24); val color = u8(b, 25)
-    val comp = u8(b, 26); val filt = u8(b, 27); val inter = u8(b, 28)
-    if (depth != 8 || comp != 0 || filt != 0 || inter != 0) return null
-    val channels = color match {
-      case 0 => 1 // grayscale
-      case 2 => 3 // RGB
-      case 4 => 2 // gray + alpha
-      case 6 => 4 // RGBA
-      case _ => return null // 3 = palette: PLTE indirection out of scope
-    }
-    if (w <= 0 || h <= 0 || w * h > MaxPixels) return null
-    // walk the chunk list, concatenating every IDAT payload (the zlib
-    // stream may be split across chunks at arbitrary byte boundaries)
-    val idat = new java.io.ByteArrayOutputStream()
-    var i = 33L // 8 signature + 4 len + 4 "IHDR" + 13 data + 4 crc
-    var sawEnd = false
-    while (!sawEnd && i + 8 <= b.length) {
-      val at = i.toInt
-      val len = be32(b, at) // 4-byte BE length, then 4-byte type
-      if (len < 0 || i + 12 + len > b.length) return null
-      if (tag(b, at + 4, "IDAT")) idat.write(b, at + 8, len.toInt)
-      else if (tag(b, at + 4, "IEND")) sawEnd = true
-      i += 12L + len
-    }
-    if (!sawEnd || idat.size() == 0) return null
-    // inflate to EXACTLY h * (1 + w*channels) bytes of filtered scanlines
-    val wi = w.toInt; val hi = h.toInt
-    val stride = wi * channels
-    val raw = new Array[Byte](hi * (1 + stride))
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return null
-        got += n
-      }
-      if (got < raw.length) return null
-    } catch {
-      case _: java.util.zip.DataFormatException => return null
-    } finally inf.end()
-    // per-row unfilter (None/Sub/Up/Average/Paeth), in place into `px`
-    val px = new Array[Byte](hi * stride)
-    val bpp = channels
-    var r = 0
-    while (r < hi) {
-      val ft = u8(raw, r * (1 + stride))
-      if (ft > 4) return null
-      val rowIn = r * (1 + stride) + 1
-      val rowOut = r * stride
-      var x = 0
-      while (x < stride) {
-        val cur = u8(raw, rowIn + x)
-        val a = if (x >= bpp) u8(px, rowOut + x - bpp) else 0
-        val up = if (r > 0) u8(px, rowOut - stride + x) else 0
-        val c = if (r > 0 && x >= bpp) u8(px, rowOut - stride + x - bpp) else 0
-        val v = ft match {
-          case 0 => cur
-          case 1 => cur + a
-          case 2 => cur + up
-          case 3 => cur + ((a + up) >> 1)
-          case 4 => // Paeth predictor
-            val p = a + up - c
-            val pa = math.abs(p - a); val pb = math.abs(p - up); val pc = math.abs(p - c)
-            cur + (if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c)
-        }
-        px(rowOut + x) = (v & 0xff).toByte
-        x += 1
-      }
-      r += 1
-    }
-    // pack to 0xRRGGBB top-down row-major (PNG is already top-down)
-    val out = new Array[Int](wi * hi)
-    var j = 0
-    while (j < out.length) {
-      val base = j * channels
-      out(j) = channels match {
-        case 1 => val g = u8(px, base); (g << 16) | (g << 8) | g
-        case 2 => val g = u8(px, base); (g << 16) | (g << 8) | g // alpha dropped
-        case 3 => (u8(px, base) << 16) | (u8(px, base + 1) << 8) | u8(px, base + 2)
-        case 4 => (u8(px, base) << 16) | (u8(px, base + 1) << 8) | u8(px, base + 2)
-      }
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
+  def decode(b: Array[Byte]): ArrayData = ImageCodec.decode(b, "png")
 }
 
 case class WavSamples(child: Expression) extends MediaDecodeExpression {
@@ -332,682 +150,12 @@ case class JpegPixels(child: Expression) extends MediaDecodeExpression {
     copy(child = newChild)
 }
 
-/** JPEG pixel decode with no codec library (round 9 — the last image
-  * modality unstubbed): Huffman entropy decode + dequantization + 8x8
-  * inverse DCT + YCbCr→RGB are all pure arithmetic, the same
-  * feasibility class as round 8's PNG inflate+unfilter. Decodable
-  * subset: SEQUENTIAL Huffman frames (SOF0/SOF1) and PROGRESSIVE
-  * frames (SOF2 — coefficients accumulate across scans with spectral
-  * selection, DC/AC successive-approximation first + refinement
-  * passes and end-of-band runs, IDCT once at EOI), 8-bit precision,
-  * 1 (grayscale) or 3 (YCbCr) components with sampling factors in
-  * {1,2} (4:4:4 / 4:2:2 / 4:2:0), optional restart markers.
-  * Arithmetic coding, 12-bit, hierarchical, and CMYK/RGB-colorspace
-  * frames → null, never a wrong pixel.
-  *
-  * Chroma upsampling is nearest-neighbor sample replication (the
-  * spec-defined samples themselves; no interpolation is mandated by the
-  * standard, so decoders legitimately differ here — documented in
-  * DIVERGENCES §8). YCbCr→RGB is the JFIF matrix with round-half-up.
-  * Output matches [[BmpPixels]]/[[PngPixels]]: packed 0xRRGGBB ints,
-  * top-down row-major. */
+/** JPEG → packed 0xRRGGBB, top-down row-major: libjpeg's YCbCr→RGB, its
+  * interpolating ("fancy") chroma upsampling, and block smoothing for
+  * progressive files whose scans leave low AC coefficients unsent.
+  * Arithmetic-coded, 12-bit and CMYK/YCCK frames → null. */
 object JpegPixels {
-  final val MaxPixels = BmpPixels.MaxPixels
-
-  /** Progressive frames hold EVERY raw coefficient (one int per pixel
-    * per component) until EOI — cap them tighter than the streaming
-    * sequential path (16 MPix ≈ 192 MB of coefficients at 4:4:4). */
-  final val MaxPixelsProgressive = 16L * 1024 * 1024
-
-  /** Internal decode failure — caught at the boundary, never escapes. */
-  private final class Fail extends RuntimeException(null, null, false, false)
-  private def fail(): Nothing = throw new Fail
-
-  /** Zigzag index → natural (row-major v*8+u) index. */
-  private[exts] val ZigzagNat: Array[Int] = {
-    val z = new Array[Int](64)
-    var u = 0; var v = 0
-    var k = 0
-    while (k < 64) {
-      z(k) = v * 8 + u
-      if (((u + v) & 1) == 0) { // moving up-right
-        if (u == 7) v += 1 else if (v == 0) u += 1 else { u += 1; v -= 1 }
-      } else { // moving down-left
-        if (v == 7) u += 1 else if (u == 0) v += 1 else { u -= 1; v += 1 }
-      }
-      k += 1
-    }
-    z
-  }
-
-  /** Separable IDCT basis: cosTab(u)(x) = C(u)/2 * cos((2x+1)uπ/16). */
-  private val CosTab: Array[Array[Double]] = Array.tabulate(8, 8) { (u, x) =>
-    val cu = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
-    cu / 2.0 * math.cos((2 * x + 1) * u * math.Pi / 16.0)
-  }
-
-  /** Canonical Huffman table per the JPEG spec's DECODE procedure. */
-  private final class Huff(counts: Array[Int], val symbols: Array[Int]) {
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0; var k = 0
-      var l = 1
-      while (l <= 16) {
-        valPtr(l) = k
-        minCode(l) = code
-        code += counts(l - 1)
-        k += counts(l - 1)
-        maxCode(l) = if (counts(l - 1) == 0) -1 else code - 1
-        code <<= 1
-        l += 1
-      }
-    }
-  }
-
-  /** Entropy-segment bit reader: 0xFF00 byte-unstuffing, markers end the
-    * stream (pos points AT the 0xFF when a marker is seen). */
-  private final class Bits(b: Array[Byte], var pos: Int) {
-    private var acc = 0
-    private var n = 0
-    def bit(): Int = {
-      if (n == 0) {
-        if (pos >= b.length) fail()
-        var v = b(pos) & 0xff
-        if (v == 0xff) {
-          if (pos + 1 >= b.length) fail()
-          val nxt = b(pos + 1) & 0xff
-          if (nxt == 0x00) { pos += 2; v = 0xff } // stuffed literal FF
-          else fail() // marker inside entropy data where none expected
-        } else pos += 1
-        acc = v; n = 8
-      }
-      n -= 1
-      (acc >> n) & 1
-    }
-    def receive(len: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < len) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    def decode(h: Huff): Int = {
-      var code = bit()
-      var l = 1
-      while (h.maxCode(l) < 0 || code > h.maxCode(l)) {
-        l += 1
-        if (l > 16) fail()
-        code = (code << 1) | bit()
-      }
-      h.symbols(h.valPtr(l) + code - h.minCode(l))
-    }
-    /** Byte-align and consume an expected RSTn marker. */
-    def restart(idx: Int): Unit = {
-      n = 0
-      if (pos + 1 >= b.length) fail()
-      if ((b(pos) & 0xff) != 0xff || (b(pos + 1) & 0xff) != (0xd0 + (idx & 7))) fail()
-      pos += 2
-    }
-  }
-
-  private def extend(v: Int, t: Int): Int =
-    if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
-
-  def decode(b: Array[Byte]): ArrayData =
-    try decode0(b)
-    catch {
-      case _: Fail => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
-    }
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-
-  private def decode0(b: Array[Byte]): ArrayData = {
-    if (b == null || b.length < 4) return null
-    if (u8(b, 0) != 0xff || u8(b, 1) != 0xd8) return null // SOI
-    val quant = new Array[Array[Int]](4) // natural order, dequant-ready
-    val huffDc = new Array[Huff](4)
-    val huffAc = new Array[Huff](4)
-    var restartInterval = 0
-    var adobeTransform = -1 // APP14 color-transform declaration, if any
-    // frame state
-    var w = 0; var h = 0
-    var nComp = 0
-    var compId: Array[Int] = null
-    var compH: Array[Int] = null
-    var compV: Array[Int] = null
-    var compQ: Array[Int] = null
-    // progressive (SOF2) accumulation state: coefficients build up
-    // across scans and the IDCT runs once at EOI
-    var progressive = false
-    var pCoefs: Array[Array[Int]] = null
-    var pPlaneW: Array[Int] = null
-    var pPlaneH: Array[Int] = null
-    var i = 2
-    while (i + 2 <= b.length) {
-      if (u8(b, i) != 0xff) return null
-      var marker = u8(b, i + 1)
-      while (marker == 0xff && i + 2 < b.length) { i += 1; marker = u8(b, i + 1) } // fill bytes
-      if (marker == 0xd9) {
-        // EOI: for a progressive frame this is where decode completes
-        return if (progressive && pCoefs != null)
-          finishProgressive(w, h, nComp, compH, compV, compQ, quant,
-            pPlaneW, pPlaneH, pCoefs)
-        else null
-      }
-      if (i + 4 > b.length) return null
-      val len = be16(b, i + 2)
-      if (len < 2 || i + 2 + len > b.length) return null
-      val at = i + 4 // segment payload start
-      val end = i + 2 + len
-      var skipTo = -1 // a progressive SOS advances past its entropy data
-      marker match {
-        case 0xdb => // DQT: one or more (PqTq, 64) tables
-          var p = at
-          while (p < end) {
-            val pq = u8(b, p) >> 4; val tq = u8(b, p) & 15
-            if (pq != 0 || tq > 3 || p + 65 > end) return null // 8-bit tables only
-            val t = new Array[Int](64)
-            var k = 0
-            while (k < 64) { t(ZigzagNat(k)) = u8(b, p + 1 + k); k += 1 }
-            quant(tq) = t
-            p += 65
-          }
-        case 0xc4 => // DHT: one or more (TcTh, 16 counts, symbols)
-          var p = at
-          while (p < end) {
-            if (p + 17 > end) return null
-            val tc = u8(b, p) >> 4; val th = u8(b, p) & 15
-            if (tc > 1 || th > 3) return null
-            val counts = Array.tabulate(16)(k => u8(b, p + 1 + k))
-            val total = counts.sum
-            if (total > 256 || p + 17 + total > end) return null
-            val syms = Array.tabulate(total)(k => u8(b, p + 17 + k))
-            val t = new Huff(counts, syms)
-            if (tc == 0) huffDc(th) = t else huffAc(th) = t
-            p += 17 + total
-          }
-        case 0xc0 | 0xc1 | 0xc2 => // sequential (SOF0/SOF1) or progressive (SOF2) Huffman
-          progressive = marker == 0xc2
-          if (u8(b, at) != 8) return null // 8-bit precision only
-          h = be16(b, at + 1); w = be16(b, at + 3)
-          nComp = u8(b, at + 5)
-          if (w <= 0 || h <= 0 || w.toLong * h > MaxPixels) return null
-          // progressive holds every coefficient in memory until EOI —
-          // bound it tighter than the streaming sequential path
-          if (progressive && w.toLong * h > MaxPixelsProgressive) return null
-          if (nComp != 1 && nComp != 3) return null
-          if (at + 6 + nComp * 3 > end) return null
-          compId = new Array[Int](nComp); compH = new Array[Int](nComp)
-          compV = new Array[Int](nComp); compQ = new Array[Int](nComp)
-          var c = 0
-          while (c < nComp) {
-            compId(c) = u8(b, at + 6 + c * 3)
-            val hv = u8(b, at + 7 + c * 3)
-            compH(c) = hv >> 4; compV(c) = hv & 15
-            if (compH(c) < 1 || compH(c) > 2 || compV(c) < 1 || compV(c) > 2) return null
-            compQ(c) = u8(b, at + 8 + c * 3)
-            if (compQ(c) > 3) return null
-            c += 1
-          }
-          // T.81 A.2: a SINGLE-component scan is non-interleaved — its
-          // MCU is one data unit in raster order regardless of the
-          // declared sampling factors; honoring H/V>1 here would lay
-          // blocks out z-ordered (wrong pixels, and wrong restart-MCU
-          // counting). Force 1x1 for the one-component case.
-          if (nComp == 1) { compH(0) = 1; compV(0) = 1 }
-        case 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-          return null // arithmetic / lossless / hierarchical
-        case 0xdd => // DRI
-          if (len != 4) return null
-          restartInterval = be16(b, at)
-        case 0xda => // SOS: entropy-coded data follows
-          if (nComp == 0) return null
-          val ns = u8(b, at)
-          if (ns < 1 || ns > nComp || at + 1 + ns * 2 + 3 > end) return null
-          if (!progressive && ns != nComp) return null
-          val dcSel = new Array[Int](nComp); val acSel = new Array[Int](nComp)
-          val scanCi = new Array[Int](ns)
-          var c = 0
-          while (c < ns) {
-            val cs = u8(b, at + 1 + c * 2)
-            val ci = compId.indexOf(cs)
-            if (ci < 0) return null
-            scanCi(c) = ci
-            dcSel(ci) = u8(b, at + 2 + c * 2) >> 4
-            acSel(ci) = u8(b, at + 2 + c * 2) & 15
-            c += 1
-          }
-          // 3-component frames in straight-RGB colorspace (Adobe APP14
-          // transform=0, or component IDs spelling 'R','G','B') must not
-          // be pushed through the YCbCr matrix — null, never wrong colors
-          if (nComp == 3 && (adobeTransform == 0 ||
-              (compId(0) == 'R' && compId(1) == 'G' && compId(2) == 'B')))
-            return null
-          if (!progressive)
-            return decodeScan(b, end, w, h, nComp, compH, compV, compQ,
-              quant, huffDc, huffAc, dcSel, acSel, restartInterval)
-          // progressive: accumulate this scan's coefficients, continue
-          // the marker walk at the next marker after the entropy data
-          val ssV = u8(b, at + 1 + ns * 2)
-          val seV = u8(b, at + 2 + ns * 2)
-          val ahal = u8(b, at + 3 + ns * 2)
-          if (pCoefs == null) {
-            val maxH = compH.max; val maxV = compV.max
-            val mcusX = (w + 8 * maxH - 1) / (8 * maxH)
-            val mcusY = (h + 8 * maxV - 1) / (8 * maxV)
-            pPlaneW = Array.tabulate(nComp)(cc => mcusX * compH(cc) * 8)
-            pPlaneH = Array.tabulate(nComp)(cc => mcusY * compV(cc) * 8)
-            pCoefs = Array.tabulate(nComp)(cc =>
-              new Array[Int]((pPlaneW(cc) / 8) * (pPlaneH(cc) / 8) * 64))
-          }
-          val after = progressiveScan(b, end, scanCi, compH, compV,
-            compH.max, compV.max, w, h, pPlaneW, pPlaneH, pCoefs,
-            huffDc, huffAc, dcSel, acSel,
-            ssV, seV, ahal >> 4, ahal & 15, restartInterval)
-          if (after < 0) return null
-          skipTo = after
-        case m if m >= 0xe0 && m <= 0xef => // APPn
-          // APP14 "Adobe" declares the color transform: 0 = samples are
-          // straight RGB (no YCbCr step), 1 = YCbCr, 2 = YCCK
-          if (m == 0xee && len >= 14 && b(at) == 'A' && b(at + 1) == 'd' &&
-              b(at + 2) == 'o' && b(at + 3) == 'b' && b(at + 4) == 'e')
-            adobeTransform = u8(b, at + 11)
-        case 0xfe => () // COM
-        case _ => return null
-      }
-      i = if (skipTo >= 0) skipTo else end
-    }
-    null // no SOS reached
-  }
-
-  /** Position of the next real marker at/after `from` in the entropy
-    * region: skips stuffed FF00 pairs, fill FFs, and (defensively) any
-    * trailing restart markers. -1 when the stream just ends. */
-  private def nextMarkerPos(b: Array[Byte], from: Int): Int = {
-    var p = from
-    while (p + 1 < b.length) {
-      if ((b(p) & 0xff) == 0xff) {
-        val m = b(p + 1) & 0xff
-        if (m == 0x00) p += 2 // stuffed literal FF
-        else if (m == 0xff) p += 1 // fill byte
-        else if (m >= 0xd0 && m <= 0xd7) p += 2 // stray restart
-        else return p
-      } else p += 1
-    }
-    -1
-  }
-
-  /** One progressive scan: DC first/refine (interleaved or single-
-    * component) or a single-component AC band first/refine with
-    * end-of-band runs — coefficients accumulate in `coefs`, shifted by
-    * the scan's successive-approximation bit position. Returns the
-    * position of the marker after the scan's entropy data. */
-  private def progressiveScan(b: Array[Byte], scanStart: Int,
-      scanCi: Array[Int], compH: Array[Int], compV: Array[Int],
-      maxH: Int, maxV: Int, w: Int, h: Int,
-      planeW: Array[Int], planeH: Array[Int], coefs: Array[Array[Int]],
-      huffDc: Array[Huff], huffAc: Array[Huff],
-      dcSel: Array[Int], acSel: Array[Int],
-      ss: Int, se: Int, ah: Int, al: Int, restartInterval: Int): Int = {
-    val bits = new Bits(b, scanStart)
-    var rst = 0
-    var unitsSinceRestart = 0
-    def maybeRestart(resetState: () => Unit): Unit =
-      if (restartInterval > 0 && unitsSinceRestart == restartInterval) {
-        bits.restart(rst); rst = (rst + 1) & 7
-        unitsSinceRestart = 0
-        resetState()
-      }
-    if (ss == 0) {
-      // DC scan (first or refinement)
-      if (se != 0) fail()
-      val pred = new Array[Int](scanCi.length)
-      val p1 = 1 << al
-      def dcUnit(si: Int, blkIdx: Int): Unit = {
-        val c = scanCi(si)
-        val base = blkIdx * 64
-        if (ah == 0) {
-          val hdc = huffDc(dcSel(c)); if (hdc == null) fail()
-          val t = bits.decode(hdc)
-          if (t > 15) fail()
-          pred(si) += extend(bits.receive(t), t)
-          coefs(c)(base) = pred(si) << al
-        } else {
-          // refinement: one raw bit per block (libjpeg's |= convention)
-          if (bits.bit() == 1) coefs(c)(base) |= p1
-        }
-      }
-      if (scanCi.length > 1) {
-        // interleaved MCU walk over all scan components
-        val mcusX = (w + 8 * maxH - 1) / (8 * maxH)
-        val mcusY = (h + 8 * maxV - 1) / (8 * maxV)
-        var my = 0
-        while (my < mcusY) {
-          var mx = 0
-          while (mx < mcusX) {
-            maybeRestart(() => java.util.Arrays.fill(pred, 0))
-            var si = 0
-            while (si < scanCi.length) {
-              val c = scanCi(si)
-              val stride = planeW(c) / 8
-              var by = 0
-              while (by < compV(c)) {
-                var bx = 0
-                while (bx < compH(c)) {
-                  dcUnit(si, (my * compV(c) + by) * stride + mx * compH(c) + bx)
-                  bx += 1
-                }
-                by += 1
-              }
-              si += 1
-            }
-            unitsSinceRestart += 1
-            mx += 1
-          }
-          my += 1
-        }
-      } else {
-        // single-component: non-interleaved raster over the comp grid
-        val c = scanCi(0)
-        val stride = planeW(c) / 8
-        val bw = (((w * compH(c) + maxH - 1) / maxH) + 7) / 8
-        val bh = (((h * compV(c) + maxV - 1) / maxV) + 7) / 8
-        var byi = 0
-        while (byi < bh) {
-          var bxi = 0
-          while (bxi < bw) {
-            maybeRestart(() => pred(0) = 0)
-            dcUnit(0, byi * stride + bxi)
-            unitsSinceRestart += 1
-            bxi += 1
-          }
-          byi += 1
-        }
-      }
-    } else {
-      // AC band scan: exactly one component (T.81 G.1)
-      if (scanCi.length != 1 || se < ss || se > 63) fail()
-      val c = scanCi(0)
-      val hac = huffAc(acSel(c)); if (hac == null) fail()
-      val cc = coefs(c)
-      val stride = planeW(c) / 8
-      val bw = (((w * compH(c) + maxH - 1) / maxH) + 7) / 8
-      val bh = (((h * compV(c) + maxV - 1) / maxV) + 7) / 8
-      val p1 = 1 << al
-      var eobrun = 0
-
-      def acFirst(base: Int): Unit = {
-        if (eobrun > 0) { eobrun -= 1; return }
-        var k = ss
-        var brk = false
-        while (!brk && k <= se) {
-          val rs = bits.decode(hac)
-          val r = rs >> 4; val s = rs & 15
-          if (s == 0) {
-            if (r < 15) {
-              eobrun = (1 << r) - 1
-              if (r > 0) eobrun += bits.receive(r)
-              brk = true
-            } else k += 16 // ZRL
-          } else {
-            k += r
-            if (k > se) fail()
-            cc(base + ZigzagNat(k)) = extend(bits.receive(s), s) << al
-            k += 1
-          }
-        }
-      }
-
-      def acRefine(base: Int): Unit = {
-        var k = ss
-        if (eobrun == 0) {
-          var brk = false
-          while (!brk && k <= se) {
-            val rs = bits.decode(hac)
-            var r = rs >> 4; val s = rs & 15
-            var insert = 0
-            if (s != 0) {
-              if (s != 1) fail() // refinement inserts only ±1<<al
-              insert = if (bits.bit() == 1) p1 else -p1
-            } else if (r != 15) {
-              eobrun = 1 << r
-              if (r > 0) eobrun += bits.receive(r)
-              brk = true
-            } // r == 15 (ZRL): skip 16 zero-history positions below
-            if (!brk) {
-              var placed = false
-              while (!placed && k <= se) {
-                val idx = base + ZigzagNat(k)
-                val cv = cc(idx)
-                if (cv != 0) {
-                  // correction bit for an already-nonzero coefficient
-                  if (bits.bit() == 1 && (cv & p1) == 0)
-                    cc(idx) += (if (cv >= 0) p1 else -p1)
-                } else {
-                  if (r == 0) {
-                    if (insert != 0) cc(idx) = insert
-                    placed = true
-                  } else r -= 1
-                }
-                k += 1
-              }
-              if (!placed && insert != 0) fail() // ran off the band
-            }
-          }
-        }
-        if (eobrun > 0) {
-          // inside the EOB run every remaining nonzero coefficient in
-          // the band still receives its correction bit
-          while (k <= se) {
-            val idx = base + ZigzagNat(k)
-            val cv = cc(idx)
-            if (cv != 0) {
-              if (bits.bit() == 1 && (cv & p1) == 0)
-                cc(idx) += (if (cv >= 0) p1 else -p1)
-            }
-            k += 1
-          }
-          eobrun -= 1
-        }
-      }
-
-      var byi = 0
-      while (byi < bh) {
-        var bxi = 0
-        while (bxi < bw) {
-          maybeRestart(() => eobrun = 0)
-          val base = (byi * stride + bxi) * 64
-          if (ah == 0) acFirst(base) else acRefine(base)
-          unitsSinceRestart += 1
-          bxi += 1
-        }
-        byi += 1
-      }
-    }
-    nextMarkerPos(b, bits.pos)
-  }
-
-  /** Progressive finish (at EOI): dequantize every accumulated block,
-    * IDCT into the component planes, assemble. */
-  private def finishProgressive(w: Int, h: Int, nComp: Int,
-      compH: Array[Int], compV: Array[Int], compQ: Array[Int],
-      quant: Array[Array[Int]],
-      planeW: Array[Int], planeH: Array[Int],
-      coefs: Array[Array[Int]]): ArrayData = {
-    val maxH = compH.max; val maxV = compV.max
-    val planes = Array.tabulate(nComp)(c => new Array[Byte](planeW(c) * planeH(c)))
-    val dq = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    var c = 0
-    while (c < nComp) {
-      val q = quant(compQ(c))
-      if (q == null) return null
-      val stride = planeW(c) / 8
-      val rows = planeH(c) / 8
-      var byi = 0
-      while (byi < rows) {
-        var bxi = 0
-        while (bxi < stride) {
-          val base = (byi * stride + bxi) * 64
-          var k = 0
-          while (k < 64) { dq(k) = coefs(c)(base + k) * q(k); k += 1 }
-          idctBlock(dq, tmp, planes(c), planeW(c), byi * 8, bxi * 8)
-          bxi += 1
-        }
-        byi += 1
-      }
-      c += 1
-    }
-    assemblePixels(w, h, nComp, compH, compV, maxH, maxV, planes, planeW)
-  }
-
-  private def decodeScan(b: Array[Byte], scanStart: Int, w: Int, h: Int,
-      nComp: Int, compH: Array[Int], compV: Array[Int], compQ: Array[Int],
-      quant: Array[Array[Int]], huffDc: Array[Huff], huffAc: Array[Huff],
-      dcSel: Array[Int], acSel: Array[Int], restartInterval: Int): ArrayData = {
-    val maxH = compH.max; val maxV = compV.max
-    val mcuW = 8 * maxH; val mcuH = 8 * maxV
-    val mcusX = (w + mcuW - 1) / mcuW
-    val mcusY = (h + mcuH - 1) / mcuH
-    // per-component planes at component resolution (padded to MCU grid)
-    val planeW = Array.tabulate(nComp)(c => mcusX * compH(c) * 8)
-    val planeH = Array.tabulate(nComp)(c => mcusY * compV(c) * 8)
-    val planes = Array.tabulate(nComp)(c => new Array[Byte](planeW(c) * planeH(c)))
-    var c = 0
-    while (c < nComp) {
-      if (quant(compQ(c)) == null || huffDc(dcSel(c)) == null || huffAc(acSel(c)) == null)
-        return null
-      c += 1
-    }
-    val bits = new Bits(b, scanStart)
-    val pred = new Array[Int](nComp)
-    val coef = new Array[Int](64)
-    val tmp = new Array[Double](64)
-    var mcu = 0
-    var rst = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          bits.restart(rst)
-          rst = (rst + 1) & 7
-          java.util.Arrays.fill(pred, 0)
-        }
-        c = 0
-        while (c < nComp) {
-          val q = quant(compQ(c)); val hdc = huffDc(dcSel(c)); val hac = huffAc(acSel(c))
-          var by = 0
-          while (by < compV(c)) {
-            var bx = 0
-            while (bx < compH(c)) {
-              java.util.Arrays.fill(coef, 0)
-              // DC
-              val t = bits.decode(hdc)
-              if (t > 15) fail()
-              val diff = extend(bits.receive(t), t)
-              pred(c) += diff
-              coef(0) = pred(c) * q(0)
-              // AC
-              var k = 1
-              var done = false
-              while (!done && k < 64) {
-                val rs = bits.decode(hac)
-                val r = rs >> 4; val s = rs & 15
-                if (s == 0) {
-                  if (r == 15) k += 16 else done = true // ZRL / EOB
-                } else {
-                  k += r
-                  if (k > 63) fail()
-                  coef(ZigzagNat(k)) = extend(bits.receive(s), s) * q(ZigzagNat(k))
-                  k += 1
-                }
-              }
-              idctBlock(coef, tmp, planes(c), planeW(c),
-                (my * compV(c) + by) * 8, (mx * compH(c) + bx) * 8)
-              bx += 1
-            }
-            by += 1
-          }
-          c += 1
-        }
-        mcu += 1
-        mx += 1
-      }
-      my += 1
-    }
-    assemblePixels(w, h, nComp, compH, compV, maxH, maxV, planes, planeW)
-  }
-
-  /** Dequantized-coefficient block → samples: separable inverse DCT
-    * (rows over u, then columns over v), +128 level shift, clamp, store
-    * into the component plane at (px0, py0). */
-  private def idctBlock(coef: Array[Int], tmp: Array[Double],
-      plane: Array[Byte], planeW: Int, py0: Int, px0: Int): Unit = {
-    var v = 0
-    while (v < 8) {
-      var x = 0
-      while (x < 8) {
-        var acc = 0.0
-        var u = 0
-        while (u < 8) { acc += CosTab(u)(x) * coef(v * 8 + u); u += 1 }
-        tmp(v * 8 + x) = acc
-        x += 1
-      }
-      v += 1
-    }
-    var y = 0
-    while (y < 8) {
-      var x = 0
-      while (x < 8) {
-        var acc = 0.0
-        var v2 = 0
-        while (v2 < 8) { acc += CosTab(v2)(y) * tmp(v2 * 8 + x); v2 += 1 }
-        val s0 = math.floor(acc + 128.0 + 0.5).toInt
-        val sv = if (s0 < 0) 0 else if (s0 > 255) 255 else s0
-        plane((py0 + y) * planeW + px0 + x) = sv.toByte
-        x += 1
-      }
-      y += 1
-    }
-  }
-
-  /** Component planes → packed 0xRRGGBB output: chroma replicated up to
-    * full resolution, JFIF YCbCr matrix at round-half-up. */
-  private def assemblePixels(w: Int, h: Int, nComp: Int,
-      compH: Array[Int], compV: Array[Int], maxH: Int, maxV: Int,
-      planes: Array[Array[Byte]], planeW: Array[Int]): ArrayData = {
-    val out = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        if (nComp == 1) {
-          val g = planes(0)(y * planeW(0) + x) & 0xff
-          out(y * w + x) = (g << 16) | (g << 8) | g
-        } else {
-          val yy = planes(0)((y * compV(0) / maxV) * planeW(0) + x * compH(0) / maxH) & 0xff
-          val cb = planes(1)((y * compV(1) / maxV) * planeW(1) + x * compH(1) / maxH) & 0xff
-          val cr = planes(2)((y * compV(2) / maxV) * planeW(2) + x * compH(2) / maxH) & 0xff
-          def clamp(d: Double): Int = {
-            val v = math.floor(d + 0.5).toInt
-            if (v < 0) 0 else if (v > 255) 255 else v
-          }
-          val r = clamp(yy + 1.402 * (cr - 128))
-          val g = clamp(yy - 0.344136 * (cb - 128) - 0.714136 * (cr - 128))
-          val bl = clamp(yy + 1.772 * (cb - 128))
-          out(y * w + x) = (r << 16) | (g << 8) | bl
-        }
-        x += 1
-      }
-      y += 1
-    }
-    new GenericArrayData(out)
-  }
+  def decode(b: Array[Byte]): ArrayData = ImageCodec.decode(b, "jpeg")
 }
 
 case class ImagePixels(child: Expression) extends MediaDecodeExpression {
@@ -1019,10 +167,10 @@ case class ImagePixels(child: Expression) extends MediaDecodeExpression {
 }
 
 /** Format-sniffing image decode (round 9): the leading magic bytes pick
-  * [[BmpPixels]], [[PngPixels]] or [[JpegPixels]], so a mixed-format
-  * payload column decodes through ONE expression — the shape a real
-  * crawled corpus has. Same packed-0xRRGGBB contract; unknown magic or
-  * an undecodable member of a known format → null, never a wrong pixel.
+  * PNG, BMP or JPEG, so a mixed-format payload column decodes through ONE
+  * expression — the shape a real crawled corpus has. Same packed-0xRRGGBB
+  * contract; unknown magic (GIF and TIFF included) or an undecodable
+  * member of a known format → null, never a wrong pixel.
   * SQL: `image_pixels`. */
 object ImagePixels {
   def decode(b: Array[Byte]): ArrayData = {

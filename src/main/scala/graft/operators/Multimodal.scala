@@ -11,14 +11,14 @@ import org.apache.spark.sql.types._
   * parquet/columnar storage, metadata prunes without touching bytes).
   *
   * Decode reality, by format: header probes are REAL for PNG/GIF/BMP/JPEG
-  * and WAV (round 6); pixel/sample decode is REAL for BMP and WAV PCM
-  * (round 7 — pure byte layouts), non-interlaced 8-bit PNG (round 8 —
-  * JDK Inflater + per-row unfilter, [[graft.exts.PngPixels]]) AND
-  * baseline JPEG (round 9 — Huffman + dequant + IDCT + YCbCr,
-  * [[graft.exts.JpegPixels]]), feeding genuine channel stats, luminance
-  * features and the batched feature path. Only compressed audio/video
-  * (and progressive/arithmetic JPEG variants) remain STUBBED with
-  * deterministic md5 fakes, clearly marked below (DIVERGENCES.md §8).
+  * and WAV (round 6, raw header bytes); pixel decode is REAL for BMP, PNG
+  * and JPEG (sequential and progressive) through the JDK's
+  * `javax.imageio` readers ([[graft.exts.BmpPixels]],
+  * [[graft.exts.PngPixels]], [[graft.exts.JpegPixels]]), and sample
+  * decode for WAV PCM, feeding genuine channel stats, luminance features
+  * and the batched feature path. Only compressed audio/video remain
+  * STUBBED with deterministic md5 fakes, clearly marked below
+  * (DIVERGENCES.md §8).
   * Everything around the stubs (schema, batching, partition behavior,
   * pipeline shape) is real and tested.
   */
@@ -45,11 +45,12 @@ object Multimodal {
         length(payload).cast(LongType).as("size_bytes")).as("meta"))
 
   // ------------------------------------------------------------------ STUBS
-  // STUB: real implementations require image/audio codecs absent from this
-  // container. Each fake is deterministic (derived from the payload bytes
-  // via md5, which every oracle engine also implements — so even the stub
-  // outputs are cross-engine verifiable) so the distributed plumbing is
-  // fully testable end-to-end.
+  // STUB: real implementations need a perceptual-hash or embedding model,
+  // or a video container demuxer, none of which graft ships. Each fake is
+  // deterministic (derived from the payload bytes via md5, which every
+  // oracle engine also implements — so even the stub outputs are
+  // cross-engine verifiable) so the distributed plumbing is fully
+  // testable end-to-end.
 
   /** REAL image-header probe (round 6): parses PNG IHDR, GIF screen
     * descriptor, BMP info header, and the JPEG SOF marker walk directly
@@ -64,33 +65,32 @@ object Multimodal {
     * the audio sibling of [[imageHeader]]. SQL: `audio_header`. */
   def audioHeader(payload: Column): Column = graft.exts.exprs.audioHeader(payload)
 
-  /** REAL BMP pixel decode (round 7 — no codec library, the format is
-    * pure byte layout): packed 0xRRGGBB ints in top-down row-major order
-    * (bottom-up storage and BGR channel order normalized), 24/32-bpp
-    * uncompressed only, null otherwise. SQL: `bmp_pixels`. */
+  /** REAL BMP pixel decode (the JDK's ImageIO reader): packed 0xRRGGBB
+    * ints in top-down row-major order (bottom-up storage and BGR channel
+    * order normalized), palettes looked up; null when the reader refuses
+    * the payload. SQL: `bmp_pixels`. */
   def bmpPixels(payload: Column): Column = graft.exts.exprs.bmpPixels(payload)
 
   /** REAL WAV PCM sample decode (round 7): signed sample values,
     * channel-interleaved; 16-bit and 8-bit PCM only. SQL: `wav_samples`. */
   def wavSamples(payload: Column): Column = graft.exts.exprs.wavSamples(payload)
 
-  /** REAL PNG pixel decode (round 8 — DEFLATE ships in the JDK, no codec
-    * library): packed 0xRRGGBB ints, top-down row-major, for
-    * non-interlaced 8-bit gray/gray+alpha/RGB/RGBA; same output contract
-    * as [[bmpPixels]] so downstream stats are format-agnostic. SQL:
-    * `png_pixels`. */
+  /** REAL PNG pixel decode (the JDK's ImageIO reader): packed 0xRRGGBB
+    * ints, top-down row-major, for every color type, bit depth and
+    * interlace (non-8-bit samples to the nearest 8-bit level, alpha
+    * dropped); same output contract as [[bmpPixels]] so downstream stats
+    * are format-agnostic. SQL: `png_pixels`. */
   def pngPixels(payload: Column): Column = graft.exts.exprs.pngPixels(payload)
 
-  /** REAL baseline JPEG pixel decode (round 9 — Huffman + dequant +
-    * IDCT + YCbCr are pure arithmetic, no codec library): packed
-    * 0xRRGGBB ints for sequential-Huffman 8-bit gray / YCbCr frames
-    * (4:4:4 / 4:2:2 / 4:2:0, optional restart markers); progressive /
-    * arithmetic / CMYK → null. Same output contract as [[bmpPixels]].
-    * SQL: `jpeg_pixels`. */
+  /** REAL JPEG pixel decode (the JDK's ImageIO reader, libjpeg):
+    * packed 0xRRGGBB ints for sequential and progressive Huffman 8-bit
+    * gray / YCbCr / RGB frames (any chroma subsampling, restart markers);
+    * arithmetic / 12-bit / CMYK → null. Same output contract as
+    * [[bmpPixels]]. SQL: `jpeg_pixels`. */
   def jpegPixels(payload: Column): Column = graft.exts.exprs.jpegPixels(payload)
 
   /** Format-sniffing decode over a MIXED payload column — leading magic
-    * bytes pick the BMP/PNG/JPEG decoder, the shape a real crawled
+    * bytes pick BMP, PNG or JPEG (nothing else), the shape a real crawled
     * corpus has. SQL: `image_pixels`. */
   def imagePixels(payload: Column): Column = graft.exts.exprs.imagePixels(payload)
 
@@ -134,7 +134,7 @@ object Multimodal {
 
   /** [[extractFeaturesBmp]] over a MIXED-format payload column (round
     * 9): the magic-sniffing [[graft.exts.ImagePixels]] dispatcher
-    * decodes BMP, PNG and baseline-JPEG members in one pass — the shape
+    * decodes BMP, PNG and JPEG members in one pass — the shape
     * a crawled corpus has; undecodable payloads embed to null. */
   def extractFeaturesImage(df: DataFrame, payloadCol: String,
       dim: Int = 8, batchSize: Int = 64, outputCol: String = "features"): DataFrame =
@@ -337,10 +337,13 @@ object Multimodal {
     * from that formula without parsing a byte. Even k → grayscale; odd
     * k → 3-component YCbCr 4:4:4 (flat per-block chroma). `subsample`
     * switches the color variant to 4:2:0 (2x2 Y blocks per MCU, chroma
-    * at half resolution — decoder replicates samples); `restartEvery`
+    * at half resolution and flat per MCU, so only pixels on an MCU edge
+    * depend on how the decoder upsamples chroma); `restartEvery`
     * inserts DRI/RSTn markers. Optional `acPattern` adds one size-1 AC
     * coefficient per Y block (for the spec's independent-IDCT
-    * cross-check) — oracle queries keep it 0. */
+    * cross-check) — oracle queries keep it 0. `progressiveDc` writes
+    * the same coefficients as a complete progressive (SOF2) scan
+    * script. */
   def synthJpeg(k: Long, subsample: Boolean = false, restartEvery: Int = 0,
       acPattern: Boolean = false, progressiveDc: Boolean = false): Array[Byte] = {
     val color = (k % 2) == 1
@@ -388,16 +391,16 @@ object Multimodal {
       val sampling = if (useSub && c == 0) 0x22 else 0x11
       Seq(c + 1, sampling, 0)
     }
-    // progressive variant: SOF2 frame + a single interleaved DC-only
-    // scan (Ss=Se=0, Ah=Al=0) — the DC entropy coding is identical to
-    // sequential, the absent AC scans leave those coefficients 0, so
-    // the closed-form pixel values are the same dc+128
+    // progressive variant: SOF2 frame, one interleaved DC-only scan
+    // (Ss=Se=0, Ah=Al=0) whose entropy coding is sequential's, then one
+    // all-EOB AC scan per component (Ss=1, Se=63) — a complete scan
+    // script, so every AC coefficient is known to be 0 and the pixels
+    // are the same closed-form dc+128 (a decoder may estimate AC values
+    // a file never sends: libjpeg's block smoothing does)
     seg(if (progressiveDc) 0xc2 else 0xc0,
       Array(8, (h >> 8) & 0xff, h & 0xff, (w >> 8) & 0xff, w & 0xff, nc) ++ sofComps)
     seg(0xc4, Array(0x00) ++ dcCounts ++ dcSyms ++ Array(0x10) ++ acCounts ++ acSyms)
     if (restartEvery > 0) seg(0xdd, Array((restartEvery >> 8) & 0xff, restartEvery & 0xff))
-    seg(0xda, Array(nc) ++ (0 until nc).flatMap(c => Seq(c + 1, 0x00)) ++
-      (if (progressiveDc) Array(0, 0, 0) else Array(0, 63, 0)))
 
     // entropy writer with FF-stuffing
     var acc = 0; var nbits = 0
@@ -431,41 +434,52 @@ object Multimodal {
       if (s > 0) putBits(if (value < 0) value + (1 << s) - 1 else value, s)
     }
     val pred = new Array[Int](nc)
-    var mcu = 0; var rst = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartEvery > 0 && mcu > 0 && mcu % restartEvery == 0) {
+    // one scan's entropy data: `units` MCUs, an RSTn marker (and a DC
+    // prediction reset) before every restartEvery-th
+    def scan(units: Int)(unit: Int => Unit): Unit = {
+      var rst = 0
+      var u = 0
+      while (u < units) {
+        if (restartEvery > 0 && u > 0 && u % restartEvery == 0) {
           flushBits(); b2(0xffd0 + rst); rst = (rst + 1) & 7
           java.util.Arrays.fill(pred, 0)
         }
-        var c = 0
-        while (c < nc) {
-          val blocks = if (useSub && c == 0) Seq((0, 0), (1, 0), (0, 1), (1, 1)) else Seq((0, 0))
-          for ((bx, by) <- blocks) {
-            val dc = c match {
-              case 0 =>
-                val gx = if (useSub) mx * 2 + bx else mx
-                val gy = if (useSub) my * 2 + by else my
-                dcY(gx, gy)
-              case 1 => dcCb(mx, my)
-              case 2 => dcCr(mx, my)
-            }
-            putDc(dc - pred(c)); pred(c) = dc
-            if (!progressiveDc) {
-              if (acPattern && c == 0) putAc(0x11, if ((mx + my) % 2 == 0) 1 else -1)
-              putAc(0x00, 0) // EOB — a progressive DC scan carries no AC
-            }
-          }
-          c += 1
-        }
-        mcu += 1
-        mx += 1
+        unit(u)
+        u += 1
       }
-      my += 1
+      flushBits()
     }
-    flushBits()
+    seg(0xda, Array(nc) ++ (0 until nc).flatMap(c => Seq(c + 1, 0x00)) ++
+      (if (progressiveDc) Array(0, 0, 0) else Array(0, 63, 0)))
+    scan(mcusX * mcusY) { mcu =>
+      val mx = mcu % mcusX; val my = mcu / mcusX
+      var c = 0
+      while (c < nc) {
+        val blocks = if (useSub && c == 0) Seq((0, 0), (1, 0), (0, 1), (1, 1)) else Seq((0, 0))
+        for ((bx, by) <- blocks) {
+          val dc = c match {
+            case 0 =>
+              val gx = if (useSub) mx * 2 + bx else mx
+              val gy = if (useSub) my * 2 + by else my
+              dcY(gx, gy)
+            case 1 => dcCb(mx, my)
+            case 2 => dcCr(mx, my)
+          }
+          putDc(dc - pred(c)); pred(c) = dc
+          if (!progressiveDc) {
+            if (acPattern && c == 0) putAc(0x11, if ((mx + my) % 2 == 0) 1 else -1)
+            putAc(0x00, 0) // EOB — a progressive DC scan carries no AC
+          }
+        }
+        c += 1
+      }
+    }
+    if (progressiveDc) for (c <- 0 until nc) {
+      // non-interleaved: one data unit per MCU, over this component's grid
+      val side = if (useSub && c == 0) 2 else 1
+      seg(0xda, Array(1, c + 1, 0x00, 1, 63, 0))
+      scan(mcusX * side * mcusY * side)(_ => putAc(0x00, 0))
+    }
     b2(0xffd9) // EOI
     out.toByteArray
   }

@@ -1300,14 +1300,13 @@ object PipelineQueries {
       FROM img JOIN blk ON img.k = blk.k JOIN wav ON img.k = wav.k
       ORDER BY 1""")),
 
-    // REAL PNG pixel decode, end-to-end (round 8 — DEFLATE is in the
-    // JDK, so PNG needs no codec library): payloads are synthesized
+    // REAL PNG pixel decode, end-to-end: payloads are synthesized
     // distributedly (Multimodal.synthPng — real Deflater zlib stream
     // split over two IDAT chunks, color type cycling gray/RGB/RGBA with
-    // k, every row filter type exercised), decoded back by the native
-    // png_pixels expression (inflate + None/Sub/Up/Average/Paeth
-    // unfilter), and reduced to statistics the oracle recomputes from
-    // the same closed-form pixel arithmetic WITHOUT parsing a byte.
+    // k, every row filter type exercised), decoded back by the
+    // png_pixels expression (the JDK's ImageIO PNG reader), and reduced
+    // to statistics the oracle recomputes from the same closed-form
+    // pixel arithmetic WITHOUT parsing a byte.
     QueryDef("q72d_png_decode", (s, dir) => {
       import s.implicits._
       val keys = Table(nation(s, dir)).selectNames("n_nationkey").df
@@ -1349,16 +1348,15 @@ object PipelineQueries {
         CAST(SUM(299*r + 587*g + 114*b) AS BIGINT) AS lum_sum
       FROM pxl GROUP BY 1 ORDER BY 1""")),
 
-    // REAL baseline JPEG pixel decode, end-to-end (round 9 — Huffman
-    // entropy decode + dequant + IDCT + YCbCr are pure arithmetic; the
-    // last image modality unstubbed). Payloads synthesize distributedly
-    // (Multimodal.synthJpeg — DC-only blocks over a flat quant table, so
-    // each decoded pixel is the closed-form dc+128; even k grayscale,
-    // odd k YCbCr 4:4:4 with the JFIF matrix at round-half-up), decode
-    // through the native jpeg_pixels expression, and reduce to stats the
-    // oracle recomputes from the same block formulas WITHOUT parsing a
-    // byte — the Huffman tables, DC prediction chain, dequantizer and
-    // IDCT all have to be right for the hash to match.
+    // REAL baseline JPEG pixel decode, end-to-end. Payloads synthesize
+    // distributedly (Multimodal.synthJpeg — DC-only blocks over a flat
+    // quant table, so each decoded pixel is the closed-form dc+128; even
+    // k grayscale, odd k YCbCr 4:4:4 with the JFIF matrix at
+    // round-half-up), decode through the jpeg_pixels expression (the
+    // JDK's ImageIO reader, libjpeg), and reduce to stats the oracle
+    // recomputes from the same block formulas WITHOUT parsing a byte —
+    // the synthesized Huffman tables, DC prediction chain and
+    // quantization have to be right for the hash to match.
     QueryDef("q72e_jpeg_decode", (s, dir) => {
       import s.implicits._
       val keys = Table(nation(s, dir)).selectNames("n_nationkey").df
@@ -1403,14 +1401,14 @@ object PipelineQueries {
         CAST(SUM(64*(299*r + 587*g + 114*b)) AS BIGINT) AS lum_sum
       FROM px GROUP BY 1 ORDER BY 1""")),
 
-    // PROGRESSIVE JPEG decode (round 9 second pass — SOF2 multi-scan
-    // frames with spectral selection + successive approximation; the
-    // coefficient buffers accumulate across scans and IDCT once at
-    // EOI). Synthesized frames are DC-only progressive scans, so the
-    // same closed-form dc+128 oracle as q72e value-checks the
-    // progressive scan machinery end-to-end; the spec additionally
-    // cross-checks ImageIO-encoded full progressive scripts (AC bands,
-    // refinement passes, EOB runs) against the JDK's own decoder.
+    // PROGRESSIVE JPEG decode: synthesized SOF2 frames carry a complete
+    // scan script — one interleaved DC scan, then an all-EOB AC scan per
+    // component — so every coefficient is sent and the same closed-form
+    // dc+128 oracle as q72e value-checks the progressive path end to
+    // end. (A DC-only script would leave AC 1-5 unsent, and libjpeg's
+    // block smoothing estimates those from neighbouring blocks.) The
+    // spec additionally checks ImageIO-encoded full progressive scripts
+    // (AC bands, refinement passes, EOB runs) against their source.
     QueryDef("q72g_jpeg_progressive", (s, dir) => {
       import s.implicits._
       val keys = Table(nation(s, dir)).selectNames("n_nationkey").df

@@ -83,4 +83,28 @@ class GeoReprojectSpec extends SparkSpec {
     assert(r.getString(0) == "POINT (2.5 48.5)")
     assert(r.getInt(1) == 9999)
   }
+
+  test("a finite vertex that projects to a non-finite one makes the result null") {
+    // 4326 -> UTM zone 1 at 90 degrees from its central meridian on the
+    // equator gives (+-Infinity, -Infinity)
+    for (lon <- Seq(-87.0, 93.0)) {
+      val p = GeoWkb.writePoint(lon, 0)
+      assert(eval(GeoReproject.bySrid(Literal(p), 4326, 32601)) == null, s"transform $lon")
+      assert(eval(GeoReproject(Literal(p), "EPSG:4326", "EPSG:32601", bySrid = false)) == null,
+        s"convert $lon")
+    }
+    // one such member nulls the whole collection
+    val multi = GeoGeom.writeMulti(GeoGeom.MultiPointType, Array(
+      GeoWkb.writePoint(-177, 10), GeoWkb.writePoint(-87, 0)))
+    assert(eval(GeoReproject.bySrid(Literal(multi), 4326, 32601)) == null)
+    val r = spark.sql("""SELECT
+        geo_transform(geo_point(-87D, 0D), 4326, 32601) AS t,
+        geo_convert(geo_point(-87D, 0D), 'EPSG:4326', 'EPSG:32601') AS c,
+        geo_transform(geo_point(-177D, 10D), 4326, 32601) AS ok""").head()
+    assert(r.isNullAt(0) && r.isNullAt(1) && !r.isNullAt(2))
+    // NaN input ordinates (POINT EMPTY) pass through
+    val empty = eval(GeoReproject.bySrid(Literal(GeoWkb.writePoint(Double.NaN, Double.NaN)),
+      4326, 32601))
+    assert(empty != null && GeoGeomOps.srid(empty).intValue() == 32601)
+  }
 }

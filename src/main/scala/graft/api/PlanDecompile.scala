@@ -74,9 +74,7 @@ object PlanDecompile {
       catch {
         // only retry when extraction actually changed the rendering — a
         // plain refusal refuses identically either way
-        case r: Refused if first.ctesAttempted =>
-          if (sys.env.contains("GRAFT_RENDER_DEBUG"))
-            System.err.println(s"[renderSql] CTE form refused, retrying inline: ${r.getMessage}")
+        case _: Refused if first.ctesAttempted =>
           attempt(false, new Run)
       }
     if (dialect == "spark") sparkSql else SqlDecompile.renderSql(op, dialect)
@@ -241,14 +239,9 @@ object PlanDecompile {
         .sameResult(dealias(strip(optimizedInlined(re))))
       catch { case scala.util.control.NonFatal(e) =>
         refuse(s"rendered SQL fails optimization: ${e.getClass.getSimpleName}: ${e.getMessage}") }
-    if (!same) {
-      if (sys.env.contains("GRAFT_RENDER_DEBUG"))
-        System.err.println("[verify] sameResult failed\n--- original ---\n" +
-          dealias(strip(optimizedInlined(df))).treeString +
-          "\n--- re-analyzed ---\n" + dealias(strip(optimizedInlined(re))).treeString)
+    if (!same)
       refuse("rendered SQL re-analyzes to a semantically DIFFERENT plan " +
         "(optimized-plan sameResult check failed)")
-    }
   }
 
   /** Inline every CTE in an ANALYZED plan: each [[CTERelationRef]] is

@@ -566,8 +566,9 @@ object Table {
   def readOrc(spark: SparkSession, path: String): Table = new Table(spark.read.orc(path))
 
   /** ibis read_delta (backends/pyspark/__init__.py:801) — native
-    * transaction-log replay for protocol-v1 tables, no delta-spark jar
-    * needed for the read side; see [[graft.sources.DeltaRead]]. */
+    * transaction-log replay for reader protocol v1-v3 (column mapping,
+    * deletion vectors), no delta-spark jar needed for the read side;
+    * see [[graft.sources.DeltaRead]]. */
   def readDelta(spark: SparkSession, path: String,
       asOfVersion: Option[Long] = None): Table =
     new Table(graft.sources.DeltaRead.readDelta(spark, path, asOfVersion))

@@ -705,10 +705,20 @@ private[graft] object ProjEngine {
           val (x, y) = fwdM(lon, lat)
           ((x + fe0) / toMeter, (y + fn0) / toMeter)
         },
-        (x: Double, y: Double) => invM(x * toMeter - fe0, y * toMeter - fn0))
+        (x: Double, y: Double) => {
+          val (lon, lat) = invM(x * toMeter - fe0, y * toMeter - fn0)
+          (adjlon(lon), lat)
+        })
 
     Crs(projName, ell, towgs84, srid, fwd, inv)
   }
+
+  /** Longitude wrapped into [-180, 180] — PROJ's `adjlon`, which every
+    * projected inverse applies unless `+over` is given (never parsed
+    * here). A tiny overshoot stays, so the antimeridian keeps its sign. */
+  private def adjlon(lon: Double): Double =
+    if (math.abs(lon) <= 180.0 + 1e-10) lon
+    else lon - 360.0 * math.floor((lon + 180.0) / 360.0)
 
   // ---- curated EPSG table (published parameters, EPSG registry) -----------
 

@@ -805,13 +805,11 @@ object MiscQueries {
         StructField("key", keyT, nullable = true, fm(1, "p-key")),
         StructField("reg", regT, nullable = true, fm(2, "p-reg"))))
       val logDir = new java.io.File(base, "_delta_log"); logDir.mkdirs()
-      def jstr(x: String) =
-        "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       java.nio.file.Files.write(
         new java.io.File(logDir, f"${0L}%020d.json").toPath,
         (Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
           s"""{"metaData":{"id":"cmq","format":{"provider":"parquet","options":{}},""" +
-            s""""schemaString":${jstr(logical.json)},"partitionColumns":[],""" +
+            s""""schemaString":${graft.SparkEntry.jsonString(logical.json)},"partitionColumns":[],""" +
             s""""configuration":{"delta.columnMapping.mode":"name",""" +
             s""""delta.columnMapping.maxColumnId":"2"}}}""",
           """{"add":{"path":"part-0.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""

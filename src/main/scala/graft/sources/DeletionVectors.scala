@@ -1,31 +1,32 @@
 package graft.sources
 
-import java.io.File
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, File}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.Files
 import java.util.zip.CRC32
 
+import scala.util.control.NonFatal
+
+import org.roaringbitmap.longlong.Roaring64NavigableMap
+
 /** Deletion-vector codec for the Delta Lake protocol (delta.io
-  * PROTOCOL.md "Deletion Vectors") — pure byte math, no delta jar:
+  * PROTOCOL.md "Deletion Vectors"), no delta jar:
   *
   *   - Z85 (ZeroMQ base85) for the descriptor's `pathOrInlineDv`
   *     payloads (20-char UUIDs for on-disk DVs, padded data for inline).
-  *   - The 64-bit "RoaringBitmapArray" portable serialization: LE magic
-  *     1681511377, LE int64 bitmap count, then each 32-bit Roaring
-  *     bitmap in the STANDARD portable format (cookies 12346/12347;
-  *     array / bitmap / run containers) — value = (bitmapIndex << 32)
-  *     | uint32.
+  *   - The 64-bit "RoaringBitmapArray" bitmap: LE magic 1681511377, then
+  *     the RoaringFormatSpec 64-bit portable layout (LE int64 bitmap
+  *     count; per bitmap an LE int32 key and a standard 32-bit portable
+  *     Roaring bitmap), coded by RoaringBitmap's `Roaring64NavigableMap`
+  *     — value = (key << 32) | uint32.
   *   - The DV file layout: 1-byte format version, then per-DV
   *     [int32 BE size][bitmap bytes][int32 BE CRC32-of-bytes], the
   *     descriptor's `offset` pointing at the size word.
   *
-  * Deserialization returns SORTED row-index arrays (the natural order of
-  * the container walk), so membership during the read-side filter is a
-  * binary search. Serialization (the write side of `deleteWhere`) emits
-  * array containers below 4097 values and bitmap containers above —
-  * always valid portable output any Delta reader accepts. Corrupt input
-  * (bad magic, bad CRC, truncation) fails clearly, never returns a
-  * partial bitmap. */
+  * Deserialization returns SORTED row-index arrays, so membership during
+  * the read-side filter is a binary search. Corrupt input (bad magic or
+  * cookie, bad CRC, truncation) fails clearly, never returns a partial
+  * bitmap. */
 object DeletionVectors {
 
   /** Descriptor fields of an `add.deletionVector` action. */
@@ -102,164 +103,49 @@ object DeletionVectors {
   // --------------------------------------- RoaringBitmapArray portable
 
   private val PortableMagic = 1681511377
-  private val SerialCookieNoRun = 12346
-  private val SerialCookie = 12347
 
   /** Deserialize the 64-bit portable RoaringBitmapArray to sorted row
-    * indices. */
+    * indices. Any malformed input (bad magic or cookie, truncation,
+    * trailing bytes, negative values) is an IllegalArgumentException. */
   def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val magic = bb.getInt
-    require(magic == PortableMagic,
-      s"deletion vector bitmap has magic $magic, expected $PortableMagic " +
-        "(portable RoaringBitmapArray)")
-    val n = bb.getLong
-    require(n >= 0 && n <= Int.MaxValue, s"implausible bitmap count $n")
-    val out = Array.newBuilder[Long]
-    var hi = 0L
-    while (hi < n) {
-      readRoaring32(bb, hi << 32, out)
-      hi += 1
+    require(bytes.length >= 4 &&
+        ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt == PortableMagic,
+      s"deletion vector bitmap lacks magic $PortableMagic (portable RoaringBitmapArray)")
+    val in = new ByteArrayInputStream(bytes, 4, bytes.length - 4)
+    val map = new Roaring64NavigableMap()
+    try map.deserializePortable(new DataInputStream(in))
+    catch {
+      case e: IllegalArgumentException => throw e
+      case NonFatal(e) => throw new IllegalArgumentException(
+        s"corrupt deletion vector bitmap: ${e.getClass.getSimpleName}: ${e.getMessage}", e)
     }
-    out.result()
+    require(in.available() == 0,
+      s"deletion vector bitmap has ${in.available()} trailing bytes")
+    val out = map.toArray
+    require(out.isEmpty || (out.head >= 0 && out.last >= 0),
+      "deletion vector bitmap holds negative row indices")
+    out
   }
 
-  /** One standard 32-bit portable Roaring bitmap at the buffer position. */
-  private def readRoaring32(bb: ByteBuffer, base: Long,
-      out: scala.collection.mutable.ArrayBuilder[Long]): Unit = {
-    val cookie = bb.getInt
-    var size = 0
-    var runFlags: Array[Byte] = null
-    if ((cookie & 0xffff) == SerialCookie) {
-      size = (cookie >>> 16) + 1
-      runFlags = new Array[Byte]((size + 7) / 8)
-      bb.get(runFlags)
-    } else if (cookie == SerialCookieNoRun) {
-      size = bb.getInt
-    } else {
-      throw new IllegalArgumentException(
-        s"unknown roaring cookie $cookie in deletion vector")
-    }
-    val keys = new Array[Int](size)
-    val cards = new Array[Int](size)
-    var i = 0
-    while (i < size) {
-      keys(i) = bb.getShort & 0xffff
-      cards(i) = (bb.getShort & 0xffff) + 1
-      i += 1
-    }
-    // offset section: present always for the no-run cookie, and for the
-    // run cookie when size >= 4; the data is sequential so just skip it
-    if (cookie == SerialCookieNoRun || size >= 4) bb.position(bb.position() + 4 * size)
-    i = 0
-    while (i < size) {
-      val keyBase = base | (keys(i).toLong << 16)
-      val isRun = runFlags != null && ((runFlags(i / 8) >> (i % 8)) & 1) == 1
-      if (isRun) {
-        val nRuns = bb.getShort & 0xffff
-        var r = 0
-        while (r < nRuns) {
-          val start = bb.getShort & 0xffff
-          val len = bb.getShort & 0xffff // length - 1
-          var v = start
-          while (v <= start + len) { out += (keyBase | v); v += 1 }
-          r += 1
-        }
-      } else if (cards(i) > 4096) {
-        // bitmap container: 1024 LE longs
-        var w = 0
-        while (w < 1024) {
-          var word = bb.getLong
-          val wordBase = keyBase | (w.toLong << 6)
-          while (word != 0L) {
-            val t = java.lang.Long.numberOfTrailingZeros(word)
-            out += (wordBase | t)
-            word &= word - 1
-          }
-          w += 1
-        }
-      } else {
-        var v = 0
-        while (v < cards(i)) { out += (keyBase | (bb.getShort & 0xffff)); v += 1 }
-      }
-      i += 1
-    }
-  }
-
-  /** Serialize sorted row indices as a portable RoaringBitmapArray
-    * (array containers ≤4096 values, bitmap containers above — no run
-    * containers on the write path; both are valid portable output). */
+  /** Serialize sorted row indices as a portable RoaringBitmapArray: the
+    * magic, then `Roaring64NavigableMap.serializePortable` (LE int64
+    * bitmap count, each bitmap's LE int32 key and standard 32-bit portable
+    * Roaring body). No `runOptimize`, so containers are array (≤4096
+    * values) or bitmap. */
   def serialize(sorted: Array[Long]): Array[Byte] = {
-    require(sorted.isEmpty || sorted.last >= 0, "row indices must be non-negative")
-    val nBitmaps = if (sorted.isEmpty) 0L else (sorted.last >>> 32) + 1
-    // group by (high32, key16): count per container
-    val bitmaps = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-    var pos = 0
-    var hi = 0L
-    while (hi < nBitmaps) {
-      val end = {
-        var e = pos
-        while (e < sorted.length && (sorted(e) >>> 32) == hi) e += 1
-        e
-      }
-      bitmaps += serializeRoaring32(sorted, pos, end)
-      pos = end
-      hi += 1
-    }
-    val total = 12 + bitmaps.map(_.length).sum
-    val bb = ByteBuffer.allocate(total).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(PortableMagic).putLong(nBitmaps)
-    bitmaps.foreach(bb.put)
-    bb.array()
-  }
-
-  private def serializeRoaring32(sorted: Array[Long], from: Int, to: Int): Array[Byte] = {
-    // containers: consecutive runs of equal key16 within [from, to)
-    case class C(key: Int, from: Int, to: Int)
-    val cs = scala.collection.mutable.ArrayBuffer[C]()
-    var i = from
-    while (i < to) {
-      val key = ((sorted(i) >>> 16) & 0xffff).toInt
-      var j = i
-      while (j < to && ((sorted(j) >>> 16) & 0xffff).toInt == key) j += 1
-      cs += C(key, i, j)
-      i = j
-    }
-    val dataLen = cs.map(c => if (c.to - c.from > 4096) 8192 else (c.to - c.from) * 2).sum
-    val bb = ByteBuffer.allocate(8 + cs.length * 8 + dataLen)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(SerialCookieNoRun).putInt(cs.length)
-    cs.foreach { c =>
-      bb.putShort(c.key.toShort).putShort((c.to - c.from - 1).toShort)
-    }
-    // offsets (always present for the no-run cookie)
-    var off = 8 + cs.length * 4 + cs.length * 4
-    cs.foreach { c =>
-      bb.putInt(off)
-      off += (if (c.to - c.from > 4096) 8192 else (c.to - c.from) * 2)
-    }
-    cs.foreach { c =>
-      if (c.to - c.from > 4096) {
-        val words = new Array[Long](1024)
-        var v = c.from
-        while (v < c.to) {
-          val low = (sorted(v) & 0xffff).toInt
-          words(low >>> 6) |= (1L << (low & 63))
-          v += 1
-        }
-        words.foreach(bb.putLong)
-      } else {
-        var v = c.from
-        while (v < c.to) { bb.putShort((sorted(v) & 0xffff).toShort); v += 1 }
-      }
-    }
-    bb.array()
+    require(sorted.isEmpty || sorted.head >= 0, "row indices must be non-negative")
+    val map = new Roaring64NavigableMap()
+    sorted.foreach(map.addLong)
+    val buf = new ByteArrayOutputStream()
+    val out = new DataOutputStream(buf)
+    out.writeInt(Integer.reverseBytes(PortableMagic))
+    map.serializePortable(out)
+    out.flush()
+    buf.toByteArray
   }
 
   // ------------------------------------------------------- DV file I/O
 
-  /** Resolve a descriptor to its sorted deleted row indices. `tableDir`
-    * anchors relative ("u"-type) DV files. */
   /** The on-disk sidecar a descriptor references (None for inline).
     * u-type: pathOrInlineDv = <optional prefix><20-char z85 uuid>, the DV
     * living at <tableDir>/<prefix>/deletion_vector_<uuid>.bin. */
@@ -275,6 +161,8 @@ object DeletionVectors {
     case _ => None
   }
 
+  /** Resolve a descriptor to its sorted deleted row indices. `tableDir`
+    * anchors relative ("u"-type) DV files. */
   def readDescriptor(d: Descriptor, tableDir: File): Array[Long] = d.storageType match {
     case "i" =>
       val raw = z85Decode(d.pathOrInlineDv)

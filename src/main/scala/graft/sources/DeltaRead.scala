@@ -4,7 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StringType, StructField, StructType}
 
 /** Native Delta Lake READ — no delta-spark jar required.
   *
@@ -18,6 +18,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
   * configuration. Within a commit, removes reconcile before adds (the
   * protocol's set semantics — a DV-update commit re-adds the same path).
   *
+  * Replay is one path for every log: the newest complete checkpoint (at
+  * its version) and the commit JSONs above it project to one narrow
+  * action frame, and ONE aggregate reconciles it — last-writer-wins per
+  * path on (version, isAdd, line), metaData/protocol rows folded in log
+  * order — so the driver receives one row per live file and the job
+  * count does not grow with the commit count.
+  *
   * Protocol support (round 9 extends v1 → v2/v3):
   *   - **Column mapping** (reader v2, or the `columnMapping` feature):
   *     modes `name` and `id` — files are read under the RECURSIVE
@@ -27,7 +34,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
   *     maps in one expression. `partitionValues` keys are physical.
   *   - **Deletion vectors** (reader v3 + `deletionVectors` feature):
   *     each add's descriptor resolves through [[DeletionVectors]]
-  *     (u/p/inline storage, portable RoaringBitmapArray) to the file's
+  *     (u/p/inline storage, the standard 64-bit portable Roaring
+  *     layout) to the file's
   *     deleted row positions; the scan attaches
   *     `_metadata.file_path/row_index` and drops marked rows with a
   *     broadcast binary-search filter before any downstream operator.
@@ -45,9 +53,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, St
   * convention) — attached as per-partition literals, one scan per
   * distinct partition tuple, unioned.
   *
-  * Scale: the log is bounded by table history (thousands of commits ≈
-  * MBs of JSON; checkpoints collapse it), so replay is driver-side
-  * metadata work; DV bitmaps are per-file and ride one broadcast; the
+  * Scale: the log is bounded by table history and checkpoints collapse
+  * it; the reconcile runs on executors and the driver holds only the
+  * active-file map. DV bitmaps are per-file and ride one broadcast; the
   * DATA read is a plain pruned parquet scan over the active files.
   * (Reference surface: `read_delta`, backends/pyspark/__init__.py:801.)
   */
@@ -318,182 +326,102 @@ object DeltaRead {
         s", have ${commits.map(_._1).mkString("[", ",", "]")} — " +
         "aged-out prefix without a covering checkpoint")
 
+    val commitFrame = if (commits.isEmpty) None else Some(actions(
+      spark.read.schema(CommitSchema).option("mode", "FAILFAST")
+        .json(commits.map(_._2.getAbsolutePath).toIndexedSeq: _*),
+      substring(col("_metadata.file_name"), 1, 20).cast("long")))
+    val checkpointFrame = checkpoint.map { case (v, files) =>
+      actions(spark.read.parquet(files.map(_.getAbsolutePath): _*), lit(v))
+    }
+    val acts = (checkpointFrame ++ commitFrame).reduce(_ unionByName _)
+      // intra-commit line order (partition-local; a commit JSON is one split)
+      .withColumn("ord", monotonically_increasing_id())
+    // one reconcile for the whole log: file actions last-writer-wins per
+    // path on (version, isAdd, ord), so the newest action wins across
+    // versions and, within one, an add beats a remove (the protocol's
+    // remove-then-re-add DV-update shape) and the last line beats earlier
+    // ones; metadata/protocol rows (a handful per log) pass through one
+    // each and fold below in log order. The driver receives one row per
+    // live file, not every historical action.
+    val rows = acts
+      .filter(col("path").isNotNull || col("meta"))
+      .groupBy(col("path"), when(col("path").isNull, col("ord")))
+      .agg(max_by(struct(acts.columns.map(col).toIndexedSeq: _*),
+        struct(col("v"), col("isAdd"), col("ord"))).as("w"))
+      .select("w.*")
+      .filter(col("path").isNull || col("isAdd"))
+      .collect()
+      .sortBy(r => (r.getAs[Long]("v"), r.getAs[Long]("ord")))
+
     val st = LogState()
     st.version = target
-
-    def applyActions(df: DataFrame): Unit = {
-      val cols = df.columns.toSet
-      def addSub(name: String): Boolean =
-        cols("add") && df.select(col("add.*")).columns.contains(name)
-      val pvCol =
-        if (addSub("partitionValues")) to_json(col("add.partitionValues")).cast("string")
-        else lit(null).cast("string")
-      val dvCol =
-        if (addSub("deletionVector")) to_json(col("add.deletionVector")).cast("string")
-        else lit(null).cast("string")
-      def protoSub(name: String): Boolean =
-        cols("protocol") && df.select(col("protocol.*")).columns.contains(name)
-      val featCol =
-        if (protoSub("readerFeatures")) col("protocol.readerFeatures").cast("array<string>")
-        else lit(null).cast("array<string>")
-      val wFeatCol =
-        if (protoSub("writerFeatures")) col("protocol.writerFeatures").cast("array<string>")
-        else lit(null).cast("array<string>")
-      val confCol =
-        if (cols("metaData") &&
-            df.select(col("metaData.*")).columns.contains("configuration"))
-          to_json(col("metaData.configuration")).cast("string")
-        else lit(null).cast("string")
-      val rows = df.select(
-        (if (cols("protocol")) col("protocol.minReaderVersion") else lit(null)).cast("int"),
-        if (cols("metaData")) col("metaData.schemaString") else lit(null).cast("string"),
-        if (cols("metaData")) col("metaData.partitionColumns").cast("array<string>")
-        else lit(null).cast("array<string>"),
-        (if (cols("add")) col("add.path") else lit(null)).cast("string"),
-        (if (cols("remove")) col("remove.path") else lit(null)).cast("string"),
-        // struct (json inference) or map (real checkpoints) → uniform JSON
-        pvCol,
-        dvCol,
-        featCol,
-        confCol,
-        (if (cols("protocol")) col("protocol.minWriterVersion") else lit(null)).cast("int"),
-        wFeatCol
-      ).collect()
-      // the protocol reconciles a commit as a SET: removes apply before
-      // adds, so a DV-update commit (remove path + re-add with the new
-      // descriptor) keeps the file regardless of line order
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) st.minReader = r.getInt(0)
-        if (!r.isNullAt(9)) st.minWriter = r.getInt(9)
-        if (!r.isNullAt(7)) st.readerFeatures = r.getSeq[String](7).toSet
-        if (!r.isNullAt(10)) st.writerFeatures = r.getSeq[String](10).toSet
-        if (!r.isNullAt(1)) st.schemaJson = r.getString(1)
-        if (!r.isNullAt(2)) st.partitionCols = r.getSeq[String](2)
-        if (!r.isNullAt(8)) st.configuration = parseStringMap(r.getString(8))
-        if (!r.isNullAt(4)) st.active.remove(r.getString(4))
+    rows.foreach { r =>
+      def at(f: String): Option[Int] = Some(r.fieldIndex(f)).filterNot(r.isNullAt)
+      def strMap(i: Int) = r.getMap[String, String](i).toMap
+      at("path") match {
+        case Some(i) => st.active.put(r.getString(i),
+          AddEntry(at("pv").fold(Map.empty[String, String])(strMap), r.getAs[String]("dv")))
+        case None =>
+          at("minReader").foreach(i => st.minReader = r.getInt(i))
+          at("minWriter").foreach(i => st.minWriter = r.getInt(i))
+          at("readerFeatures").foreach(i => st.readerFeatures = r.getSeq[String](i).toSet)
+          at("writerFeatures").foreach(i => st.writerFeatures = r.getSeq[String](i).toSet)
+          at("schema").foreach(i => st.schemaJson = r.getString(i))
+          at("partitionCols").foreach(i => st.partitionCols = r.getSeq[String](i))
+          at("conf").foreach(i => st.configuration = strMap(i))
       }
-      rows.foreach { r =>
-        if (!r.isNullAt(3)) {
-          val pv: Map[String, String] =
-            if (r.isNullAt(5)) Map.empty else parseStringMap(r.getString(5))
-          st.active.put(r.getString(3), AddEntry(pv, if (r.isNullAt(6)) null else r.getString(6)))
-        }
-      }
-    }
-
-    checkpoint.foreach { case (_, files) =>
-      applyActions(spark.read.parquet(files.map(_.getAbsolutePath): _*))
-    }
-    // SCALE SWITCH (round 11): a long tail of commit JSONs replays as ONE
-    // distributed reconcile job instead of a per-commit read+collect loop
-    // — a 100 TB table accumulating tens of millions of add/remove
-    // actions parses and reconciles on executors; the driver receives one
-    // row per CURRENTLY-REFERENCED path (exactly what scan planning
-    // needs, the delta-spark model), not every historical action.
-    val minDistributed = spark.conf
-      .getOption("graft.delta.replay.distributedMinCommits").map(_.toInt).getOrElse(64)
-    if (commits.length >= minDistributed) distributedReplay(spark, commits.toSeq, st)
-    else commits.foreach { case (_, f) =>
-      // one commit at a time keeps action ordering exact across commits
-      applyActions(spark.read.json(f.getAbsolutePath))
     }
     st
   }
 
-  /** Replay `commits` (ascending, contiguous) into `st` as a Spark job:
-    * all commit JSONs load in ONE read with their version recovered from
-    * the file name; metadata/protocol actions (rare) collect ordered and
-    * fold exactly like the sequential path; file actions reconcile
-    * last-writer-wins per path — `max(struct(version, isAdd, …))`, one
-    * map-side-combining aggregation, so adds beat removes within a
-    * version (the protocol's remove-then-re-add DV-update shape) and the
-    * newest action wins across versions. Winners overlay the
-    * checkpoint-seeded active map. */
-  private def distributedReplay(spark: SparkSession, commits: Seq[(Long, File)],
-      st: LogState): Unit = {
-    val df = spark.read.json(commits.map(_._2.getAbsolutePath): _*)
-      .withColumn("__v",
-        regexp_extract(input_file_name(), "(\\d{20})\\.json", 1).cast("long"))
-    val cols = df.columns.toSet
-    def sub(parent: String, name: String): Boolean =
-      cols(parent) && df.select(col(s"$parent.*")).columns.contains(name)
+  /** The action fields replay reads, at the protocol's types: commit
+    * JSONs parse straight into it, with no schema-inference pass. */
+  private val CommitSchema = StructType.fromDDL(
+    "add STRUCT<path: STRING, partitionValues: MAP<STRING, STRING>, " +
+      "deletionVector: STRUCT<storageType: STRING, pathOrInlineDv: STRING, " +
+      "offset: BIGINT, sizeInBytes: BIGINT, cardinality: BIGINT, maxRowIndex: BIGINT>>, " +
+    "remove STRUCT<path: STRING>, " +
+    "metaData STRUCT<schemaString: STRING, partitionColumns: ARRAY<STRING>, " +
+      "configuration: MAP<STRING, STRING>>, " +
+    "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
+      "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>")
 
-    // metadata / protocol: a handful of rows across any real log — apply
-    // them in version order with the same semantics as applyActions
-    if (cols("metaData") || cols("protocol")) {
-      val metaRows = df.filter(
-        (if (cols("metaData")) col("metaData").isNotNull else lit(false)) ||
-        (if (cols("protocol")) col("protocol").isNotNull else lit(false)))
-        .select(
-          col("__v"),
-          (if (cols("protocol")) col("protocol.minReaderVersion") else lit(null)).cast("int"),
-          (if (cols("protocol")) col("protocol.minWriterVersion") else lit(null)).cast("int"),
-          (if (sub("protocol", "readerFeatures")) col("protocol.readerFeatures")
-           else lit(null)).cast("array<string>"),
-          (if (sub("protocol", "writerFeatures")) col("protocol.writerFeatures")
-           else lit(null)).cast("array<string>"),
-          (if (cols("metaData")) col("metaData.schemaString") else lit(null)).cast("string"),
-          (if (cols("metaData")) col("metaData.partitionColumns")
-           else lit(null)).cast("array<string>"),
-          (if (sub("metaData", "configuration")) to_json(col("metaData.configuration"))
-           else lit(null)).cast("string"))
-        .collect().sortBy(_.getLong(0))
-      metaRows.foreach { r =>
-        if (!r.isNullAt(1)) st.minReader = r.getInt(1)
-        if (!r.isNullAt(2)) st.minWriter = r.getInt(2)
-        if (!r.isNullAt(3)) st.readerFeatures = r.getSeq[String](3).toSet
-        if (!r.isNullAt(4)) st.writerFeatures = r.getSeq[String](4).toSet
-        if (!r.isNullAt(5)) st.schemaJson = r.getString(5)
-        if (!r.isNullAt(6)) st.partitionCols = r.getSeq[String](6)
-        if (!r.isNullAt(7)) st.configuration = parseStringMap(r.getString(7))
+  /** Project a frame of log actions — commit JSONs under [[CommitSchema]]
+    * or a checkpoint parquet under whatever schema its writer used — to
+    * the one narrow action row replay reconciles. Missing fields read
+    * null; string maps stored as structs (JSON-inferred checkpoints)
+    * become maps; the DV descriptor stays JSON text. */
+  private def actions(df: DataFrame, version: Column): DataFrame = {
+    def typeOf(path: String): Option[DataType] =
+      path.split('.').foldLeft(Option[DataType](df.schema)) {
+        case (Some(s: StructType), name) => s.find(_.name == name).map(_.dataType)
+        case _ => None
       }
+    def get(path: String, to: DataType): Column =
+      if (typeOf(path).isDefined) col(path).cast(to) else lit(null).cast(to)
+    val strMap = MapType(StringType, StringType)
+    def asMap(path: String): Column = typeOf(path) match {
+      case Some(_: StructType) => from_json(to_json(col(path)), strMap)
+      case _ => get(path, strMap)
     }
-
-    // file actions: last-writer-wins reconcile per path
-    if (cols("add") || cols("remove")) {
-      val ap = (if (cols("add")) col("add.path") else lit(null)).cast("string")
-      val rp = (if (cols("remove")) col("remove.path") else lit(null)).cast("string")
-      val pv = if (sub("add", "partitionValues"))
-        to_json(col("add.partitionValues")).cast("string") else lit(null).cast("string")
-      val dv = if (sub("add", "deletionVector"))
-        to_json(col("add.deletionVector")).cast("string") else lit(null).cast("string")
-      val winners = df
-        .filter(ap.isNotNull || rp.isNotNull)
-        // __ord: intra-commit line order (partition-local id; a commit
-        // JSON is one split) — after (version, isAdd) the tie-break is
-        // the LAST action line, matching the sequential replay exactly
-        // (not the lexicographic pv/dv text a bare struct-max would use)
-        .withColumn("__ord", monotonically_increasing_id())
-        .select(coalesce(ap, rp).as("path"),
-          struct(col("__v"), ap.isNotNull.cast("int").as("isAdd"),
-            col("__ord").as("ord"), pv.as("pv"), dv.as("dv")).as("act"))
-        .groupBy(col("path"))
-        .agg(max(col("act")).as("w"))
-        .select(col("path"), col("w.isAdd"), col("w.pv"), col("w.dv"))
-        .collect()
-      winners.foreach { r =>
-        val path = r.getString(0)
-        if (r.getInt(1) == 1) {
-          val pvMap: Map[String, String] =
-            if (r.isNullAt(2)) Map.empty else parseStringMap(r.getString(2))
-          st.active.put(path, AddEntry(pvMap, if (r.isNullAt(3)) null else r.getString(3)))
-        } else st.active.remove(path)
-      }
-    }
-  }
-
-  /** Flat string→string JSON object → Map (partitionValues /
-    * configuration shape). */
-  private def parseStringMap(json: String): Map[String, String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    JsonMethods.parseOpt(json) match {
-      case Some(JObject(fields)) => fields.collect {
-        case (k, JString(v)) => k -> v
-        case (k, JNull) => k -> null
-      }.toMap
-      case _ => Map.empty
-    }
+    def present(path: String): Column =
+      if (typeOf(path).isDefined) col(path).isNotNull else lit(false)
+    val addPath = get("add.path", StringType)
+    df.select(
+      version.as("v"),
+      coalesce(addPath, get("remove.path", StringType)).as("path"),
+      addPath.isNotNull.as("isAdd"),
+      asMap("add.partitionValues").as("pv"),
+      (if (typeOf("add.deletionVector").isDefined) to_json(col("add.deletionVector"))
+       else lit(null).cast(StringType)).as("dv"),
+      (present("metaData") || present("protocol")).as("meta"),
+      get("protocol.minReaderVersion", IntegerType).as("minReader"),
+      get("protocol.minWriterVersion", IntegerType).as("minWriter"),
+      get("protocol.readerFeatures", ArrayType(StringType)).as("readerFeatures"),
+      get("protocol.writerFeatures", ArrayType(StringType)).as("writerFeatures"),
+      get("metaData.schemaString", StringType).as("schema"),
+      get("metaData.partitionColumns", ArrayType(StringType)).as("partitionCols"),
+      asMap("metaData.configuration").as("conf"))
   }
 
   /** `add.deletionVector` JSON → descriptor. */

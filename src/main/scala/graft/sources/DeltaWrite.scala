@@ -6,6 +6,8 @@ import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.SparkEntry.jsonString
+
 /** Native Delta Lake WRITE for filesystems with atomic link/rename — the
   * single-writer side of [[DeltaRead]], per the same public protocol:
   * data lands as plain parquet parts, then ONE commit JSON
@@ -133,18 +135,16 @@ object DeltaWrite {
     if (prior.isEmpty)
       lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
     if (needMeta)
-      lines += s"""{"metaData":{"id":${jstr(java.util.UUID.randomUUID().toString)},""" +
+      lines += s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
         s""""format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":${jstr(schemaJsonOut)},""" +
-        s""""partitionColumns":${partitionBy.map(jstr).mkString("[", ",", "]")},""" +
-        s""""configuration":${confJson(confOut)},"createdTime":$now}}"""
+        s""""schemaString":${jsonString(schemaJsonOut)},""" +
+        s""""partitionColumns":${partitionBy.map(jsonString).mkString("[", ",", "]")},""" +
+        s""""configuration":${jsonMap(confOut)},"createdTime":$now}}"""
     priorActive.foreach { p =>
-      lines += s"""{"remove":{"path":${jstr(p)},"deletionTimestamp":$now,"dataChange":true}}"""
+      lines += s"""{"remove":{"path":${jsonString(p)},"deletionTimestamp":$now,"dataChange":true}}"""
     }
     added.foreach { case (relPath, pv, size) =>
-      val pvJson = pv.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }.mkString("{", ",", "}")
-      lines += s"""{"add":{"path":${jstr(encodePath(relPath))},"partitionValues":$pvJson,""" +
+      lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
         s""""size":$size,"modificationTime":$now,"dataChange":true}}"""
     }
 
@@ -297,19 +297,19 @@ object DeltaWrite {
         readerFeats.toSet == st.readerFeatures && writerFeats.toSet == st.writerFeatures
       if (!upToDate)
         lines += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-          s""""readerFeatures":${readerFeats.map(jstr).mkString("[", ",", "]")},""" +
-          s""""writerFeatures":${writerFeats.map(jstr).mkString("[", ",", "]")}}}"""
+          s""""readerFeatures":${readerFeats.map(jsonString).mkString("[", ",", "]")},""" +
+          s""""writerFeatures":${writerFeats.map(jsonString).mkString("[", ",", "]")}}}"""
     }
     (dead ++ needDv).foreach { rel =>
-      lines += s"""{"remove":{"path":${jstr(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
+      lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
     }
     needDv.foreach { rel =>
       val e = st.active(rel)
       val d = descriptors(rel)
-      val dvJson = s"""{"storageType":${jstr(d.storageType)},""" +
-        s""""pathOrInlineDv":${jstr(d.pathOrInlineDv)},"offset":${d.offset.get},""" +
+      val dvJson = s"""{"storageType":${jsonString(d.storageType)},""" +
+        s""""pathOrInlineDv":${jsonString(d.pathOrInlineDv)},"offset":${d.offset.get},""" +
         s""""sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
-      lines += s"""{"add":{"path":${jstr(rel)},"partitionValues":${pvJson(e.pv)},""" +
+      lines += s"""{"add":{"path":${jsonString(rel)},"partitionValues":${jsonMap(e.pv)},""" +
         s""""size":${new File(resolveAbs(table, rel)).length()},"modificationTime":$now,""" +
         s""""dataChange":true,"deletionVector":$dvJson}}"""
     }
@@ -374,10 +374,10 @@ object DeltaWrite {
     val now = System.currentTimeMillis()
     val lines = Seq.newBuilder[String]
     touchedRel.toSeq.sorted.foreach { rel =>
-      lines += s"""{"remove":{"path":${jstr(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
+      lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
     }
     added.foreach { case (relPath, pv, size) =>
-      lines += s"""{"add":{"path":${jstr(encodePath(relPath))},"partitionValues":${pvJson(pv)},""" +
+      lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
         s""""size":$size,"modificationTime":$now,"dataChange":true}}"""
     }
     publishCommit(new File(table, "_delta_log"), st.version + 1, lines.result(), path)
@@ -519,10 +519,10 @@ object DeltaWrite {
     val now = System.currentTimeMillis()
     val lines = Seq.newBuilder[String]
     removes.foreach { rel =>
-      lines += s"""{"remove":{"path":${jstr(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
+      lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
     }
     added.foreach { case (relPath, pv, size) =>
-      lines += s"""{"add":{"path":${jstr(encodePath(relPath))},"partitionValues":${pvJson(pv)},""" +
+      lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
         s""""size":$size,"modificationTime":$now,"dataChange":true}}"""
     }
     publishCommit(new File(table, "_delta_log"), st.version + 1, lines.result(), path)
@@ -575,10 +575,10 @@ object DeltaWrite {
         DeltaRead.readSubset(spark, path, rels).coalesce(nOut), st)
       val added = writeParts(outDf, table, layoutParts)
       rels.toSeq.sorted.foreach { rel =>
-        lines += s"""{"remove":{"path":${jstr(rel)},"deletionTimestamp":$now,"dataChange":false}}"""
+        lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":false}}"""
       }
       added.foreach { case (relPath, pv, size) =>
-        lines += s"""{"add":{"path":${jstr(encodePath(relPath))},"partitionValues":${pvJson(pv)},""" +
+        lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
           s""""size":$size,"modificationTime":$now,"dataChange":false}}"""
       }
     }
@@ -609,27 +609,23 @@ object DeltaWrite {
     // with writer-only requirements once the JSON prefix aged out
     val protoLine = {
       val rf = if (st.minReader >= 3)
-        s""","readerFeatures":${st.readerFeatures.toSeq.sorted.map(jstr).mkString("[", ",", "]")}"""
+        s""","readerFeatures":${st.readerFeatures.toSeq.sorted.map(jsonString).mkString("[", ",", "]")}"""
       else ""
       val wf = if (st.minWriter >= 7)
-        s""","writerFeatures":${st.writerFeatures.toSeq.sorted.map(jstr).mkString("[", ",", "]")}"""
+        s""","writerFeatures":${st.writerFeatures.toSeq.sorted.map(jsonString).mkString("[", ",", "]")}"""
       else ""
       s"""{"protocol":{"minReaderVersion":${st.minReader},"minWriterVersion":${st.minWriter}$rf$wf}}"""
     }
-    val confJson = st.configuration.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }.mkString("{", ",", "}")
     val lines =
       Seq(protoLine,
-        s"""{"metaData":{"id":${jstr(java.util.UUID.randomUUID().toString)},""" +
+        s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
           s""""format":{"provider":"parquet","options":{}},""" +
-          s""""schemaString":${jstr(st.schemaJson)},""" +
-          s""""partitionColumns":${st.partitionCols.map(jstr).mkString("[", ",", "]")},""" +
-          s""""configuration":$confJson}}""") ++
+          s""""schemaString":${jsonString(st.schemaJson)},""" +
+          s""""partitionColumns":${st.partitionCols.map(jsonString).mkString("[", ",", "]")},""" +
+          s""""configuration":${jsonMap(st.configuration)}}}""") ++
       st.active.toSeq.map { case (p, e) =>
-        val pvJson = e.pv.toSeq.map { case (k, v) =>
-          s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }.mkString("{", ",", "}")
         val dv = if (e.dvJson == null) "" else s""","deletionVector":${e.dvJson}"""
-        s"""{"add":{"path":${jstr(p)},"partitionValues":$pvJson,"size":0,""" +
+        s"""{"add":{"path":${jsonString(p)},"partitionValues":${jsonMap(e.pv)},"size":0,""" +
           s""""modificationTime":0,"dataChange":false$dv}}"""
       }
     import spark.implicits._
@@ -815,13 +811,13 @@ object DeltaWrite {
       st.writerFeatures.contains("typeWidening")
     if (!upToDate)
       lines += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":${readerFeats.map(jstr).mkString("[", ",", "]")},""" +
-        s""""writerFeatures":${writerFeats.map(jstr).mkString("[", ",", "]")}}}"""
-    lines += s"""{"metaData":{"id":${jstr(java.util.UUID.randomUUID().toString)},""" +
+        s""""readerFeatures":${readerFeats.map(jsonString).mkString("[", ",", "]")},""" +
+        s""""writerFeatures":${writerFeats.map(jsonString).mkString("[", ",", "]")}}}"""
+    lines += s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
       s""""format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":${jstr(schemaOut.json)},""" +
-      s""""partitionColumns":${st.partitionCols.map(jstr).mkString("[", ",", "]")},""" +
-      s""""configuration":${confJson(st.configuration)},"createdTime":$now}}"""
+      s""""schemaString":${jsonString(schemaOut.json)},""" +
+      s""""partitionColumns":${st.partitionCols.map(jsonString).mkString("[", ",", "]")},""" +
+      s""""configuration":${jsonMap(st.configuration)},"createdTime":$now}}"""
     publishCommit(new File(new File(path), "_delta_log"), st.version + 1,
       lines.result(), path)
     st.version + 1
@@ -862,11 +858,11 @@ object DeltaWrite {
         (evolved, st.configuration + ("delta.columnMapping.maxColumnId" -> maxId.toString))
       }
     val now = System.currentTimeMillis()
-    val line = s"""{"metaData":{"id":${jstr(java.util.UUID.randomUUID().toString)},""" +
+    val line = s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
       s""""format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":${jstr(schemaOut.json)},""" +
-      s""""partitionColumns":${st.partitionCols.map(jstr).mkString("[", ",", "]")},""" +
-      s""""configuration":${confJson(confOut)},"createdTime":$now}}"""
+      s""""schemaString":${jsonString(schemaOut.json)},""" +
+      s""""partitionColumns":${st.partitionCols.map(jsonString).mkString("[", ",", "]")},""" +
+      s""""configuration":${jsonMap(confOut)},"createdTime":$now}}"""
     publishCommit(new File(new File(path), "_delta_log"), st.version + 1, Seq(line), path)
     st.version + 1
   }
@@ -945,10 +941,11 @@ object DeltaWrite {
     (walk(existing, incoming, ""), maxId)
   }
 
-  /** Configuration map → the metaData action's JSON object. */
-  private def confJson(conf: Map[String, String]): String =
-    conf.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }.mkString("{", ",", "}")
+  /** A string map (`configuration`, `partitionValues`) → a JSON object
+    * with sorted keys; null values stay JSON null. */
+  private def jsonMap(m: Map[String, String]): String =
+    m.toSeq.sortBy(_._1).map { case (k, v) =>
+      s"${jsonString(k)}:${if (v == null) "null" else jsonString(v)}" }.mkString("{", ",", "}")
 
   /** Rename a LOGICAL-named frame to the table's PHYSICAL column names at
     * every nesting level (round 10 — the write half of column mapping)
@@ -1116,13 +1113,6 @@ object DeltaWrite {
           "enforce — write it with delta-spark instead")
     }
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  private def pvJson(pv: Map[String, String]): String =
-    pv.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jstr(k)}:${if (v == null) "null" else jstr(v)}" }.mkString("{", ",", "}")
 
   /** Absolute data-file path of an add action's (percent-encoded)
     * relative path. URLDecoder's '+'→space rule would corrupt a literal

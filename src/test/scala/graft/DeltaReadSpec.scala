@@ -330,23 +330,27 @@ class DeltaReadSpec extends SparkSpec {
       Seq(0x86, 0x4f, 0xd2, 0x6f, 0xb5, 0x59, 0xf7, 0x5b).map(_.toByte))
     assert(DeletionVectors.z85Encode(
       Array(0x86, 0x4f, 0xd2, 0x6f, 0xb5, 0x59, 0xf7, 0x5b).map(_.toByte)) == "HelloWorld")
-    // portable RoaringBitmapArray for {1,3}: LE magic, 1 bitmap, no-run
-    // cookie, 1 array container (key 0, card 2), offset word, values
+    // portable RoaringBitmapArray for {1,3}: LE magic, then the
+    // RoaringFormatSpec 64-bit layout — 1 bitmap, its int32 key, the
+    // no-run cookie, 1 array container (key 0, card 2), offset, values
     val golden = Array[Int](
       0xd1, 0xd3, 0x39, 0x64,             // magic 1681511377 LE
       1, 0, 0, 0, 0, 0, 0, 0,             // int64 bitmap count = 1
+      0, 0, 0, 0,                         // int32 key of the bitmap = 0
       0x3a, 0x30, 0, 0,                   // cookie 12346 LE
       1, 0, 0, 0,                         // container count 1
       0, 0, 1, 0,                         // key=0, cardinality-1=1
       16, 0, 0, 0,                        // offset of container data
       1, 0, 3, 0                          // values 1, 3
     ).map(_.toByte)
+    assert(golden.length == 36)
     assert(DeletionVectors.deserialize(golden).toSeq == Seq(1L, 3L))
     // our serializer emits byte-identical output for the same set
     assert(DeletionVectors.serialize(Array(1L, 3L)).toSeq == golden.toSeq)
     // run-container decode (cookie 12347): runs [5..8] and [100..101]
     val runGolden = Array[Int](
       0xd1, 0xd3, 0x39, 0x64, 1, 0, 0, 0, 0, 0, 0, 0,
+      0, 0, 0, 0,                         // int32 key of the bitmap = 0
       0x3b, 0x30, 0, 0,                   // cookie 12347, (size-1)=0 in high 16
       1,                                   // run-flag bitset: container 0 is runs
       0, 0, 5, 0,                         // key=0, cardinality-1=5 (6 values)
@@ -360,6 +364,51 @@ class DeltaReadSpec extends SparkSpec {
     // 64-bit split works (values above 2^32)
     val big = (0L until 5000L).map(_ * 2).toArray ++ Array((1L << 32) + 7L)
     assert(DeletionVectors.deserialize(DeletionVectors.serialize(big)).toSeq == big.toSeq)
+  }
+
+  /** The Delta DV bitmap as the RoaringBitmap library writes it: the
+    * LE magic, then `serializePortable`. */
+  private def libraryBytes(m: org.roaringbitmap.longlong.Roaring64NavigableMap): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(buf)
+    out.writeInt(Integer.reverseBytes(1681511377))
+    m.serializePortable(out)
+    out.flush()
+    buf.toByteArray
+  }
+
+  test("DV bitmaps are the standard 64-bit portable Roaring layout, both directions") {
+    import graft.sources.DeletionVectors
+    import org.roaringbitmap.longlong.Roaring64NavigableMap
+    val sets = Seq(
+      Array(1L, 3L),
+      Array(5L, (1L << 32) + 7L),                 // two bitmaps, keys 0 and 1
+      (0L until 5000L).map(_ * 2).toArray,        // one bitmap container
+      Array((2L << 32) + 9L, (2L << 32) + 70000L)) // the only bitmap has key 2
+    for (set <- sets) {
+      val lib = libraryBytes(Roaring64NavigableMap.bitmapOf(set: _*))
+      assert(DeletionVectors.serialize(set).toSeq == lib.toSeq, s"${set.take(3).toSeq}")
+      assert(DeletionVectors.deserialize(lib).toSeq == set.toSeq)
+    }
+    // library output graft never writes itself: run containers and
+    // sparse keys (bitmaps 0, 3 and 40 only)
+    val runs = new Roaring64NavigableMap()
+    runs.add(100L, 5000L)
+    runs.add((3L << 32) + 10L, (3L << 32) + 70000L)
+    runs.addLong((40L << 32) + 1L)
+    assert(runs.runOptimize())
+    assert(DeletionVectors.deserialize(libraryBytes(runs)).toSeq == runs.toArray.toSeq)
+    assert(DeletionVectors.deserialize(libraryBytes(new Roaring64NavigableMap())).isEmpty)
+  }
+
+  test("corrupt DV bitmaps fail with IllegalArgumentException, never a partial set") {
+    import graft.sources.DeletionVectors
+    val good = DeletionVectors.serialize(Array(1L, 3L, (1L << 32) + 7L))
+    val badMagic = good.clone(); badMagic(0) = (badMagic(0) + 1).toByte
+    val badCookie = good.clone(); badCookie(16) = 0x11 // first bitmap's cookie
+    val truncated = Seq(2, 10, 20, good.length - 1).map(java.util.Arrays.copyOf(good, _))
+    for (bytes <- Seq(badMagic, badCookie, good :+ 0.toByte) ++ truncated)
+      intercept[IllegalArgumentException](DeletionVectors.deserialize(bytes))
   }
 
   test("deletion vectors: crafted u-type and inline DVs drop the marked rows") {
@@ -577,24 +626,62 @@ class DeltaReadSpec extends SparkSpec {
     val expected = (0 until nCommits - 1).map(v => s"f_${v}_0").toSet ++
       (0 until 50).map(i => s"f_${nCommits - 1}_$i")
 
-    // distributed path (1000 commits >= default threshold 64)
-    val distributed = DeltaRead.currentState(spark, table.getAbsolutePath).get
-    assert(distributed.active.keySet.toSet == expected,
-      s"distributed active set wrong: ${distributed.active.size} files")
-    assert(distributed.configuration == Map("k" -> "v0"))
-    assert(distributed.version == (nCommits - 1).toLong)
+    val st = DeltaRead.currentState(spark, table.getAbsolutePath).get
+    assert(st.active.keySet.toSet == expected, s"active set wrong: ${st.active.size} files")
+    assert(st.configuration == Map("k" -> "v0"))
+    assert(st.version == (nCommits - 1).toLong)
     // the DV-update winner is the LATEST re-add's descriptor
-    assert(distributed.active("f_0_0").dvJson.contains(s"dv${nCommits - 1}"))
-    assert(distributed.active("f_0_0").pv == Map("p" -> "0"))
-
-    // the sequential driver path must agree exactly
-    spark.conf.set("graft.delta.replay.distributedMinCommits", "1000000")
-    try {
-      val sequential = DeltaRead.currentState(spark, table.getAbsolutePath).get
-      assert(sequential.active.keySet.toSet == distributed.active.keySet.toSet)
-      assert(sequential.active("f_0_0").dvJson == distributed.active("f_0_0").dvJson)
-      assert(sequential.configuration == distributed.configuration)
-    } finally spark.conf.unset("graft.delta.replay.distributedMinCommits")
+    assert(st.active("f_0_0").dvJson.contains(s"dv${nCommits - 1}"))
+    assert(st.active("f_0_0").pv == Map("p" -> "0"))
     org.apache.commons.io.FileUtils.deleteDirectory(table)
+  }
+
+  test("log replay runs as many Spark jobs for 20 commits as for 2, with or without a checkpoint") {
+    import graft.sources.DeltaWrite
+    val schemaJson = Seq(1L).toDF("id").schema.json.replace("\"", "\\\"")
+    // `before` commits, an optional checkpoint at the last of them, then
+    // `after` more; each commit adds two files and removes one older one
+    def log(before: Int, after: Int, withCheckpoint: Boolean): String = {
+      val table = Files.createTempDirectory("graft_delta_jobs").toFile
+      def commit(v: Int): Unit = writeCommit(table, v.toLong,
+        (if (v == 0) Seq(
+          """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+          s"""{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},"schemaString":"$schemaJson","partitionColumns":[],"configuration":{}}}""")
+        else Seq(s"""{"remove":{"path":"f_${v - 1}_0","deletionTimestamp":1,"dataChange":true}}""")) ++
+        Seq(0, 1).map(i =>
+          s"""{"add":{"path":"f_${v}_$i","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      (0 until before).foreach(commit)
+      if (withCheckpoint) DeltaWrite.checkpoint(spark, table.getAbsolutePath)
+      (before until before + after).foreach(commit)
+      table.getAbsolutePath
+    }
+    for (withCheckpoint <- Seq(false, true)) {
+      // 20 commit paths stay under Spark's 32-path parallel-listing threshold
+      val Seq(small, large) = Seq(2, 20).map { n =>
+        val path = log(if (withCheckpoint) 3 else 0, n, withCheckpoint)
+        val (st, jobs) = jobsDuring(DeltaRead.currentState(spark, path).get)
+        val total = (if (withCheckpoint) 3 else 0) + n
+        assert(st.version == total - 1L && st.active.size == total + 1)
+        jobs
+      }
+      assert(small == large, s"checkpoint=$withCheckpoint: $small jobs at 2 commits, $large at 20")
+    }
+  }
+
+  test("partition values with control characters, quotes and backslashes round-trip") {
+    val table = Files.createTempDirectory("graft_delta_ctl").toFile
+    val langs = Seq("en", "a\nb", "t\tx", "c\u0001d", "q\"x", "b\\s")
+    val df = langs.zipWithIndex.map { case (l, i) => (i.toLong, l) }.toDF("id", "lang")
+    graft.api.Table(df).toDelta(table.getAbsolutePath, partitionBy = Seq("lang"))
+    assert(DeltaRead.readDelta(spark, table.getAbsolutePath)
+      .select("id", "lang").as[(Long, String)].collect().toSet ==
+      langs.zipWithIndex.map { case (l, i) => (i.toLong, l) }.toSet)
+    // every commit line is exactly one JSON object
+    val commits = new File(table, "_delta_log").listFiles().filter(_.getName.endsWith(".json"))
+    assert(commits.nonEmpty)
+    for (f <- commits; line <- new String(Files.readAllBytes(f.toPath), "UTF-8").split("\n")) {
+      assert(org.json4s.jackson.JsonMethods.parseOpt(line)
+        .exists(_.isInstanceOf[org.json4s.JObject]), s"not one JSON object: $line")
+    }
   }
 }

@@ -191,6 +191,18 @@ class ProjEngineSpec extends SparkSpec {
     assertGolden("EPSG:32733", Utm33S) // UTM 33S false northing
   }
 
+  test("projected inverses wrap longitude into [-180, 180] like PROJ's adjlon") {
+    // (60°E, 10°N) lies 237° west of UTM 1N's central meridian, so the
+    // unwrapped Krüger inverse of its forward image is -300°; that far
+    // out the series keeps only ~1e-8° of accuracy
+    val (x, y) = fwd("EPSG:32601")(60.0, 10.0)
+    val (lon, lat) = inv("EPSG:32601")(x, y)
+    assert(math.abs(lon - 60.0) < 1e-6 && math.abs(lat - 10.0) < 1e-6, s"($lon, $lat)")
+    // an in-zone longitude passes through unchanged
+    val (x2, y2) = fwd("EPSG:32601")(-177.5, 10.0)
+    assert(math.abs(inv("EPSG:32601")(x2, y2)._1 + 177.5) < 1e-9)
+  }
+
   test("lcc 2SP agrees with the hardcoded Lambert-93") {
     assertGolden("EPSG:2154", Lambert93)
   }

@@ -3,8 +3,10 @@ package graft.exts
 import java.awt.color.ColorSpace
 import java.awt.image.{BufferedImage, IndexColorModel}
 import java.io.{ByteArrayInputStream, IOException}
-import javax.imageio.ImageIO
+import javax.imageio.{ImageIO, ImageReader}
 import javax.imageio.stream.MemoryCacheImageInputStream
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
@@ -32,13 +34,21 @@ private[exts] object ImageCodec {
     * header must not allocate unboundedly inside an executor task. */
   final val MaxPixels = 64L * 1024 * 1024
 
+  /** One reader per (format, thread), so a call skips the registry
+    * lookup and reader construction. Each call `reset()`s it, which drops
+    * its input and warning listener. */
+  private val readers = ThreadLocal.withInitial[mutable.Map[String, Option[ImageReader]]](
+    () => mutable.Map.empty)
+
   /** Decode `b` with the ImageIO reader registered for `format`
     * ("bmp", "png" or "jpeg"). */
   def decode(b: Array[Byte], format: String): ArrayData = {
     if (b == null) return null
-    val readers = ImageIO.getImageReadersByFormatName(format)
-    if (!readers.hasNext) return null
-    val reader = readers.next()
+    val reader = readers.get.getOrElseUpdate(format, {
+      val it = ImageIO.getImageReadersByFormatName(format)
+      if (it.hasNext) Some(it.next()) else None
+    }).orNull
+    if (reader == null) return null
     val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(b))
     var warned = false
     try {
@@ -50,7 +60,7 @@ private[exts] object ImageCodec {
     } catch {
       case _: IOException | _: RuntimeException => null
     } finally {
-      reader.dispose()
+      reader.reset()
       try in.close() catch { case _: IOException => () }
     }
   }

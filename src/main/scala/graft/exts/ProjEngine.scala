@@ -292,8 +292,15 @@ private[graft] object ProjEngine {
         // rectifying-arc offset of the natural-origin latitude
         val xi0 = if (lat0 == 0.0) 0.0 else xiEta(lat0, 0.0)._1
         ((lon, lat) => {
-          val (xi, eta) = xiEta(math.toRadians(lat), math.toRadians(lon) - lon0)
-          (k0u * rectA * eta, k0u * rectA * (xi - xi0))
+          // λ−λ0 wrapped into [−π, π]; beyond 90° from the central
+          // meridian the series gives finite garbage, so the point is
+          // out of domain (NaN) — the bound PROJ's approx_e_fwd enforces
+          val lam = math.IEEEremainder(math.toRadians(lon) - lon0, 2.0 * math.Pi)
+          if (math.abs(lam) > math.Pi / 2) (Double.NaN, Double.NaN)
+          else {
+            val (xi, eta) = xiEta(math.toRadians(lat), lam)
+            (k0u * rectA * eta, k0u * rectA * (xi - xi0))
+          }
         }, (x, y) => {
           val xi = y / (k0u * rectA) + xi0
           val eta = x / (k0u * rectA)

@@ -2,9 +2,9 @@ package graft.sources
 
 import java.io.File
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
 
 /** Native Delta Lake READ — no delta-spark jar required.
   *
@@ -61,10 +61,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, St
   */
 object DeltaRead {
 
-  /** One active file: its partitionValues map (authoritative; keys are
-    * PHYSICAL names under column mapping) and the deletionVector
-    * descriptor JSON (null when none). */
-  private[graft] case class AddEntry(pv: Map[String, String], dvJson: String)
+  /** One active file's add action: its partitionValues map
+    * (authoritative; keys are PHYSICAL names under column mapping), size,
+    * modification time, stats JSON and deletion-vector descriptor. */
+  private[graft] case class AddEntry(pv: Map[String, String], size: Long,
+      modificationTime: Long, stats: Option[String], dv: Option[DeletionVectors.Descriptor])
 
   private[graft] case class LogState(
     var minReader: Int = 1,
@@ -116,12 +117,13 @@ object DeltaRead {
     }
   }
 
-  /** Local filesystem path of a scan's `_metadata.file_path` string.
-    * `new java.net.URI(fp)` throws on URI-illegal characters (spaces,
-    * unescaped partition-value dirs from foreign writers); Hadoop's Path
-    * parser is the tolerant decode Spark itself applies to these. */
+  /** Local filesystem path of a scan's `_metadata.file_path`, which Spark
+    * gives URL-encoded (`SparkPath.urlEncoded`): a `%` or space in a
+    * directory name (hive-escaped partition values such as `t%09x`)
+    * arrives as `%25` / `%20`. Hadoop's `new Path(String)` would quote
+    * that `%` again and keep the name encoded. */
   private[sources] def filePathToLocal(fp: String): String =
-    new org.apache.hadoop.fs.Path(fp).toUri.getPath
+    org.apache.spark.paths.SparkPath.fromUrlString(fp).toPath.toUri.getPath
 
   private[sources] def columnMapped(st: LogState): Boolean = {
     val mode = st.configuration.getOrElse("delta.columnMapping.mode", "none")
@@ -194,10 +196,8 @@ object DeltaRead {
 
     // deletion vectors: absolute file path → sorted deleted row indices
     val dvIdx: Map[String, Array[Long]] = st.active.toSeq.flatMap { case (p, e) =>
-      Option(e.dvJson).map { j =>
-        new File(resolve(p)).getAbsolutePath ->
-          DeletionVectors.readDescriptor(parseDvDescriptor(j), new File(path))
-      }
+      e.dv.map(d => new File(resolve(p)).getAbsolutePath ->
+        DeletionVectors.readDescriptor(d, new File(path)))
     }.toMap
     val dvFilter: Option[Column] = if (dvIdx.isEmpty) None else {
       val bc = spark.sparkContext.broadcast(dvIdx)
@@ -359,8 +359,10 @@ object DeltaRead {
       def at(f: String): Option[Int] = Some(r.fieldIndex(f)).filterNot(r.isNullAt)
       def strMap(i: Int) = r.getMap[String, String](i).toMap
       at("path") match {
-        case Some(i) => st.active.put(r.getString(i),
-          AddEntry(at("pv").fold(Map.empty[String, String])(strMap), r.getAs[String]("dv")))
+        case Some(i) => st.active.put(r.getString(i), AddEntry(
+          at("pv").fold(Map.empty[String, String])(strMap),
+          at("size").fold(0L)(r.getLong), at("modificationTime").fold(0L)(r.getLong),
+          at("stats").map(r.getString), at("dv").map(j => descriptor(r.getStruct(j)))))
         case None =>
           at("minReader").foreach(i => st.minReader = r.getInt(i))
           at("minWriter").foreach(i => st.minWriter = r.getInt(i))
@@ -374,46 +376,42 @@ object DeltaRead {
     st
   }
 
-  /** The action fields replay reads, at the protocol's types: commit
-    * JSONs parse straight into it, with no schema-inference pass. */
-  private val CommitSchema = StructType.fromDDL(
-    "add STRUCT<path: STRING, partitionValues: MAP<STRING, STRING>, " +
-      "deletionVector: STRUCT<storageType: STRING, pathOrInlineDv: STRING, " +
-      "offset: BIGINT, sizeInBytes: BIGINT, cardinality: BIGINT, maxRowIndex: BIGINT>>, " +
-    "remove STRUCT<path: STRING>, " +
-    "metaData STRUCT<schemaString: STRING, partitionColumns: ARRAY<STRING>, " +
-      "configuration: MAP<STRING, STRING>>, " +
-    "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
-      "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>")
+  /** Commit JSONs parse straight into the protocol's action schema, the
+    * one the writer's commit lines and checkpoint rows come from, with no
+    * schema-inference pass. */
+  private val CommitSchema = DeltaActions.schema
 
   /** Project a frame of log actions — commit JSONs under [[CommitSchema]]
     * or a checkpoint parquet under whatever schema its writer used — to
-    * the one narrow action row replay reconciles. Missing fields read
-    * null; string maps stored as structs (JSON-inferred checkpoints)
-    * become maps; the DV descriptor stays JSON text. */
+    * the one narrow action row replay reconciles. Fields are matched by
+    * name and missing ones read null; string maps stored as structs
+    * (JSON-inferred checkpoints) become maps. */
   private def actions(df: DataFrame, version: Column): DataFrame = {
     def typeOf(path: String): Option[DataType] =
       path.split('.').foldLeft(Option[DataType](df.schema)) {
         case (Some(s: StructType), name) => s.find(_.name == name).map(_.dataType)
         case _ => None
       }
-    def get(path: String, to: DataType): Column =
-      if (typeOf(path).isDefined) col(path).cast(to) else lit(null).cast(to)
-    val strMap = MapType(StringType, StringType)
-    def asMap(path: String): Column = typeOf(path) match {
-      case Some(_: StructType) => from_json(to_json(col(path)), strMap)
-      case _ => get(path, strMap)
+    def get(path: String, to: DataType): Column = (typeOf(path), to) match {
+      case (None, _) => lit(null).cast(to)
+      case (Some(_: StructType), m: MapType) => from_json(to_json(col(path)), m)
+      case (Some(_), s: StructType) => when(col(path).isNotNull,
+        struct(s.fields.toIndexedSeq.map(f => get(s"$path.${f.name}", f.dataType).as(f.name)): _*))
+      case _ => col(path).cast(to)
     }
     def present(path: String): Column =
       if (typeOf(path).isDefined) col(path).isNotNull else lit(false)
+    val strMap = MapType(StringType, StringType)
     val addPath = get("add.path", StringType)
     df.select(
       version.as("v"),
       coalesce(addPath, get("remove.path", StringType)).as("path"),
       addPath.isNotNull.as("isAdd"),
-      asMap("add.partitionValues").as("pv"),
-      (if (typeOf("add.deletionVector").isDefined) to_json(col("add.deletionVector"))
-       else lit(null).cast(StringType)).as("dv"),
+      get("add.partitionValues", strMap).as("pv"),
+      get("add.size", LongType).as("size"),
+      get("add.modificationTime", LongType).as("modificationTime"),
+      get("add.stats", StringType).as("stats"),
+      get("add.deletionVector", DvSchema).as("dv"),
       (present("metaData") || present("protocol")).as("meta"),
       get("protocol.minReaderVersion", IntegerType).as("minReader"),
       get("protocol.minWriterVersion", IntegerType).as("minWriter"),
@@ -421,32 +419,20 @@ object DeltaRead {
       get("protocol.writerFeatures", ArrayType(StringType)).as("writerFeatures"),
       get("metaData.schemaString", StringType).as("schema"),
       get("metaData.partitionColumns", ArrayType(StringType)).as("partitionCols"),
-      asMap("metaData.configuration").as("conf"))
+      get("metaData.configuration", strMap).as("conf"))
   }
 
-  /** `add.deletionVector` JSON → descriptor. */
-  private[sources] def parseDvDescriptor(json: String): DeletionVectors.Descriptor = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    JsonMethods.parseOpt(json) match {
-      case Some(JObject(fields)) =>
-        val m = fields.toMap
-        def str(k: String): String = m.get(k) match {
-          case Some(JString(v)) => v
-          case _ => throw new IllegalArgumentException(
-            s"deletionVector descriptor missing '$k': $json")
-        }
-        def num(k: String): Option[Long] = m.get(k) match {
-          case Some(JInt(v)) => Some(v.toLong)
-          case Some(JLong(v)) => Some(v)
-          case _ => None
-        }
-        DeletionVectors.Descriptor(str("storageType"), str("pathOrInlineDv"),
-          num("offset").map(_.toInt),
-          num("sizeInBytes").getOrElse(throw new IllegalArgumentException(
-            s"deletionVector descriptor missing 'sizeInBytes': $json")).toInt,
-          num("cardinality").getOrElse(-1L))
-      case _ => throw new IllegalArgumentException(s"bad deletionVector JSON: $json")
-    }
+  private val DvSchema = Encoders.product[DeletionVectors.Descriptor].schema
+
+  /** An `add.deletionVector` struct (fields as in [[DvSchema]]) → its
+    * descriptor; a descriptor without storage type, payload or size is
+    * an IllegalArgumentException. */
+  private def descriptor(d: Row): DeletionVectors.Descriptor = {
+    def opt(f: String): Option[Int] = Some(d.fieldIndex(f)).filterNot(d.isNullAt)
+    def req(f: String): Int = opt(f).getOrElse(throw new IllegalArgumentException(
+      s"deletionVector descriptor missing '$f': $d"))
+    DeletionVectors.Descriptor(d.getString(req("storageType")),
+      d.getString(req("pathOrInlineDv")), opt("offset").map(d.getInt),
+      d.getInt(req("sizeInBytes")), opt("cardinality").fold(-1L)(d.getLong))
   }
 }

@@ -6,13 +6,17 @@ import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.SparkEntry.jsonString
+import graft.sources.DeltaActions.{Add, LastCheckpoint, Metadata, Protocol, Remove, SingleAction}
 
 /** Native Delta Lake WRITE for filesystems with atomic link/rename — the
   * single-writer side of [[DeltaRead]], per the same public protocol:
   * data lands as plain parquet parts, then ONE commit JSON
   * (`_delta_log/%020d.json`) publishes them with add (and, for
-  * overwrite, remove) actions. The commit is made visible by hard-link
+  * overwrite, remove) actions. Every verb builds its commit from the
+  * one action model, [[DeltaActions.SingleAction]], one JSON line per
+  * action, and [[checkpoint]] writes the same classes as parquet rows —
+  * the protocol's checkpoint schema, keeping each file's size, stats and
+  * DV descriptor. The commit is made visible by hard-link
   * creation into the versioned name — atomic AND failing when the
   * version already exists, which is the put-if-absent contract the Delta
   * spec requires of a log store (plain rename() silently REPLACES on
@@ -35,9 +39,9 @@ import graft.SparkEntry.jsonString
   * ids before landing ([[toPhysical]]); only a schema/partitioning
   * change on such a table stays refused (fresh column-id assignment).
   *
-  * Fresh tables carry protocol (1,2); a DV-writing DELETE upgrades to
-  * (3,7) preserving prior writer requirements. Everything reads back
-  * both through [[DeltaRead]] and any standard Delta reader. */
+  * Fresh tables carry protocol (1,2); a DV-writing DELETE and a type
+  * widening upgrade to (3,7) through one rule ([[protocolWith]]),
+  * preserving prior writer requirements. */
 object DeltaWrite {
 
   /** Write `df` to a Delta table at `path`. Supported modes: Overwrite
@@ -130,25 +134,15 @@ object DeltaWrite {
       }
     val added = writeParts(outDf, table, layoutParts)
 
-    val now = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    if (prior.isEmpty)
-      lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-    if (needMeta)
-      lines += s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
-        s""""format":{"provider":"parquet","options":{}},""" +
-        s""""schemaString":${jsonString(schemaJsonOut)},""" +
-        s""""partitionColumns":${partitionBy.map(jsonString).mkString("[", ",", "]")},""" +
-        s""""configuration":${jsonMap(confOut)},"createdTime":$now}}"""
-    priorActive.foreach { p =>
-      lines += s"""{"remove":{"path":${jsonString(p)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    added.foreach { case (relPath, pv, size) =>
-      lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
-        s""""size":$size,"modificationTime":$now,"dataChange":true}}"""
-    }
-
-    publishCommit(logDir, version, lines.result(), path)
+    val protocol = if (prior.isEmpty) Some(Protocol(1, 2)) else None
+    val meta = if (!needMeta) None else Some(Metadata(schemaString = schemaJsonOut,
+      partitionColumns = partitionBy, configuration = confOut,
+      createdTime = Some(System.currentTimeMillis())))
+    publishCommit(logDir, version,
+      protocol.map(p => SingleAction(protocol = p)).toSeq ++
+        meta.map(m => SingleAction(metaData = m)) ++
+        removes(priorActive, dataChange = true) ++ added.map(a => SingleAction(add = a)),
+      path)
     version
   }
 
@@ -229,12 +223,13 @@ object DeltaWrite {
     // file↔sidecar arrangement); fully-dead and pass-2-only files just
     // RECOUNT so the two passes can be cross-checked in both directions.
     import spark.implicits._
-    val priorDv: Map[String, String] =
-      needDv.flatMap(rel => Option(st.active(rel).dvJson).map(rel -> _)).toMap
+    val priorDv: Map[String, DeletionVectors.Descriptor] =
+      needDv.flatMap(rel => st.active(rel).dv.map(rel -> _)).toMap
     val absToRelB = spark.sparkContext.broadcast(absToRel)
     val priorDvB = spark.sparkContext.broadcast(priorDv)
     val needDvB = spark.sparkContext.broadcast(needDv.toSet)
     val tablePath = table.getAbsolutePath
+    // (file, its new descriptor if it keeps live rows, rows matched)
     val results = DeltaRead.readWithLineage(spark, path)
       .filter(condition)
       .select(col("_graft_file").cast("string").as("_1"),
@@ -247,17 +242,16 @@ object DeltaWrite {
         val rel = absToRelB.value(abs)
         if (!needDvB.value.contains(rel)) {
           var c = 0L; rows.foreach(_ => c += 1)
-          (rel, "", "", 0, 0, 0L, c)
+          (rel, Option.empty[DeletionVectors.Descriptor], c)
         } else {
           val fresh = rows.map(_._2).toArray
           val merged = priorDvB.value.get(rel) match {
-            case Some(j) => (DeletionVectors.readDescriptor(
-              DeltaRead.parseDvDescriptor(j), tableDir) ++ fresh).distinct.sorted
+            case Some(d) =>
+              (DeletionVectors.readDescriptor(d, tableDir) ++ fresh).distinct.sorted
             case None => java.util.Arrays.sort(fresh); fresh
           }
-          val d = DeletionVectors.writeDvFile(tableDir, Seq(rel -> merged))(rel)
-          (rel, d.storageType, d.pathOrInlineDv, d.offset.get, d.sizeInBytes,
-            d.cardinality, fresh.length.toLong)
+          (rel, Some(DeletionVectors.writeDvFile(tableDir, Seq(rel -> merged))(rel)),
+            fresh.length.toLong)
         }
       }
       .collect()
@@ -267,7 +261,7 @@ object DeltaWrite {
     // drift shrank a touched file's match set OR newly matched rows in a
     // file pass 1 never saw (an entry appearing only in pass 2)
     locally {
-      val freshByRel = results.map(r => r._1 -> r._7).toMap
+      val freshByRel = results.map(r => r._1 -> r._3).toMap
       val drifted = (touched.map(_._1) ++
           freshByRel.keys.filterNot(matchedByRel.contains)).distinct
         .filter(rel => freshByRel.getOrElse(rel, 0L) != matchedByRel.getOrElse(rel, 0L))
@@ -276,44 +270,17 @@ object DeltaWrite {
           s"distributed passes in ${drifted.size} file(s) " +
           s"(${drifted.take(3).mkString(", ")}…) — nothing was committed")
     }
-    val descriptors: Map[String, DeletionVectors.Descriptor] =
-      results.filter(_._2.nonEmpty).map { case (rel, sType, pid, off, size, card, _) =>
-        rel -> DeletionVectors.Descriptor(sType, pid, Some(off), size, card)
-      }.toMap
+    val descriptors = results.flatMap { case (rel, d, _) => d.map(rel -> _) }.toMap
     val now = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    if (needDv.nonEmpty) {
-      val readerFeats = (st.readerFeatures + "deletionVectors" ++
-        (if (DeltaRead.columnMapped(st)) Set("columnMapping") else Set.empty[String]))
-        .toSeq.sorted
-      // preserve the table's WRITER requirements verbatim: a legacy
-      // minWriterVersion maps to its implied feature set (v7 must list
-      // every feature explicitly), an explicit v7 list carries through —
-      // a DV upgrade must never downgrade writer-side enforcement
-      val priorWriter =
-        if (st.minWriter >= 7) st.writerFeatures else legacyWriterFeatures(st.minWriter)
-      val writerFeats = (priorWriter ++ readerFeats).toSeq.distinct.sorted
-      val upToDate = st.minReader >= 3 && st.minWriter >= 7 &&
-        readerFeats.toSet == st.readerFeatures && writerFeats.toSet == st.writerFeatures
-      if (!upToDate)
-        lines += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-          s""""readerFeatures":${readerFeats.map(jsonString).mkString("[", ",", "]")},""" +
-          s""""writerFeatures":${writerFeats.map(jsonString).mkString("[", ",", "]")}}}"""
+    val upgrade = if (needDv.isEmpty) None else protocolWith(st, "deletionVectors")
+    val reAdds = needDv.map { rel =>
+      SingleAction(add = Add(rel, st.active(rel).pv, new File(resolveAbs(table, rel)).length(),
+        now, dataChange = true, deletionVector = Some(descriptors(rel))))
     }
-    (dead ++ needDv).foreach { rel =>
-      lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    needDv.foreach { rel =>
-      val e = st.active(rel)
-      val d = descriptors(rel)
-      val dvJson = s"""{"storageType":${jsonString(d.storageType)},""" +
-        s""""pathOrInlineDv":${jsonString(d.pathOrInlineDv)},"offset":${d.offset.get},""" +
-        s""""sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
-      lines += s"""{"add":{"path":${jsonString(rel)},"partitionValues":${jsonMap(e.pv)},""" +
-        s""""size":${new File(resolveAbs(table, rel)).length()},"modificationTime":$now,""" +
-        s""""dataChange":true,"deletionVector":$dvJson}}"""
-    }
-    publishCommit(logDir, st.version + 1, lines.result(), path)
+    publishCommit(logDir, st.version + 1,
+      upgrade.map(p => SingleAction(protocol = p)).toSeq ++
+        removes(dead ++ needDv, dataChange = true) ++ reAdds,
+      path)
     st.version + 1
   }
 
@@ -370,17 +337,9 @@ object DeltaWrite {
     }.toSeq: _*)
     val (outDf, layoutParts) = forLayout(updated, st)
     val added = writeParts(outDf, table, layoutParts)
-
-    val now = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    touchedRel.toSeq.sorted.foreach { rel =>
-      lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    added.foreach { case (relPath, pv, size) =>
-      lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
-        s""""size":$size,"modificationTime":$now,"dataChange":true}}"""
-    }
-    publishCommit(new File(table, "_delta_log"), st.version + 1, lines.result(), path)
+    publishCommit(new File(table, "_delta_log"), st.version + 1,
+      removes(touchedRel.toSeq.sorted, dataChange = true) ++ added.map(a => SingleAction(add = a)),
+      path)
     st.version + 1
   }
 
@@ -514,18 +473,10 @@ object DeltaWrite {
       val (outDf, layoutParts) = forLayout(r, st)
       writeParts(outDf, table, layoutParts)
     }.getOrElse(Seq.empty)
-    val removes = if (rewriting) touchedRel.toSeq.sorted else Seq.empty
-    if (removes.isEmpty && added.isEmpty) return st.version
-    val now = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    removes.foreach { rel =>
-      lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
-    added.foreach { case (relPath, pv, size) =>
-      lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
-        s""""size":$size,"modificationTime":$now,"dataChange":true}}"""
-    }
-    publishCommit(new File(table, "_delta_log"), st.version + 1, lines.result(), path)
+    val removed = if (rewriting) touchedRel.toSeq.sorted else Seq.empty
+    if (removed.isEmpty && added.isEmpty) return st.version
+    publishCommit(new File(table, "_delta_log"), st.version + 1,
+      removes(removed, dataChange = true) ++ added.map(a => SingleAction(add = a)), path)
     st.version + 1
   }
 
@@ -556,7 +507,7 @@ object DeltaWrite {
     val groups = st.active.toSeq.groupBy(_._2.pv)
     val selected: Seq[Seq[(String, Long)]] = groups.toSeq.flatMap { case (_, files) =>
       val sized = files.map { case (rel, e) =>
-        (rel, new File(resolveAbs(table, rel)).length(), e.dvJson != null)
+        (rel, new File(resolveAbs(table, rel)).length(), e.dv.isDefined)
       }
       val picks = sized.filter { case (_, sz, dv) => dv || sz < targetFileBytes }
       if (picks.size > 1 || picks.exists(_._3))
@@ -565,24 +516,17 @@ object DeltaWrite {
     }
     if (selected.isEmpty) return st.version
 
-    val now = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    selected.foreach { picks =>
+    val actions = selected.flatMap { picks =>
       val rels = picks.map(_._1).toSet
       val nOut = math.max(1,
         math.ceil(picks.map(_._2).sum.toDouble / targetFileBytes).toInt)
       val (outDf, layoutParts) = forLayout(
         DeltaRead.readSubset(spark, path, rels).coalesce(nOut), st)
       val added = writeParts(outDf, table, layoutParts)
-      rels.toSeq.sorted.foreach { rel =>
-        lines += s"""{"remove":{"path":${jsonString(rel)},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
-      added.foreach { case (relPath, pv, size) =>
-        lines += s"""{"add":{"path":${jsonString(encodePath(relPath))},"partitionValues":${jsonMap(pv)},""" +
-          s""""size":$size,"modificationTime":$now,"dataChange":false}}"""
-      }
+      removes(rels.toSeq.sorted, dataChange = false) ++
+        added.map(a => SingleAction(add = a.copy(dataChange = false)))
     }
-    publishCommit(new File(table, "_delta_log"), st.version + 1, lines.result(), path)
+    publishCommit(new File(table, "_delta_log"), st.version + 1, actions, path)
     st.version + 1
   }
 
@@ -607,31 +551,19 @@ object DeltaWrite {
     // verbatim — synthesizing them (the first cut set writerFeatures :=
     // readerFeatures and hardcoded legacy v2) silently downgraded tables
     // with writer-only requirements once the JSON prefix aged out
-    val protoLine = {
-      val rf = if (st.minReader >= 3)
-        s""","readerFeatures":${st.readerFeatures.toSeq.sorted.map(jsonString).mkString("[", ",", "]")}"""
-      else ""
-      val wf = if (st.minWriter >= 7)
-        s""","writerFeatures":${st.writerFeatures.toSeq.sorted.map(jsonString).mkString("[", ",", "]")}"""
-      else ""
-      s"""{"protocol":{"minReaderVersion":${st.minReader},"minWriterVersion":${st.minWriter}$rf$wf}}"""
-    }
-    val lines =
-      Seq(protoLine,
-        s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
-          s""""format":{"provider":"parquet","options":{}},""" +
-          s""""schemaString":${jsonString(st.schemaJson)},""" +
-          s""""partitionColumns":${st.partitionCols.map(jsonString).mkString("[", ",", "]")},""" +
-          s""""configuration":${jsonMap(st.configuration)}}}""") ++
+    val protocol = Protocol(st.minReader, st.minWriter,
+      if (st.minReader >= 3) Some(st.readerFeatures.toSeq.sorted) else None,
+      if (st.minWriter >= 7) Some(st.writerFeatures.toSeq.sorted) else None)
+    val actions = SingleAction(protocol = protocol) +:
+      SingleAction(metaData = Metadata(schemaString = st.schemaJson,
+        partitionColumns = st.partitionCols, configuration = st.configuration)) +:
       st.active.toSeq.map { case (p, e) =>
-        val dv = if (e.dvJson == null) "" else s""","deletionVector":${e.dvJson}"""
-        s"""{"add":{"path":${jsonString(p)},"partitionValues":${jsonMap(e.pv)},"size":0,""" +
-          s""""modificationTime":0,"dataChange":false$dv}}"""
+        SingleAction(add = Add(p, e.pv, e.size, e.modificationTime, dataChange = false,
+          e.stats, e.dv))
       }
-    import spark.implicits._
     val tmp = Files.createTempDirectory("graft_delta_cp").toFile
     try {
-      spark.read.json(lines.toDS).coalesce(1)
+      spark.createDataset(actions)(DeltaActions.encoder).coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(tmp.getAbsolutePath)
       val part = Option(tmp.listFiles()).getOrElse(Array.empty)
         .find(_.getName.endsWith(".parquet")).get
@@ -640,7 +572,7 @@ object DeltaWrite {
         StandardCopyOption.REPLACE_EXISTING)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
     Files.write(new File(logDir, "_last_checkpoint").toPath,
-      s"""{"version":${st.version},"size":${lines.size}}\n""".getBytes("UTF-8"))
+      (DeltaActions.json(LastCheckpoint(st.version, actions.size)) + "\n").getBytes("UTF-8"))
     st.version
   }
 
@@ -663,13 +595,7 @@ object DeltaWrite {
     DeltaRead.checkProtocol(st, path)
     checkWriteProtocol(st, path, appendOnlyOp = true, metadataOnly = true)
     val table = new File(path)
-    val activeAbs = st.active.keys.map { p =>
-      // percent-decode only: URLDecoder's '+'→space rule would corrupt a
-      // literal '+' in a path (percent-encoding never emits '+')
-      val decoded = java.net.URLDecoder.decode(p.replace("+", "%2B"), "UTF-8")
-      val f = if (decoded.startsWith("/")) new File(decoded) else new File(table, decoded)
-      f.getCanonicalPath
-    }.toSet
+    val activeAbs = st.active.keys.map(p => new File(resolveAbs(table, p)).getCanonicalPath).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     val logCanon = new File(table, "_delta_log").getCanonicalPath
     def walk(dir: File): Seq[File] =
@@ -682,10 +608,7 @@ object DeltaWrite {
     // update/compact that purged descriptors leaves orphaned .bin files
     // for vacuum to reap, same as data files
     val activeDvAbs: Set[String] = st.active.values.flatMap { e =>
-      Option(e.dvJson).flatMap { j =>
-        DeletionVectors.sidecarFile(DeltaRead.parseDvDescriptor(j), table)
-          .map(_.getCanonicalPath)
-      }
+      e.dv.flatMap(DeletionVectors.sidecarFile(_, table)).map(_.getCanonicalPath)
     }.toSet
     val deleted = walk(table).filter { f =>
       val n = f.getName
@@ -796,30 +719,10 @@ object DeltaWrite {
       .build()
     val schemaOut = StructType(existing.fields.updated(idx,
       old.copy(dataType = newType, metadata = md)))
-    val now = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    // typeWidening is a reader+writer table feature: minReader 3 /
-    // minWriter 7, both feature lists carry it (plus every feature the
-    // prior protocol implied — feature lists are exhaustive)
-    val readerFeats = ((if (st.minReader >= 3) st.readerFeatures else Set.empty[String]) +
-      "typeWidening").toSeq.distinct.sorted
-    val writerFeats = ((if (st.minWriter >= 7) st.writerFeatures
-      else legacyWriterFeatures(st.minWriter)) ++ readerFeats + "typeWidening")
-      .toSeq.distinct.sorted
-    val upToDate = st.minReader >= 3 && st.minWriter >= 7 &&
-      st.readerFeatures.contains("typeWidening") &&
-      st.writerFeatures.contains("typeWidening")
-    if (!upToDate)
-      lines += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":${readerFeats.map(jsonString).mkString("[", ",", "]")},""" +
-        s""""writerFeatures":${writerFeats.map(jsonString).mkString("[", ",", "]")}}}"""
-    lines += s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
-      s""""format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":${jsonString(schemaOut.json)},""" +
-      s""""partitionColumns":${st.partitionCols.map(jsonString).mkString("[", ",", "]")},""" +
-      s""""configuration":${jsonMap(st.configuration)},"createdTime":$now}}"""
     publishCommit(new File(new File(path), "_delta_log"), st.version + 1,
-      lines.result(), path)
+      protocolWith(st, "typeWidening").map(p => SingleAction(protocol = p)).toSeq :+
+        newMetadata(st, schemaOut, st.configuration),
+      path)
     st.version + 1
   }
 
@@ -857,15 +760,35 @@ object DeltaWrite {
           evolveMapped(existing, StructType(existing.fields ++ cols), maxId0, path)
         (evolved, st.configuration + ("delta.columnMapping.maxColumnId" -> maxId.toString))
       }
-    val now = System.currentTimeMillis()
-    val line = s"""{"metaData":{"id":${jsonString(java.util.UUID.randomUUID().toString)},""" +
-      s""""format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":${jsonString(schemaOut.json)},""" +
-      s""""partitionColumns":${st.partitionCols.map(jsonString).mkString("[", ",", "]")},""" +
-      s""""configuration":${jsonMap(confOut)},"createdTime":$now}}"""
-    publishCommit(new File(new File(path), "_delta_log"), st.version + 1, Seq(line), path)
+    publishCommit(new File(new File(path), "_delta_log"), st.version + 1,
+      Seq(newMetadata(st, schemaOut, confOut)), path)
     st.version + 1
   }
+
+  /** The metaData action of a schema-evolving commit (the table keeps its
+    * partitioning). */
+  private def newMetadata(st: DeltaRead.LogState, schema: StructType,
+      conf: Map[String, String]): SingleAction =
+    SingleAction(metaData = Metadata(schemaString = schema.json,
+      partitionColumns = st.partitionCols, configuration = conf,
+      createdTime = Some(System.currentTimeMillis())))
+
+  /** The protocol action a commit adding the reader+writer table feature
+    * `feature` must carry: (3,7) listing the prior reader features (plus
+    * `columnMapping` on a mapped table) and the prior writer requirements
+    * — a legacy minWriterVersion's implied set, since v7 lists every
+    * feature — each plus `feature`, so an upgrade never drops an
+    * enforcement. None when both lists already hold `feature`. */
+  private[graft] def protocolWith(st: DeltaRead.LogState, feature: String): Option[Protocol] =
+    if (st.minReader >= 3 && st.minWriter >= 7 &&
+        st.readerFeatures(feature) && st.writerFeatures(feature)) None
+    else {
+      val reader = (if (st.minReader >= 3) st.readerFeatures else Set.empty[String]) +
+        feature ++ (if (DeltaRead.columnMapped(st)) Set("columnMapping") else Set.empty)
+      val writer = reader ++
+        (if (st.minWriter >= 7) st.writerFeatures else legacyWriterFeatures(st.minWriter))
+      Some(Protocol(3, 7, Some(reader.toSeq.sorted), Some(writer.toSeq.sorted)))
+    }
 
   /** Merge a column-mapped table's existing mapped schema with an
     * incoming logical schema (round 11 — the evolution delta-spark
@@ -892,7 +815,7 @@ object DeltaWrite {
       case _ => 0L
     }
     var maxId = math.max(maxId0, maxIdIn(existing))
-    def fresh(): Metadata = {
+    def fresh(): org.apache.spark.sql.types.Metadata = {
       maxId += 1
       new MetadataBuilder()
         .putLong("delta.columnMapping.id", maxId)
@@ -941,12 +864,6 @@ object DeltaWrite {
     (walk(existing, incoming, ""), maxId)
   }
 
-  /** A string map (`configuration`, `partitionValues`) → a JSON object
-    * with sorted keys; null values stay JSON null. */
-  private def jsonMap(m: Map[String, String]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) =>
-      s"${jsonString(k)}:${if (v == null) "null" else jsonString(v)}" }.mkString("{", ",", "}")
-
   /** Rename a LOGICAL-named frame to the table's PHYSICAL column names at
     * every nesting level (round 10 — the write half of column mapping)
     * and attach each field's `parquet.field.id` from its
@@ -988,10 +905,10 @@ object DeltaWrite {
   /** Stage `df` as parquet parts and move them into the table directory
     * under commit-unique names — hive-style `col=value` dirs when
     * partitioned (partition columns EXCLUDED from the files, the Delta
-    * layout), each part returned as (relative path, partitionValues,
-    * size). The staging dir is removed afterwards. */
+    * layout), each part returned as its add action (`dataChange` true).
+    * The staging dir is removed afterwards. */
   private def writeParts(df: DataFrame, table: File,
-      partitionBy: Seq[String]): Seq[(String, Map[String, String], Long)] = fieldIdLock.synchronized {
+      partitionBy: Seq[String]): Seq[Add] = fieldIdLock.synchronized {
     val tmp = Files.createTempDirectory("graft_delta_write").toFile
     // parquet field ids (column-mapping writes attach them as
     // parquet.field.id metadata) must actually land in the footers —
@@ -1008,6 +925,7 @@ object DeltaWrite {
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(tmp.getAbsolutePath)
       val commitUuid = java.util.UUID.randomUUID().toString
+      val now = System.currentTimeMillis()
       def walk(dir: File, rel: Seq[String]): Seq[(File, Seq[String])] =
         Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap { f =>
           if (f.isDirectory) walk(f, rel :+ f.getName)
@@ -1028,7 +946,8 @@ object DeltaWrite {
             seg.substring(0, eq) ->
               (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
           }.toMap
-          ((rel :+ name).mkString("/"), pv, dest.length())
+          Add(encodePath((rel :+ name).mkString("/")), pv, dest.length(), now,
+            dataChange = true)
         }
     } finally {
       org.apache.commons.io.FileUtils.deleteQuietly(tmp)
@@ -1140,7 +1059,12 @@ object DeltaWrite {
     * storage-agnostic. */
   @volatile var logStore: DeltaLogStore = HardLinkLogStore
 
-  private def publishCommit(logDir: File, version: Long, lines: Seq[String],
+  private def publishCommit(logDir: File, version: Long, actions: Seq[SingleAction],
       path: String): Unit =
-    logStore.publish(logDir, version, lines, path)
+    logStore.publish(logDir, version, actions.map(DeltaActions.json), path)
+
+  private def removes(paths: Seq[String], dataChange: Boolean): Seq[SingleAction] = {
+    val now = System.currentTimeMillis()
+    paths.map(p => SingleAction(remove = Remove(p, now, dataChange)))
+  }
 }

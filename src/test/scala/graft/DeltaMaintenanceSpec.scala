@@ -66,7 +66,7 @@ class DeltaMaintenanceSpec extends SparkSpec {
     assert(got(3L) == 0L && got(5L) == 0L && got(6L) == 60L)
     // the rewrite purged the DV: the touched file's add carries none
     val st = DeltaRead.currentState(spark, path).get
-    assert(st.active.values.forall(_.dvJson == null), "DV should be purged by rewrite")
+    assert(st.active.values.forall(_.dv.isEmpty), "DV should be purged by rewrite")
   }
 
   test("updateWhere can move rows between partitions") {
@@ -111,7 +111,7 @@ class DeltaMaintenanceSpec extends SparkSpec {
     val st = DeltaRead.currentState(spark, path).get
     assert(st.version == v)
     assert(st.active.size == 1, s"expected one packed file, got ${st.active.size}")
-    assert(st.active.values.forall(_.dvJson == null), "compaction must purge DVs")
+    assert(st.active.values.forall(_.dv.isEmpty), "compaction must purge DVs")
     val got = DeltaRead.readDelta(spark, path).as[Long].collect().toSet
     assert(got == (0L until 20L).filter(_ % 5 != 0).toSet)
     // physically dropped: the packed file itself contains no dead rows
@@ -745,5 +745,79 @@ class DeltaMaintenanceSpec extends SparkSpec {
       org.apache.spark.sql.SaveMode.Append)
     assert(DeltaRead.readDelta(spark, dir).as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b")))
+  }
+
+  /** A one-file table (k INT, tag STRING) holding (1, a) and (2, b):
+    * `fresh` at protocol (1,2), `mapped` a name-mode column-mapped table
+    * at (2,5), `listed` at (3,7) with deletionVectors and typeWidening on
+    * both feature lists. */
+  private def protocolTable(kind: String): String = {
+    import org.apache.spark.sql.types._
+    val dir = tmpTable("graft_proto_" + kind)
+    val log = new File(dir, "_delta_log")
+    if (kind != "mapped") {
+      DeltaWrite.toDelta(Seq((1, "a"), (2, "b")).toDF("k", "tag").coalesce(1), dir)
+      if (kind == "listed")
+        Files.write(new File(log, f"${1L}%020d.json").toPath,
+          ("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+            """"readerFeatures":["deletionVectors","typeWidening"],""" +
+            """"writerFeatures":["deletionVectors","typeWidening"]}}""").getBytes("UTF-8"))
+    } else {
+      Seq((1, "a"), (2, "b")).toDF("p-k", "p-tag").coalesce(1).write.parquet(dir + "/stage")
+      val part = new File(dir + "/stage").listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, new File(dir, "part-1.parquet").toPath)
+      def fm(id: Long, phys: String) = new MetadataBuilder()
+        .putLong("delta.columnMapping.id", id)
+        .putString("delta.columnMapping.physicalName", phys).build()
+      val logical = StructType(Seq(StructField("k", IntegerType, nullable = true, fm(1, "p-k")),
+        StructField("tag", StringType, nullable = true, fm(2, "p-tag"))))
+      val schemaJson = logical.json.replace("\\", "\\\\").replace("\"", "\\\"")
+      log.mkdirs()
+      Files.write(new File(log, f"${0L}%020d.json").toPath,
+        (Seq("""{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
+          s"""{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},""" +
+            s""""schemaString":"$schemaJson","partitionColumns":[],""" +
+            s""""configuration":{"delta.columnMapping.mode":"name",""" +
+            s""""delta.columnMapping.maxColumnId":"2"}}}""",
+          """{"add":{"path":"part-1.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""
+        ).mkString("\n") + "\n").getBytes("UTF-8"))
+    }
+    dir
+  }
+
+  test("deleteWhere and widenColumn upgrade the protocol through one rule") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.LongType
+    import org.json4s.jackson.JsonMethods.parse
+    import graft.sources.DeltaActions
+    val legacy5 = """"appendOnly","changeDataFeed","checkConstraints","columnMapping",""" +
+      """"generatedColumns","invariants""""
+    def protocol(reader: String, writer: String) = Some(
+      s"""{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":[$reader],"writerFeatures":[$writer]}""")
+    val cases = Seq(
+      ("fresh", "deletionVectors", protocol(""""deletionVectors"""",
+        """"appendOnly","deletionVectors","invariants"""")),
+      ("fresh", "typeWidening", protocol(""""typeWidening"""",
+        """"appendOnly","invariants","typeWidening"""")),
+      ("mapped", "deletionVectors", protocol(""""columnMapping","deletionVectors"""",
+        legacy5.replace(""""generatedColumns"""", """"deletionVectors","generatedColumns""""))),
+      // a reader-v3 protocol lists columnMapping while the table is mapped
+      ("mapped", "typeWidening", protocol(""""columnMapping","typeWidening"""",
+        legacy5 + ""","typeWidening"""")),
+      ("listed", "deletionVectors", None),
+      ("listed", "typeWidening", None))
+    for ((kind, feature, expected) <- cases) {
+      val path = protocolTable(kind)
+      val st = DeltaRead.currentState(spark, path).get
+      assert(DeltaWrite.protocolWith(st, feature).map(p => parse(DeltaActions.json(p))) ==
+        expected.map(parse(_)), s"$kind/$feature")
+      val v =
+        if (feature == "deletionVectors") DeltaWrite.deleteWhere(spark, path, col("k") === 1)
+        else DeltaWrite.widenColumn(spark, path, "k", LongType)
+      assert(v == st.version + 1)
+      val committed = Files.readAllLines(new File(path, f"_delta_log/$v%020d.json").toPath)
+        .asScala.toSeq.map(l => parse(l) \ "protocol").filter(_ != org.json4s.JNothing)
+      assert(committed == expected.map(parse(_)).toSeq, s"$kind/$feature")
+    }
   }
 }

@@ -441,6 +441,15 @@ class DeltaReadSpec extends SparkSpec {
     assert(got2 == Set((0L, "a"), (2L, "c"), (4L, "e"), (11L, "y")))
     // time travel to v0 still sees part-2 complete
     assert(DeltaRead.readDelta(spark, table.getAbsolutePath, Some(0L)).count() == 5)
+    // a descriptor without its storage type, payload or size is refused
+    for (field <- Seq("storageType", "pathOrInlineDv", "sizeInBytes")) {
+      val dv = Seq(""""storageType":"i"""", s""""pathOrInlineDv":"$inline"""",
+        s""""sizeInBytes":${inlineBytes.length}""").filterNot(_.contains(s""""$field""""))
+      writeCommit(table, 2L, Seq(
+        s"""{"add":{"path":"part-2.parquet","partitionValues":{},"size":1,"modificationTime":2,"dataChange":true,"deletionVector":{${dv.mkString(",")}}}}"""))
+      val e = intercept[IllegalArgumentException](DeltaRead.readDelta(spark, table.getAbsolutePath))
+      assert(e.getMessage.contains(s"missing '$field'"), e.getMessage)
+    }
   }
 
   test("deleteWhere writes DVs: no rewrite, merge on second delete, checkpoint keeps them") {
@@ -631,7 +640,7 @@ class DeltaReadSpec extends SparkSpec {
     assert(st.configuration == Map("k" -> "v0"))
     assert(st.version == (nCommits - 1).toLong)
     // the DV-update winner is the LATEST re-add's descriptor
-    assert(st.active("f_0_0").dvJson.contains(s"dv${nCommits - 1}"))
+    assert(st.active("f_0_0").dv.map(_.pathOrInlineDv).contains(s"dv${nCommits - 1}"))
     assert(st.active("f_0_0").pv == Map("p" -> "0"))
     org.apache.commons.io.FileUtils.deleteDirectory(table)
   }
@@ -669,19 +678,98 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("partition values with control characters, quotes and backslashes round-trip") {
+    import org.apache.spark.sql.SaveMode
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
+    import graft.sources.DeltaWrite
     val table = Files.createTempDirectory("graft_delta_ctl").toFile
+    val path = table.getAbsolutePath
     val langs = Seq("en", "a\nb", "t\tx", "c\u0001d", "q\"x", "b\\s")
     val df = langs.zipWithIndex.map { case (l, i) => (i.toLong, l) }.toDF("id", "lang")
-    graft.api.Table(df).toDelta(table.getAbsolutePath, partitionBy = Seq("lang"))
-    assert(DeltaRead.readDelta(spark, table.getAbsolutePath)
+    graft.api.Table(df).toDelta(path, partitionBy = Seq("lang"))
+    assert(DeltaRead.readDelta(spark, path)
       .select("id", "lang").as[(Long, String)].collect().toSet ==
       langs.zipWithIndex.map { case (l, i) => (i.toLong, l) }.toSet)
-    // every commit line is exactly one JSON object
+    // every commit-writing verb on the same table: the hive-escaped
+    // t%09x directory gets a second, two-row file (a DV target), then
+    // each verb commits once
+    DeltaWrite.toDelta(Seq((10L, "t\tx"), (11L, "t\tx")).toDF("id", "lang").coalesce(1), path,
+      SaveMode.Append, Seq("lang"))
+    DeltaWrite.addColumns(spark, path, Seq(StructField("n", IntegerType)))
+    DeltaWrite.widenColumn(spark, path, "n", LongType)
+    DeltaWrite.deleteWhere(spark, path, col("id") === 10L)
+    assert(DeltaRead.readDelta(spark, path).filter(col("lang") === "t\tx").select("id")
+      .as[Long].collect().toSet == Set(2L, 11L))
+    DeltaWrite.updateWhere(spark, path, col("id") === 2L, Map("n" -> lit(5L)))
+    DeltaWrite.merge(spark, path, Seq((3L, 7L)).toDF("id", "n"), col("t.id") === col("s.id"),
+      whenMatchedUpdate = Some(Map("n" -> col("s.n"))))
+    assert(DeltaWrite.compact(spark, path) == 7L)
+    assert(DeltaRead.readDelta(spark, path).select("id", "n").as[(Long, Option[Long])]
+      .collect().toMap == (0L to 5L).map(i => i -> None).toMap ++
+        Map(2L -> Some(5L), 3L -> Some(7L), 11L -> None))
+    // every commit line is exactly one JSON object holding one action
     val commits = new File(table, "_delta_log").listFiles().filter(_.getName.endsWith(".json"))
-    assert(commits.nonEmpty)
+    assert(commits.length == 8)
     for (f <- commits; line <- new String(Files.readAllBytes(f.toPath), "UTF-8").split("\n")) {
-      assert(org.json4s.jackson.JsonMethods.parseOpt(line)
-        .exists(_.isInstanceOf[org.json4s.JObject]), s"not one JSON object: $line")
+      org.json4s.jackson.JsonMethods.parseOpt(line) match {
+        case Some(org.json4s.JObject(List((key, _: org.json4s.JObject)))) =>
+          assert(Set("add", "remove", "metaData", "protocol")(key), line)
+        case _ => fail(s"not one JSON object holding one action: $line")
+      }
     }
+    // map entries in key order with null values kept; absent options omitted
+    import graft.sources.DeltaActions.{Add, SingleAction}
+    val pv = Map("e" -> "5", "b" -> null, "d" -> "4", "a" -> "1", "c" -> "3")
+    assert(graft.sources.DeltaActions.json(SingleAction(add = Add("p", pv, 1L, 2L, true))) ==
+      """{"add":{"path":"p","partitionValues":{"a":"1","b":null,"c":"3","d":"4","e":"5"},""" +
+        """"size":1,"modificationTime":2,"dataChange":true}}""")
+  }
+
+  test("checkpoint parquet has the protocol's checkpoint schema and true file sizes") {
+    import org.apache.spark.sql.types.{IntegerType, MapType, StringType, StructType}
+    import graft.sources.DeltaWrite
+    val path = Files.createTempDirectory("graft_delta_cps").toFile.getAbsolutePath
+    DeltaWrite.toDelta(Seq((1L, "en"), (2L, "en")).toDF("id", "lang").coalesce(1), path,
+      partitionBy = Seq("lang"))
+    DeltaWrite.deleteWhere(spark, path, col("id") === 1L)
+    val v = DeltaWrite.checkpoint(spark, path)
+    val cp = spark.read.parquet(new File(path, f"_delta_log/$v%020d.checkpoint.parquet").getPath)
+    def structOf(t: StructType, f: String) = t(f).dataType.asInstanceOf[StructType]
+    val add = structOf(cp.schema, "add")
+    assert(add("partitionValues").dataType == MapType(StringType, StringType))
+    assert(add("deletionVector").dataType.isInstanceOf[StructType])
+    val meta = structOf(cp.schema, "metaData")
+    assert(meta("configuration").dataType.isInstanceOf[MapType])
+    assert(structOf(meta, "format")("options").dataType.isInstanceOf[MapType])
+    assert(structOf(cp.schema, "protocol")("minReaderVersion").dataType == IntegerType)
+    val adds = cp.filter(col("add").isNotNull)
+      .select("add.path", "add.size", "add.partitionValues", "add.deletionVector.cardinality")
+      .collect()
+    assert(adds.length == 1)
+    val size = new File(path, adds.head.getString(0)).length()
+    assert(size > 0 && adds.head.getLong(1) == size)
+    assert(adds.head.getMap[String, String](2) == Map("lang" -> "en"))
+    assert(adds.head.getLong(3) == 1L)
+    val conf = cp.filter(col("metaData").isNotNull)
+      .select("metaData.configuration", "metaData.format.options").head()
+    assert(conf.getMap[String, String](0).isEmpty && conf.getMap[String, String](1).isEmpty)
+    assert(DeltaRead.readDelta(spark, path).select("id").as[Long].collect().toSeq == Seq(2L))
+  }
+
+  test("an add's stats, size and modification time survive a checkpoint") {
+    import graft.sources.DeltaWrite
+    val table = Files.createTempDirectory("graft_delta_stats").toFile
+    val schemaJson = Seq((1L, "a")).toDF("id", "s").schema.json.replace("\"", "\\\"")
+    writePart(table, "part-1.parquet", Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
+    val size = new File(table, "part-1.parquet").length()
+    writeCommit(table, 0L, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"metaData":{"id":"t","format":{"provider":"parquet","options":{}},"schemaString":"$schemaJson","partitionColumns":[],"configuration":{}}}""",
+      s"""{"add":{"path":"part-1.parquet","partitionValues":{},"size":$size,"modificationTime":7,"dataChange":true,"stats":"{\\"numRecords\\":2}"}}"""))
+    DeltaWrite.checkpoint(spark, table.getAbsolutePath)
+    new File(table, f"_delta_log/${0L}%020d.json").delete()
+    val st = DeltaRead.currentState(spark, table.getAbsolutePath).get
+    assert(st.active.toMap == Map("part-1.parquet" ->
+      DeltaRead.AddEntry(Map.empty, size, 7L, Some("""{"numRecords":2}"""), None)))
+    assert(DeltaRead.readDelta(spark, table.getAbsolutePath).count() == 2)
   }
 }

@@ -192,10 +192,11 @@ class ProjEngineSpec extends SparkSpec {
   }
 
   test("projected inverses wrap longitude into [-180, 180] like PROJ's adjlon") {
-    // (60°E, 10°N) lies 237° west of UTM 1N's central meridian, so the
-    // unwrapped Krüger inverse of its forward image is -300°; that far
-    // out the series keeps only ~1e-8° of accuracy
-    val (x, y) = fwd("EPSG:32601")(60.0, 10.0)
+    // the unwrapped Krüger forward image of (60°E, 10°N), 237° west of
+    // UTM 1N's central meridian (outside the forward's domain, so the
+    // forward itself refuses it); its unwrapped inverse is -300°, and
+    // that far out the series keeps only ~1e-8° of accuracy
+    val (x, y) = (-7005932.968460759, 1.7998842724921867e7)
     val (lon, lat) = inv("EPSG:32601")(x, y)
     assert(math.abs(lon - 60.0) < 1e-6 && math.abs(lat - 10.0) < 1e-6, s"($lon, $lat)")
     // an in-zone longitude passes through unchanged

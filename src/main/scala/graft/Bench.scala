@@ -25,17 +25,21 @@ import org.apache.spark.sql.functions._
   * (d) the bucketed-layout warehouse ingest runs UNTIMED before the
   * controls (the r13 driver timed a full sf10 ingest inside the q202b
   * control window: 188.7s recorded for a ~12s query). */
-/** The bench sessions' plan-shape SQLConfs, factored out so the
-  * conf-regression guard (verdict r14 #3: Verify opt-in via
-  * SPARK_GRAFT_BENCH_CONFS=1) sweeps EXACTLY the set the bench adopts —
-  * the round-14 lesson was a fast-map conf that won its A/B on the
-  * headline queries while thrashing a non-headline bucketed twin, and
+/** The session confs graft's benches adopt (Bench, the Verify sweep and
+  * perfbench, which builds its own session from [[BenchConfs.planConfs]]),
+  * factored out so the conf-regression guard (verdict r14 #3: Verify
+  * opt-in via SPARK_GRAFT_BENCH_CONFS=1) sweeps EXACTLY the set the bench
+  * adopts — the round-14 lesson was a fast-map conf that won its A/B on
+  * the headline queries while thrashing a non-headline bucketed twin, and
   * nothing ran the wide corpus under the new confs before a human did.
-  * The codegen cache capacity is a static conf, so every session takes
-  * these at build time; the rationale for each lives in [[Bench.profile]]. */
+  * Most are plan-shape confs; two come from [[Sessions]]: the codegen
+  * cache capacity, a static conf, so every session takes these at build
+  * time, and the checkpoint file manager of streaming queries. The
+  * rationale for each plan conf lives in [[Bench.profile]]. */
 object BenchConfs {
   val planConfs: Seq[(String, String)] = Seq(
     Sessions.codegenCache,
+    Sessions.checkpointFiles,
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.join.preferSortMergeJoin" -> "false",
     "spark.sql.adaptive.shuffledHashJoinLocalMapThreshold" -> "512m",
@@ -149,6 +153,9 @@ object Bench {
       //   evicted and recompiled ~310 classes. At 1024 a warm sf0.1 round
       //   compiles ≤10 (512 and 4096 too); peak RSS is unchanged at all
       //   three.
+      // - streaming.checkpointFileManagerClass (Sessions.checkpointFiles):
+      //   a local checkpoint file's mode is set by a syscall, not by a
+      //   forked chmod per file; no batch query writes a checkpoint.
       // - adaptive.enabled: AQE re-plans skew/oversized partitions.
       // - preferSortMergeJoin=false: shuffled-hash over sort-merge for the
       //   big equi-joins — when the smaller side's per-partition share

@@ -21,8 +21,10 @@ object DeltaActions {
 
   case class Format(provider: String = "parquet", options: Map[String, String] = Map.empty)
 
-  /** Fields in the protocol's order; build it with named arguments. */
-  case class Metadata(id: String = java.util.UUID.randomUUID().toString,
+  /** Fields in the protocol's order; build it with named arguments.
+    * `id` is the table's identifier: the creating commit mints it and
+    * every later metaData action carries it ([[DeltaWrite]]). */
+  case class Metadata(id: String,
       format: Format = Format(), schemaString: String, partitionColumns: Seq[String],
       configuration: Map[String, String], createdTime: Option[Long] = None)
 

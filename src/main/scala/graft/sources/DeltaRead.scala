@@ -72,6 +72,7 @@ object DeltaRead {
     var minWriter: Int = 1,
     var readerFeatures: Set[String] = Set.empty,
     var writerFeatures: Set[String] = Set.empty,
+    var tableId: String = null,
     var schemaJson: String = null,
     var partitionCols: Seq[String] = Seq.empty,
     var configuration: Map[String, String] = Map.empty,
@@ -368,6 +369,7 @@ object DeltaRead {
           at("minWriter").foreach(i => st.minWriter = r.getInt(i))
           at("readerFeatures").foreach(i => st.readerFeatures = r.getSeq[String](i).toSet)
           at("writerFeatures").foreach(i => st.writerFeatures = r.getSeq[String](i).toSet)
+          at("tableId").foreach(i => st.tableId = r.getString(i))
           at("schema").foreach(i => st.schemaJson = r.getString(i))
           at("partitionCols").foreach(i => st.partitionCols = r.getSeq[String](i))
           at("conf").foreach(i => st.configuration = strMap(i))
@@ -417,6 +419,7 @@ object DeltaRead {
       get("protocol.minWriterVersion", IntegerType).as("minWriter"),
       get("protocol.readerFeatures", ArrayType(StringType)).as("readerFeatures"),
       get("protocol.writerFeatures", ArrayType(StringType)).as("writerFeatures"),
+      get("metaData.id", StringType).as("tableId"),
       get("metaData.schemaString", StringType).as("schema"),
       get("metaData.partitionColumns", ArrayType(StringType)).as("partitionCols"),
       get("metaData.configuration", strMap).as("conf"))

@@ -135,7 +135,8 @@ object DeltaWrite {
     val added = writeParts(outDf, table, layoutParts)
 
     val protocol = if (prior.isEmpty) Some(Protocol(1, 2)) else None
-    val meta = if (!needMeta) None else Some(Metadata(schemaString = schemaJsonOut,
+    val meta = if (!needMeta) None else Some(Metadata(id = tableId(prior),
+      schemaString = schemaJsonOut,
       partitionColumns = partitionBy, configuration = confOut,
       createdTime = Some(System.currentTimeMillis())))
     publishCommit(logDir, version,
@@ -555,7 +556,7 @@ object DeltaWrite {
       if (st.minReader >= 3) Some(st.readerFeatures.toSeq.sorted) else None,
       if (st.minWriter >= 7) Some(st.writerFeatures.toSeq.sorted) else None)
     val actions = SingleAction(protocol = protocol) +:
-      SingleAction(metaData = Metadata(schemaString = st.schemaJson,
+      SingleAction(metaData = Metadata(id = tableId(Some(st)), schemaString = st.schemaJson,
         partitionColumns = st.partitionCols, configuration = st.configuration)) +:
       st.active.toSeq.map { case (p, e) =>
         SingleAction(add = Add(p, e.pv, e.size, e.modificationTime, dataChange = false,
@@ -765,11 +766,16 @@ object DeltaWrite {
     st.version + 1
   }
 
+  /** The id every metaData action of the table carries: the replayed one,
+    * minted only for a new table (or a foreign log that lacks it). */
+  private def tableId(st: Option[DeltaRead.LogState]): String =
+    st.flatMap(s => Option(s.tableId)).getOrElse(java.util.UUID.randomUUID().toString)
+
   /** The metaData action of a schema-evolving commit (the table keeps its
     * partitioning). */
   private def newMetadata(st: DeltaRead.LogState, schema: StructType,
       conf: Map[String, String]): SingleAction =
-    SingleAction(metaData = Metadata(schemaString = schema.json,
+    SingleAction(metaData = Metadata(id = tableId(Some(st)), schemaString = schema.json,
       partitionColumns = st.partitionCols, configuration = conf,
       createdTime = Some(System.currentTimeMillis())))
 

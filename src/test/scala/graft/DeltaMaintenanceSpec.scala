@@ -820,4 +820,30 @@ class DeltaMaintenanceSpec extends SparkSpec {
       assert(committed == expected.map(parse(_)).toSeq, s"$kind/$feature")
     }
   }
+
+  test("every metaData action of a table carries the id its creating commit minted") {
+    import org.apache.spark.sql.types._
+    import graft.sources.DeltaActions
+    def ids(path: String): Seq[String] = {
+      val log = new File(path, "_delta_log")
+      val commits = spark.read.schema(DeltaActions.schema).json(s"$log/*.json")
+      val checkpoint = spark.read.parquet(s"$log/*.checkpoint.parquet")
+      Seq(commits, checkpoint).flatMap(_.where(col("metaData").isNotNull)
+        .orderBy(input_file_name()).select("metaData.id").as[String].collect())
+    }
+    val path = tmpTable("graft_table_id")
+    DeltaWrite.toDelta(Seq((1, 10)).toDF("k", "v"), path)
+    DeltaWrite.addColumns(spark, path, Seq(StructField("note", StringType, nullable = true)))
+    DeltaWrite.widenColumn(spark, path, "v", LongType)
+    DeltaWrite.toDelta(Seq(("a", 2.5)).toDF("name", "x"), path)
+    DeltaWrite.checkpoint(spark, path)
+    val all = ids(path)
+    assert(all.size == 5 && all.distinct.size == 1 && all.head != null, all)
+    assert(DeltaRead.currentState(spark, path).get.tableId == all.head)
+
+    val other = tmpTable("graft_table_id_other")
+    DeltaWrite.toDelta(Seq((1, 10)).toDF("k", "v"), other)
+    DeltaWrite.checkpoint(spark, other)
+    assert(ids(other).distinct.size == 1 && ids(other).head != all.head)
+  }
 }
